@@ -95,6 +95,7 @@ def main(argv: list[str] | None = None) -> int:
         peak = rss.stop()
         shutil.rmtree(workdir, ignore_errors=True)
     print(f"peak memory MB by process: {rss.peak_split}", file=sys.stderr)
+    print(f"operation ms: {[round(ms, 1) for ms in result.op_ms]}", file=sys.stderr)
     for problem in result.problems[:20]:
         print(f"incorrect: {problem}", file=sys.stderr)
     line = report(result, bool(args.trace), peak)

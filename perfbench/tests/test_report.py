@@ -56,6 +56,7 @@ def test_per_layer_metrics_emitted_and_each_measured_somewhere(spark, small, tmp
     for workload in WORKLOADS:
         result, _ = _run(spark, tmp_path, workload, trace=True)
         assert result.spans and all(s["dur_ms"] >= 0 for s in result.spans)
-        measured |= set(result.layers)
-    # a per-layer metric no workload produces would always read 0
+        measured |= result.observed
+    # a per-layer metric no workload observes (a wrapper that never fires,
+    # a layer whose jobs are never seen) would always read its default 0
     assert {m["name"] for m in SPEC["per_layer"]} <= measured

@@ -155,24 +155,31 @@ class Tracer:
                 t["gc_s"] += sd.jvmGcTime() / 1e3
         return totals
 
-    def layer_metrics(self) -> dict[str, float]:
+    def layer_metrics(self) -> tuple[dict[str, float], set[str]]:
         """Busy seconds per layer span name and Spark totals per layer, each
         averaged over the traced operations (root spans), plus the counts
-        the workload set. Layers a workload never calls read 0."""
+        the workload set. Layers a workload never calls read 0, so the
+        names of the metrics backed by an observation (a span that ran, a
+        Spark stage a layer's jobs ran, a count that was set) come second."""
         n_ops = max(1, len(self.roots()))
         out = {metric: 0.0 for metric in SPAN_SECONDS.values()}
+        observed = set(self.counts)
         for s in self.spans:
             if s.name in SPAN_SECONDS:
                 out[SPAN_SECONDS[s.name]] += s.seconds / n_ops
+                observed.add(SPAN_SECONDS[s.name])
         totals = self.spark_layer_totals()
         for layer in SPARK_LAYERS:
             for key in ("shuffle_mb", "spill_mb", "gc_s"):
                 out[f"{layer}.{key}"] = totals.get(layer, {}).get(key, 0.0) / n_ops
-        out["lookup.input_mb"] = sum(
-            totals.get(layer, {}).get("input_mb", 0.0) for layer in ("request", "cache")
-        ) / n_ops
+                if layer in totals:
+                    observed.add(f"{layer}.{key}")
+        lookup_layers = [layer for layer in ("request", "cache") if layer in totals]
+        out["lookup.input_mb"] = sum(totals[layer]["input_mb"] for layer in lookup_layers) / n_ops
+        if lookup_layers:
+            observed.add("lookup.input_mb")
         out.update(self.counts)
-        return out
+        return out, observed
 
     def covered_seconds(self, root: Span) -> float:
         """Wall time inside ``root`` covered by at least one child span
@@ -246,9 +253,9 @@ def instrumented(tracer: Tracer):
     """Trace the layer calls made by ``Pipeline.run`` and by lookups through
     ``Catalog``/``QueryCache`` while the block runs."""
     import raptor_spark.cache as cache_mod
+    import raptor_spark.cc as cc_mod
     import raptor_spark.pipeline as pipeline_mod
     from raptor_spark.catalog import Catalog
-    from raptor_spark.cc import _driver_cc_edge_cap
     from raptor_spark.extract import PRED_ERROR
 
     def count_extract(df):
@@ -267,6 +274,7 @@ def instrumented(tracer: Tracer):
     def traced_cc(fn):
         @functools.wraps(fn)
         def inner(edges, *args, **kwargs):
+            driver_calls = tracer.counts.get("cc.driver_calls", 0.0)
             with tracer.span("cc"):
                 n_in = edges.count()
                 comps = fn(edges, *args, **kwargs).persist()
@@ -274,13 +282,17 @@ def instrumented(tracer: Tracer):
                     F.count("*"), F.max("count")
                 ).first()
             tracer.add("cc.edges_in", float(n_in))
-            # the symmetric edge set it sizes is exactly 2 × the a<b input
-            tracer.set("cc.driver_path", float(2 * n_in <= _driver_cc_edge_cap(edges.sparkSession)))
+            # the branch connected_components took, as observed by the
+            # _driver_union_find wrapper below
+            tracer.set("cc.driver_path", float(tracer.counts.get("cc.driver_calls", 0.0) > driver_calls))
             tracer.add("cc.components", float(n_comp or 0))
             tracer.set("cc.max_component", float(biggest or 0))
             return comps
 
         return inner
+
+    def count_driver_call(_result, _args):
+        tracer.add("cc.driver_calls", 1.0)
 
     def count_written(manifest, args):
         catalog, table = args[0], args[1]
@@ -308,6 +320,7 @@ def instrumented(tracer: Tracer):
         (pipeline_mod, "name_features", _materialized(tracer, "link.features", count_names)),
         (pipeline_mod, "link_edges", _materialized(tracer, "link.edges", count_link_edges)),
         (pipeline_mod, "connected_components", traced_cc),
+        (cc_mod, "_driver_union_find", _timed(tracer, "cc.driver", count_driver_call)),
         (pipeline_mod, "canonical_mapping", _materialized(tracer, "link.canon")),
         (pipeline_mod, "apply_linking", _materialized(tracer, "link.canon")),
         (pipeline_mod, "build_nodes", _materialized(tracer, "materialize.nodes")),
