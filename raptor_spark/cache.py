@@ -143,13 +143,13 @@ class QueryCache:
                 self.hits += 1
                 meta["hits"] = meta.get("hits", 0) + 1
                 self._write_meta(key, meta)
-                return self.spark.read.parquet(self._data(key))
+                return self.spark.read.schema(df.schema).parquet(self._data(key))
             self.misses += 1
             df.write.mode("overwrite").parquet(self._data(key))
             self._write_meta(
                 key, {"key": key, "committed_at": time.time(), "hits": 0}
             )
-            return self.spark.read.parquet(self._data(key))
+            return self.spark.read.schema(df.schema).parquet(self._data(key))
 
     def invalidate(
         self, df: DataFrame | None = None, extra: str | None = None
@@ -278,7 +278,9 @@ class SemanticQueryCache:
                 self.base.hits += 1
                 meta["hits"] = meta.get("hits", 0) + 1
                 self.base._write_meta(key, meta)
-                return self.base.spark.read.parquet(self.base._data(key))
+                return self.base.spark.read.schema(df.schema).parquet(
+                    self.base._data(key)
+                )
         match_key, cos = self._best_match(query_vec)
         if match_key is not None and cos >= self.similarity_threshold:
             with self.base._lock_for(match_key):

@@ -1,9 +1,9 @@
-"""Table IO behind one thin interface: Iceberg when available, parquet +
-manifest fallback otherwise (SURVEY.md §7.0 / §7.4 risk 4).
+"""Table IO behind one thin interface: parquet data dirs plus JSON commit
+manifests (SURVEY.md §7.0 / §7.4 risk 4).
 
-Iceberg gives commits / branches / time-travel natively (≙ the reference's
-lakeFS versioned asset store, raptor/asset_management/object_store.py:208-269);
-the fallback emulates the parts the pipeline needs:
+The manifests emulate the parts of a versioned table store (≙ the
+reference's lakeFS versioned asset store,
+raptor/asset_management/object_store.py:208-269) the pipeline needs:
 
 * atomic "commit" via a manifest JSON written last (write-then-commit, the
   lakeFS upload+commit returning (key, version_id, checksum));
@@ -13,8 +13,7 @@ the fallback emulates the parts the pipeline needs:
   version_id pinning, object_store.py:208-269, database.py:146-182);
 * keyed ``merge`` — idempotent upsert-by-key as copy-on-write into a new
   snapshot (≙ the reference's Qdrant insert keyed by id,
-  qdrant_search_docker/api_insert.py:88-171; Iceberg MERGE INTO when jars
-  are present).
+  qdrant_search_docker/api_insert.py:88-171).
 
 Retention is bounded (``keep_snapshots``) so re-running a pipeline does not
 grow the output dir without limit.
@@ -28,16 +27,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
+from pyspark.sql.types import StructType
 
 
 class Catalog:
@@ -48,12 +38,22 @@ class Catalog:
     atomically LAST so a crashed write never becomes current. A table
     'exists' iff ``manifest.json`` does. Legacy tables (bare ``data/`` dir,
     no snapshot_id) remain readable as snapshot 0.
+
+    Reads are pinned to the committed snapshot: ``read`` re-reads the
+    manifest on every call but returns the DataFrame this instance resolved
+    while the manifest names the same commit (``snapshot_id``,
+    ``append_seq``, ``committed_at``). The frame is built with the recorded
+    schema and keeps the file index it listed, so later reads infer no
+    schema and list nothing. ``append`` bumps ``append_seq``, so every
+    instance re-resolves an appended table.
     """
 
     def __init__(self, spark: SparkSession, root: str, keep_snapshots: int = 3):
         self.spark = spark
         self.root = root
         self.keep_snapshots = max(1, keep_snapshots)
+        # (table, snapshot_id) → (commit stamp, DataFrame); see ``read``
+        self._pinned: dict[tuple[str, int], tuple[tuple, DataFrame]] = {}
         os.makedirs(root, exist_ok=True)
 
     def _dir(self, table: str) -> str:
@@ -117,14 +117,18 @@ class Catalog:
             "schema": df.schema.json(),
             **(meta or {}),
         }
-        with open(self._manifest_path(table, sid), "w") as f:
-            json.dump(manifest, f)
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(table))
+        self._commit_manifest(table, manifest)
         self._prune(table, current=sid)
         return manifest
+
+    def _commit_manifest(self, table: str, manifest: dict) -> None:
+        """Swap in the snapshot's manifest, then the current pointer, each
+        by tmp + rename: a crash leaves the old file or the new, never a
+        torn one."""
+        for path in (self._manifest_path(table, manifest["snapshot_id"]), self._manifest_path(table)):
+            with open(path + ".tmp", "w") as f:
+                json.dump(manifest, f)
+            os.replace(path + ".tmp", path)
 
     def _prune(self, table: str, current: int) -> None:
         keep = {
@@ -139,31 +143,35 @@ class Catalog:
                     ignore_errors=True,
                 )
                 os.remove(self._manifest_path(table, sid))
+                self._pinned.pop((table, sid), None)
 
     def append(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
         """Append into the CURRENT snapshot in place (event-log tables like
         lineage — not a new commit; use ``write``/``merge`` for versioned
-        tables)."""
+        tables). The manifests are re-committed with ``append_seq`` bumped,
+        so readers pinned to the snapshot re-resolve it."""
         if self.exists(table):
-            data = self._data_dir(table)
+            prev = self.manifest(table)
+            manifest = {
+                **prev,
+                "snapshot_id": prev.get("snapshot_id", 0),
+                "append_seq": prev.get("append_seq", 0) + 1,
+            }
         else:
-            data = os.path.join(self._dir(table), "data-0")
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data)
-        if not self.exists(table):
-            os.makedirs(self._dir(table), exist_ok=True)
             manifest = {
                 "table": table,
                 "snapshot_id": 0,
                 "data_dir": "data-0",
                 "committed_at": time.time(),
             }
-            with open(self._manifest_path(table, 0), "w") as f:
-                json.dump(manifest, f)
-            with open(self._manifest_path(table), "w") as f:
-                json.dump(manifest, f)
+            # files of a crashed first append that never committed
+            shutil.rmtree(os.path.join(self._dir(table), "data-0"), ignore_errors=True)
+        data = os.path.join(self._dir(table), manifest.get("data_dir", "data"))
+        w = df.write.mode("append")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(data)
+        self._commit_manifest(table, manifest)
 
     def merge(
         self,
@@ -224,10 +232,22 @@ class Catalog:
         return sorted(out)
 
     def read(self, table: str, snapshot: int | None = None) -> DataFrame:
-        """Current table, or a retained snapshot pinned by id (time travel)."""
+        """Current table, or a retained snapshot pinned by id (time travel).
+        Returns the frame this instance resolved for the commit the manifest
+        names, resolving it on first use (see the class docstring)."""
         if not self.exists(table):
             raise FileNotFoundError(f"table not committed: {table}")
-        return self.spark.read.parquet(self._data_dir(table, snapshot))
+        m = self.manifest(table, snapshot)
+        key = (table, m.get("snapshot_id", 0))
+        stamp = (m.get("append_seq", 0), m.get("committed_at"))
+        pinned = self._pinned.get(key)
+        if pinned is None or pinned[0] != stamp:
+            reader = self.spark.read
+            if "schema" in m:
+                reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
+            df = reader.parquet(os.path.join(self._dir(table), m.get("data_dir", "data")))
+            pinned = self._pinned[key] = (stamp, df)
+        return pinned[1]
 
     def drop(self, table: str) -> None:
         d = self._dir(table)

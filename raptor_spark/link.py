@@ -95,11 +95,11 @@ def name_features(triples: DataFrame) -> DataFrame:
     One groupBy shuffle on the name dimension replaces the old
     distinct → groupBy → distinct chain (three shuffles), and the
     head-threshold denominator (count of distinct repos with ≥1 defined
-    name) is a one-row aggregate broadcast back in — lazy, instead of the
-    eager driver ``count()`` the old ``head_names`` paid before any linking
-    work could start. The pipeline computes this once, persists it, and
-    threads it through both consumers; previously each recomputed the name
-    distinct and the featurize pass from the triple table.
+    name) is a one-row aggregate broadcast back in — lazy, instead of an
+    eager driver ``count()`` before any linking work could start. The
+    pipeline computes this once, persists it, and threads it through both
+    consumers; previously each recomputed the name distinct and the
+    featurize pass from the triple table.
     """
     names_repo = triples.filter(F.col("pred") == PRED_DEFINES).select(
         F.split(F.col("obj"), "@").getItem(0).alias("name"),
@@ -116,30 +116,6 @@ def name_features(triples: DataFrame) -> DataFrame:
         ).alias("is_head"),
     )
     return flagged.mapInPandas(_featurize, schema=_NAME_FEATURES_SCHEMA)
-
-
-def defined_names(triples: DataFrame) -> DataFrame:
-    """Distinct defined symbol names with per-repo document frequency."""
-    return (
-        triples.filter(F.col("pred") == PRED_DEFINES)
-        .select(
-            F.split(F.col("obj"), "@").getItem(0).alias("name"),
-            F.col("repo"),
-        )
-        .distinct()
-    )
-
-
-def head_names(names_with_repo: DataFrame) -> DataFrame:
-    """Names defined in more than HEAD_SYMBOL_MAX_DF of all repos — the skew
-    heads (``main``, ``utils``, ``init``) called out by the north rule."""
-    total = names_with_repo.select("repo").distinct().count()
-    return (
-        names_with_repo.groupBy("name")
-        .agg(F.countDistinct("repo").alias("df_repos"))
-        .filter(F.col("df_repos") > HEAD_SYMBOL_MAX_DF * total)
-        .select("name")
-    )
 
 
 def link_edges(triples: DataFrame, feats: DataFrame | None = None) -> DataFrame:

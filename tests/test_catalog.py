@@ -5,13 +5,33 @@ api_insert.py:88-171)."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import json
+import os
+import types
+import uuid
 
+import pyspark.sql.functions as F
+import pytest
+
+import raptor_spark.catalog as catalog_mod
 from raptor_spark.catalog import Catalog
 
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts on this thread."""
+    sc = spark.sparkContext
+    group = f"test-catalog-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_merge_is_keyed_upsert_and_idempotent(spark, tmp_path):
@@ -131,3 +151,95 @@ def test_diff_snapshots_identical_is_empty(spark, tmp_path):
     s1 = cat.manifest("t")["snapshot_id"]
     cat.write("t", spark.createDataFrame([(2, None), (1, "a")], ["k", "s"]))
     assert diff_snapshots(cat, "t", ["k"], old_snapshot=s1).count() == 0
+
+
+def test_pinned_read_of_unchanged_snapshot_runs_one_job(spark, tmp_path):
+    # 40 partition dirs: more than Spark lists on the driver, so resolving
+    # the table afresh would run a listing job (and inferring its schema
+    # another) before the lookup's own job
+    cat = Catalog(spark, str(tmp_path))
+    df = spark.range(400).withColumn("k", (F.col("id") % 40).cast("int"))
+    cat.write("t", df, partition_by=["k"])
+
+    def lookup():
+        return cat.read("t").filter(F.col("id") == 7).collect()
+
+    assert [tuple(r) for r in lookup()] == [(7, 7)]
+    assert _spark_jobs(spark, lookup) == 1
+    assert cat.read("t") is cat.read("t")
+
+
+def test_read_uses_committed_schema(spark, tmp_path):
+    # partition values that look numeric stay the strings that were written
+    # (inference would read "007" back as the integer 7)
+    cat = Catalog(spark, str(tmp_path))
+    df = spark.createDataFrame([(1, "007"), (2, "010")], ["id", "code"])
+    cat.write("t", df, partition_by=["code"])
+    got = cat.read("t")
+    assert dict(got.dtypes)["code"] == "string"
+    assert _rows(got.select("id", "code")) == [(1, "007"), (2, "010")]
+
+
+def test_other_instance_commits_are_visible(spark, tmp_path):
+    a, b = Catalog(spark, str(tmp_path)), Catalog(spark, str(tmp_path))
+    a.write("t", spark.range(3))
+    assert a.read("t").count() == 3
+    b.write("t", spark.range(5))
+    assert a.read("t").count() == 5
+    b.append("t", spark.range(2))
+    assert a.read("t").count() == 7
+    # an append-created table (no recorded schema) re-resolves the same way
+    b.append("log", spark.range(4))
+    assert a.read("log").count() == 4
+    b.append("log", spark.range(1))
+    assert a.read("log").count() == 5
+
+
+def test_pinned_snapshot_read_survives_new_commit(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path))
+    cat.write("t", spark.range(3).withColumn("v", F.lit("old")))
+    assert cat.read("t").count() == 3  # pins snapshot 0 as the current one
+    cat.write("t", spark.range(5).withColumn("v", F.lit("new")))
+    assert _rows(cat.read("t", snapshot=0)) == [(i, "old") for i in range(3)]
+    assert _rows(cat.read("t")) == [(i, "new") for i in range(5)]
+
+
+def test_prune_drops_pinned_frames(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path), keep_snapshots=2)
+    for i in range(4):
+        cat.write("t", spark.range(i + 1))
+        assert cat.read("t").count() == i + 1
+    assert sorted(sid for _table, sid in cat._pinned) == [2, 3]
+
+
+def _torn_pointer_json(monkeypatch):
+    """Make every dump of the ``manifest.json`` pointer write half a
+    document and then fail, as a crash mid-write would."""
+
+    def dump(obj, f, **kwargs):
+        if os.path.basename(f.name).startswith("manifest.json"):
+            f.write(json.dumps(obj)[:10])
+            raise OSError("simulated crash while writing the pointer")
+        return json.dump(obj, f, **kwargs)
+
+    monkeypatch.setattr(
+        catalog_mod, "json", types.SimpleNamespace(dump=dump, load=json.load, loads=json.loads)
+    )
+
+
+def test_crash_writing_pointer_leaves_table_absent_or_readable(spark, tmp_path, monkeypatch):
+    cat = Catalog(spark, str(tmp_path))
+    cat.write("t", spark.range(3))
+    _torn_pointer_json(monkeypatch)
+    with pytest.raises(OSError):
+        cat.append("log", spark.range(4))  # creates the table
+    assert not cat.exists("log") or cat.read("log").count() == 4
+    with pytest.raises(OSError):
+        cat.write("t", spark.range(9))
+    with pytest.raises(OSError):
+        cat.append("t", spark.range(2))  # bumps append_seq
+    monkeypatch.undo()
+    assert Catalog(spark, str(tmp_path)).read("t").count() in (3, 5)
+    # the crashed first append never became visible, and does not leak in
+    cat.append("log", spark.range(1))
+    assert Catalog(spark, str(tmp_path)).read("log").count() == 1

@@ -6,8 +6,13 @@ import pyspark.sql.functions as F
 import pytest
 
 from raptor_spark.cc import connected_components
-from raptor_spark.link import canonical_mapping, head_names, defined_names, link_edges
-from raptor_spark.oracle import oracle_components, oracle_triples
+from raptor_spark.link import canonical_mapping, link_edges, name_features
+from raptor_spark.oracle import (
+    _canonical_names,
+    _head_names,
+    oracle_components,
+    oracle_triples,
+)
 from raptor_spark.synth import ALIAS_CLUSTERS, HEAD_SYMBOLS
 
 
@@ -62,23 +67,24 @@ def test_matches_exhaustive_oracle(mapping, corpus_rows):
     assert agree / len(golden) >= 0.98, f"agreement {agree / len(golden):.3f}"
 
 
-def test_head_detection(triples_df):
-    heads = {r.name for r in head_names(defined_names(triples_df)).collect()}
-    assert set(HEAD_SYMBOLS) <= heads
-    assert "fetchData" not in heads
+@pytest.fixture(scope="module")
+def feats(triples_df):
+    return name_features(triples_df).select("name", "is_head").collect()
 
 
-def test_name_features_matches_legacy_path(triples_df):
-    # the fused one-shuffle name_features must flag exactly the names the
-    # legacy defined_names -> head_names chain flags, over exactly the same
-    # distinct-name universe
-    from raptor_spark.link import name_features
+def test_head_detection(feats, corpus_rows):
+    # the pipeline's head flags and the oracle's per-name repo count both
+    # single out the skew heads, and only them
+    got = {r.name for r in feats if r.is_head}
+    want = _head_names(oracle_triples(corpus_rows))
+    for heads in (got, want):
+        assert set(HEAD_SYMBOLS) <= heads
+        assert "fetchData" not in heads
 
-    feats = name_features(triples_df).select("name", "is_head").collect()
-    got_names = {r.name for r in feats}
-    got_heads = {r.name for r in feats if r.is_head}
-    names_repo = defined_names(triples_df)
-    want_names = {r.name for r in names_repo.select("name").distinct().collect()}
-    want_heads = {r.name for r in head_names(names_repo).collect()}
-    assert got_names == want_names
-    assert got_heads == want_heads
+
+def test_name_features_matches_oracle(feats, corpus_rows):
+    # the fused one-shuffle name_features flags exactly the names the
+    # single-process oracle flags, over exactly its distinct defined names
+    triples = oracle_triples(corpus_rows)
+    assert {r.name for r in feats} == set(_canonical_names(triples))
+    assert {r.name for r in feats if r.is_head} == _head_names(triples)

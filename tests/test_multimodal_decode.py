@@ -1236,3 +1236,27 @@ def test_mpeg1_layer1_id3_wrapped_stream():
     prose = b"ID3 tags are metadata containers " * 8
     assert decode_audio_samples(prose) is None
     assert parse_media_header(prose) is None
+
+
+def test_mpeg1_layer1_id3_footer_flagged_tag():
+    """An ID3v2.4 tag with the footer flag (flags bit 4) carries a 10-byte
+    footer after its body that the synchsafe size does not count; the
+    stream behind it still decodes instead of falling back to the stub."""
+    from raptor_spark.operators.multimodal import (
+        decode_audio_samples,
+        encode_mpeg1_layer1,
+        parse_media_header,
+        text_waveform,
+    )
+
+    core = encode_mpeg1_layer1(
+        text_waveform("a tag with a footer in front " * 4), rate=32000
+    )
+    body = b"\x00" * 20
+    tag = b"ID3\x04\x00\x10\x00\x00\x00\x14" + body + b"3DI\x04\x00\x10\x00\x00\x00\x14"
+    s1, r1 = decode_audio_samples(core)
+    got = decode_audio_samples(tag + core)
+    assert got is not None
+    assert got[1] == r1 and np.array_equal(got[0], s1)
+    h = parse_media_header(tag + core)
+    assert h is not None and h["format"] == "mpeg_audio"
