@@ -18,7 +18,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from raptor_spark.schemas import TRIPLES_SCHEMA
 from raptor_spark.tokenize import extract_file, sha256_hex
@@ -58,21 +57,3 @@ def extract_triples(files: DataFrame) -> DataFrame:
     return files.select("repo", "path", "lang", "content").mapInPandas(
         _extract_batches, schema=TRIPLES_SCHEMA
     )
-
-
-def filter_unprocessed(files: DataFrame, processed: DataFrame) -> DataFrame:
-    """Incremental-run change detection: keep only files whose content hash has
-    not been processed before (left anti-join on sha256) — the analog of the
-    reference's checksum short-circuit (asset_management/database.py:583-592 +
-    client.py:157-206 'commit: no changes' reuse).
-
-    ``processed`` must have a ``sha256`` column (e.g. the previous run's
-    triples table). The hash is computed JVM-side with ``sha2`` — bitwise
-    identical to the Python ``hashlib`` value for utf-8 content (tested).
-    """
-    with_sha = files.withColumn(
-        "sha256", F.sha2(F.coalesce(F.col("content"), F.lit("")), 256)
-    )
-    return with_sha.join(
-        processed.select("sha256").distinct(), on="sha256", how="left_anti"
-    ).drop("sha256")

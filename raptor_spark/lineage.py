@@ -54,10 +54,10 @@ def input_rollup(files: DataFrame) -> DataFrame:
 
 def triple_rollup(triples: DataFrame) -> DataFrame:
     """(partition_id, triple_count) per repo bucket — the output-side half of
-    a stage's lineage row. Several stages of one run share identical counts
-    (linked carries exactly the extracted rows plus canonical columns; nodes/
-    edges lineage records the linked input), so compute this once, persist
-    it, and pass it to ``stage_lineage(triple_counts=...)``."""
+    a stage's lineage row. Every stage of one run that records the triple
+    table shares these counts (extracted commits it; nodes/edges are built
+    from it plus canonical columns, one row per triple), so compute this
+    once, persist it, and pass it to ``stage_lineage``."""
     return (
         triples.select(repo_bucket_col("repo").alias("partition_id"))
         .groupBy("partition_id")
@@ -68,26 +68,20 @@ def triple_rollup(triples: DataFrame) -> DataFrame:
 def stage_lineage(
     run_id: str,
     stage: str,
-    files: DataFrame,
-    triples: DataFrame | None,
     wall_ms: int,
-    rollup: DataFrame | None = None,
+    rollup: DataFrame,
     triple_counts: DataFrame | None = None,
 ) -> DataFrame:
-    """Build the lineage rows for one completed stage. Pass a precomputed
-    (persisted) ``input_rollup`` when appending lineage for several stages of
-    one run — the roll-up re-hashes every input row, and recomputing it per
-    stage is a full content pass each time. ``triple_counts`` (a persisted
-    ``triple_rollup``) likewise skips re-aggregating the triple table per
-    stage."""
-    base = rollup if rollup is not None else input_rollup(files)
-    if triples is not None or triple_counts is not None:
-        tc = triple_counts if triple_counts is not None else triple_rollup(triples)
-        base = base.join(tc, on="partition_id", how="left").withColumn(
+    """Build the lineage rows for one completed stage from the run's
+    persisted ``input_rollup`` (it re-hashes every input row, so one per run)
+    and, for a stage that records the triple table, the run's persisted
+    ``triple_rollup``; without it ``triple_count`` is 0."""
+    if triple_counts is None:
+        base = rollup.withColumn("triple_count", F.lit(0).cast("long"))
+    else:
+        base = rollup.join(triple_counts, on="partition_id", how="left").withColumn(
             "triple_count", F.coalesce(F.col("triple_count"), F.lit(0))
         )
-    else:
-        base = base.withColumn("triple_count", F.lit(0).cast("long"))
     return base.select(
         F.lit(run_id).alias("run_id"),
         F.lit(stage).alias("stage"),

@@ -14,7 +14,7 @@ partitioning (SURVEY.md §7.4 risk 3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from raptor_spark.functions import node_id_col, repo_bucket_col
@@ -36,8 +36,10 @@ _PRED_KINDS = {
 }
 
 
-def _endpoint_canonicals(linked: DataFrame) -> DataFrame:
-    """Explode linked triples into (kind, canonical, lang, repo) node mentions.
+def _endpoints() -> tuple[Column, Column, Column, Column]:
+    """(subj kind, subj canonical, obj kind, obj canonical) of a linked triple
+    whose pred is in ``_PRED_KINDS`` — the one definition of a node's key
+    that nodes and edges share.
 
     Canonical strings per kind:
       repo    → repo name
@@ -46,39 +48,40 @@ def _endpoint_canonicals(linked: DataFrame) -> DataFrame:
       symbol  → linked canonical (subj_canonical/obj_canonical)
       concept → concept name
     """
-    t = linked
-    subj_canon = F.when(
-        t.pred == PRED_CONTAINS, t.repo
-    ).when(
-        t.pred == PRED_CALLS, F.coalesce(t.subj_canonical, t.subj)
-    ).otherwise(F.concat_ws(":", t.repo, t.path))
+    pred, repo = F.col("pred"), F.col("repo")
+    file = F.concat_ws(":", repo, F.col("path"))
+    subj_canon = (
+        F.when(pred == PRED_CONTAINS, repo)
+        .when(pred == PRED_CALLS, F.coalesce(F.col("subj_canonical"), F.col("subj")))
+        .otherwise(file)
+    )
     obj_canon = (
-        F.when(t.pred == PRED_CONTAINS, F.concat_ws(":", t.repo, t.path))
-        .when(t.pred.isin(PRED_DEFINES, PRED_CALLS), F.coalesce(t.obj_canonical, t.obj))
-        .otherwise(t.obj)
+        F.when(pred == PRED_CONTAINS, file)
+        .when(
+            pred.isin(PRED_DEFINES, PRED_CALLS),
+            F.coalesce(F.col("obj_canonical"), F.col("obj")),
+        )
+        .otherwise(F.col("obj"))
     )
     kind_map = F.create_map(
         *[x for p, (sk, ok) in _PRED_KINDS.items() for x in (F.lit(p), F.lit(f"{sk}|{ok}"))]
     )
-    kinds = F.split(kind_map[t.pred], r"\|")
-    exploded = t.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    kinds.getItem(0).alias("kind"), subj_canon.alias("canonical")
-                ),
-                F.struct(kinds.getItem(1).alias("kind"), obj_canon.alias("canonical")),
-            )
-        ).alias("m"),
-        "lang",
-        "repo",
-    ).select("m.kind", "m.canonical", "lang", "repo")
-    return exploded
+    kinds = F.split(kind_map[pred], r"\|")
+    return kinds.getItem(0), subj_canon, kinds.getItem(1), obj_canon
 
 
 def build_nodes(linked: DataFrame) -> DataFrame:
     """nodes(id, kind, canonical, lang, repo_bucket, n_mentions)."""
-    mentions = _endpoint_canonicals(linked.filter(F.col("pred").isin(*_PRED_KINDS)))
+    subj_kind, subj_canon, obj_kind, obj_canon = _endpoints()
+    mentions = linked.filter(F.col("pred").isin(*_PRED_KINDS)).select(
+        F.explode(
+            F.array(
+                F.struct(subj_kind.alias("kind"), subj_canon.alias("canonical")),
+                F.struct(obj_kind.alias("kind"), obj_canon.alias("canonical")),
+            )
+        ).alias("m"),
+        "lang",
+    ).select("m.kind", "m.canonical", "lang")
     return (
         mentions.groupBy("kind", "canonical")
         .agg(F.count("*").alias("n_mentions"), F.min("lang").alias("lang"))
@@ -96,24 +99,10 @@ def build_nodes(linked: DataFrame) -> DataFrame:
 def build_edges(linked: DataFrame) -> DataFrame:
     """edges(src, dst, pred, lang, repo_bucket, weight) — weight = number of
     mention rows collapsing onto the canonical (src, dst, pred)."""
-    t = linked.filter(F.col("pred").isin(*_PRED_KINDS))
-    subj_canon = F.when(
-        t.pred == PRED_CONTAINS, t.repo
-    ).when(
-        t.pred == PRED_CALLS, F.coalesce(t.subj_canonical, t.subj)
-    ).otherwise(F.concat_ws(":", t.repo, t.path))
-    obj_canon = (
-        F.when(t.pred == PRED_CONTAINS, F.concat_ws(":", t.repo, t.path))
-        .when(t.pred.isin(PRED_DEFINES, PRED_CALLS), F.coalesce(t.obj_canonical, t.obj))
-        .otherwise(t.obj)
-    )
-    kind_map = F.create_map(
-        *[x for p, (sk, ok) in _PRED_KINDS.items() for x in (F.lit(p), F.lit(f"{sk}|{ok}"))]
-    )
-    kinds = F.split(kind_map[t.pred], r"\|")
-    pairs = t.select(
-        node_id_col(kinds.getItem(0), subj_canon).alias("src"),
-        node_id_col(kinds.getItem(1), obj_canon).alias("dst"),
+    subj_kind, subj_canon, obj_kind, obj_canon = _endpoints()
+    pairs = linked.filter(F.col("pred").isin(*_PRED_KINDS)).select(
+        node_id_col(subj_kind, subj_canon).alias("src"),
+        node_id_col(obj_kind, obj_canon).alias("dst"),
         "pred",
         "lang",
     )

@@ -11,8 +11,9 @@ checkpoints instead of silently reusing them).
 
 Stages:
   extracted  — triples (extract.extract_triples)
-  components — (name, component) from LSH link + connected components
-  linked     — triples + canonical columns
+  components — (name, component) from LSH link + connected components; the
+               linking checkpoint: the triples' canonical columns are added
+               in memory from a mapping rebuilt from it, never committed
   nodes / edges — final graph, partitioned (lang, repo_bucket)
 
 Run:  python -m raptor_spark.pipeline --input <files.parquet> --output <dir>
@@ -48,7 +49,7 @@ from raptor_spark.link import (
 from raptor_spark.materialize import build_edges, build_nodes
 from raptor_spark.schemas import FILES_SCHEMA
 
-STAGES = ("extracted", "components", "linked", "nodes", "edges")
+STAGES = ("extracted", "components", "nodes", "edges")
 
 
 def _corpus_fingerprint(rollup: DataFrame) -> str:
@@ -74,17 +75,6 @@ class Pipeline:
         # staging dir, so lineage appends are serialized
         self._lineage_lock = threading.Lock()
         self._lineage_parts: list[DataFrame] = []
-        # one per-bucket triple-count rollup shared by every stage whose
-        # lineage records the triple table (linked/nodes/edges carry the
-        # same per-bucket counts) — computed lazily once, under the lock
-        # because the nodes/edges commits run from two driver threads
-        self._tc: DataFrame | None = None
-
-    def _triple_counts(self, triples: DataFrame) -> DataFrame:
-        with self._lineage_lock:
-            if self._tc is None:
-                self._tc = triple_rollup(triples).persist()
-            return self._tc
 
     def _stage_valid(self, stage: str, fingerprint: str, resume: bool) -> bool:
         if not resume or not self.catalog.exists(stage):
@@ -95,11 +85,8 @@ class Pipeline:
         self,
         stage: str,
         df: DataFrame,
-        files: DataFrame,
         fingerprint: str,
-        timer: StageTimer,
         partition_by: list[str] | None = None,
-        lineage_triples: DataFrame | None = None,
         cluster_for_write: bool = False,
         sort_by: list[str] | None = None,
     ) -> DataFrame:
@@ -108,7 +95,7 @@ class Pipeline:
             # so each output directory is written by one task instead of
             # every task writing every directory (64 tasks × 64 dirs of
             # ~20-row files measured 18s of commit churn on the edges stage).
-            # NOT done for the big pred-partitioned triple tables — there the
+            # NOT done for the big pred-partitioned triple table — there the
             # extra full shuffle costs more than the committer saves.
             df = df.repartition(*[F.col(c) for c in partition_by])
         if sort_by:
@@ -119,26 +106,23 @@ class Pipeline:
         self.catalog.write(
             stage, df, partition_by=partition_by, meta={"input_fingerprint": fingerprint}
         )
-        out = self.catalog.read(stage)
-        tc = (
-            self._triple_counts(lineage_triples)
-            if lineage_triples is not None
-            else None
-        )
-        # lineage rows are STASHED here and flushed in ONE append at the end
-        # of run(): five per-stage appends were five tiny write jobs + five
-        # parquet commits on the same table (serialized under the lock),
-        # ~2.4 s of pure fixed overhead at bench size. The batched flush
-        # writes the identical rows (per-stage wall_ms captured now, in the
-        # struct) in a single job.
+        return self.catalog.read(stage)
+
+    def _record(
+        self, stage: str, timer: StageTimer, triple_counts: DataFrame | None = None
+    ) -> None:
+        # lineage rows of a committed stage are STASHED here and flushed in
+        # ONE append at the end of run(): per-stage appends were one tiny
+        # write job + parquet commit each on the same table (serialized
+        # under the lock), ~2.4 s of pure fixed overhead at bench size. The
+        # batched flush writes the identical rows (per-stage wall_ms captured
+        # now) in a single job.
         with self._lineage_lock:
             self._lineage_parts.append(
                 stage_lineage(
-                    self.run_id, stage, files, None, timer.ms(),
-                    rollup=self._rollup, triple_counts=tc,
+                    self.run_id, stage, timer.ms(), self._rollup, triple_counts
                 )
             )
-        return out
 
     def _flush_lineage(self) -> None:
         with self._lineage_lock:
@@ -200,7 +184,7 @@ class Pipeline:
             return self._run(files, resume, incremental_from)
         except BaseException:
             # a failed stage must not lose the COMPLETED stages' audit rows —
-            # they're stashed for the end-of-run batched flush (see _commit)
+            # they're stashed for the end-of-run batched flush (see _record)
             self._flush_lineage()
             raise
 
@@ -216,32 +200,30 @@ class Pipeline:
         fingerprint = _corpus_fingerprint(self._rollup)
 
         # -- stage 1: extract ------------------------------------------------
-        if self._stage_valid("extracted", fingerprint, resume):
-            triples = self.catalog.read("extracted")
-        else:
-            t = StageTimer()
+        t = StageTimer()
+        extract = not self._stage_valid("extracted", fingerprint, resume)
+        if extract:
             stage1 = (
                 self.incremental_triples(files, incremental_from)
                 if incremental_from
                 else extract_triples(files)
             )
-            triples = self._commit(
-                "extracted",
-                stage1,
-                files,
-                fingerprint,
-                t,
-                partition_by=["pred"],
-                lineage_triples=None,
-            )
+            triples = self._commit("extracted", stage1, fingerprint, partition_by=["pred"])
+        else:
+            triples = self.catalog.read("extracted")
         triples = triples.persist()
+        # per-bucket counts of the committed triple table: the lineage
+        # triple_count of extracted, nodes and edges. Made here on the main
+        # thread, before the nodes/edges threads share it
+        tc = triple_rollup(triples).persist()
+        if extract:
+            self._record("extracted", t, tc)
 
-        # one featurized name-dimension table shared by linking (stage 2a)
-        # and canonical mapping (stage 2b) — lazy, so resume-skipped stages
-        # never compute it
+        # one featurized name-dimension table shared by linking and the
+        # canonical mapping — lazy, so resume-skipped stages never compute it
         feats = name_features(triples).persist()
 
-        # -- stage 2a: components ---------------------------------------------
+        # -- stage 2: components ----------------------------------------------
         if self._stage_valid("components", fingerprint, resume):
             comps = self.catalog.read("components")
         else:
@@ -249,35 +231,24 @@ class Pipeline:
             comps = self._commit(
                 "components",
                 connected_components(link_edges(triples, feats=feats)),
-                files,
                 fingerprint,
-                t,
             )
+            self._record("components", t)
 
-        # -- stage 2b: linked -------------------------------------------------
-        if self._stage_valid("linked", fingerprint, resume):
-            linked = self.catalog.read("linked")
-        else:
-            t = StageTimer()
-            mapping = canonical_mapping(triples, comps, feats=feats)
-            linked = self._commit(
-                "linked",
-                apply_linking(triples, mapping),
-                files,
-                fingerprint,
-                t,
-                partition_by=["pred"],
-                lineage_triples=triples,
-            )
-        linked = linked.persist()
+        # triples + canonical columns. `components` is the linking checkpoint:
+        # the name → canonical mapping is one names-sized groupBy over it, so
+        # the linked triples stay in memory instead of being committed as a
+        # second copy of the triple table
+        linked = apply_linking(
+            triples, canonical_mapping(triples, comps, feats=feats)
+        ).persist()
 
         # -- stage 3: nodes / edges -------------------------------------------
-        # Both derive from the committed `linked` table and write disjoint
+        # Both derive from the in-memory linked triples and write disjoint
         # dirs, so when both are pending their build+write jobs run from two
         # driver threads — the commits are dominated by many small serial
         # steps (partitioned write of ~#langs × N_REPO_BUCKETS dirs, manifest,
-        # read-back, lineage) that overlap cleanly on an idle scheduler.
-        # Lineage appends stay serialized (see _lineage_lock).
+        # read-back) that overlap cleanly on an idle scheduler.
         specs = {
             "nodes": dict(
                 build=lambda: build_nodes(linked),
@@ -304,14 +275,12 @@ class Pipeline:
                 results[stage] = self._commit(
                     stage,
                     spec["build"](),
-                    files,
                     fingerprint,
-                    t,
                     partition_by=["lang", "repo_bucket"],
-                    lineage_triples=linked,
                     cluster_for_write=True,
                     sort_by=spec["sort_by"],
                 )
+                self._record(stage, t, tc)
             except BaseException as e:  # re-raised on the caller thread
                 errors.append(e)
 
@@ -329,19 +298,14 @@ class Pipeline:
                 _run(stage, spec)
         if errors:
             raise errors[0]
-        nodes, edges = results["nodes"], results["edges"]
-        self._flush_lineage()  # before the rollup unpersist: lineage reads it
-        files.unpersist()
-        self._rollup.unpersist()
-        if self._tc is not None:
-            self._tc.unpersist()
-            self._tc = None
+        self._flush_lineage()  # before the roll-ups' unpersist: lineage reads them
+        for df in (files, self._rollup, tc, linked):
+            df.unpersist()
         return {
             "extracted": triples,
             "components": comps,
-            "linked": linked,
-            "nodes": nodes,
-            "edges": edges,
+            "nodes": results["nodes"],
+            "edges": results["edges"],
         }
 
 

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from raptor_spark.extract import PRED_ERROR, extract_triples, filter_unprocessed
+from raptor_spark.extract import PRED_ERROR, extract_triples
 from raptor_spark.functions import sha256_col
 from raptor_spark.oracle import oracle_triples, precision_recall, triple_keys
 from raptor_spark.tokenize import ALL_PREDS, sha256_hex
@@ -52,18 +52,6 @@ def test_edge_case_files_survive(spark, triples_df):
     # empty + whitespace-only files still produce their repo-contains-path row
     for path in ("edge/empty.py", "edge/blank.py", "edge/huge.py", "edge/weird.py"):
         assert triples_df.filter(F.col("path") == path).count() >= 1, path
-
-
-def test_incremental_change_detection(spark, files_df):
-    # processing the same corpus twice → second pass sees zero new files
-    processed = files_df.select(sha256_col("content").alias("sha256"))
-    remaining = filter_unprocessed(files_df, processed)
-    assert remaining.count() == 0
-    # dropping one sha makes exactly the files with that content reappear
-    one = files_df.limit(1).select(sha256_col("content").alias("sha256"))
-    fewer = processed.join(one, "sha256", "left_anti")
-    again = filter_unprocessed(files_df, fewer)
-    assert again.count() >= 1
 
 
 def test_extraction_plan_is_shuffle_free(spark, files_df, tmp_path):

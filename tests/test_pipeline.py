@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -15,14 +17,18 @@ def run_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def first_run(spark, files_df, run_dir):
-    out = Pipeline(spark, run_dir).run(files_df)
+    p = Pipeline(spark, run_dir)
+    out = p.run(files_df)
     return {
+        "run_id": p.run_id,
+        "tables": {t for t in os.listdir(run_dir) if p.catalog.exists(t)},
+        "extracted": out["extracted"].count(),
         "nodes": sorted(map(tuple, out["nodes"].collect())),
         "edges": sorted(map(tuple, out["edges"].collect())),
     }
 
 
-@pytest.mark.parametrize("kill_after", ["extracted", "components", "linked", "nodes"])
+@pytest.mark.parametrize("kill_after", STAGES[:-1])
 def test_resume_after_stage_kill_is_equivalent(
     spark, files_df, run_dir, first_run, kill_after
 ):
@@ -36,9 +42,20 @@ def test_resume_after_stage_kill_is_equivalent(
 
 
 def test_lineage_rows_written(spark, files_df, run_dir, first_run):
+    # a from-scratch run commits one table per stage, plus lineage; the
+    # linked triples are never committed
+    assert first_run["tables"] == {"extracted", "components", "nodes", "edges", "lineage"}
     lineage = Pipeline(spark, run_dir).catalog.read("lineage")
-    stages = {r.stage for r in lineage.select("stage").distinct().collect()}
-    assert set(STAGES) <= stages
+    first = lineage.filter(F.col("run_id") == first_run["run_id"])
+    triple_counts = {
+        r.stage: r.n
+        for r in first.groupBy("stage").agg(F.sum("triple_count").alias("n")).collect()
+    }
+    assert set(triple_counts) == set(STAGES)
+    # extracted records the triples it emits; nodes/edges the triples they
+    # are built from (linking keeps every row); components records none
+    n = first_run["extracted"]
+    assert triple_counts == {"extracted": n, "components": 0, "nodes": n, "edges": n}
     assert lineage.filter(F.col("status") != "complete").count() == 0
     # roll-ups are identical for every run over the same corpus
     per_stage = (
@@ -91,9 +108,12 @@ def test_incremental_run_equals_full_run(
 
 
 def test_incremental_lang_change_reextracts(spark, tmp_path_factory):
-    """lang is part of the reuse key: a file whose lang metadata changes with
-    content and path unchanged must re-extract, or the incremental run keeps
-    stale-lang triples and diverges from a from-scratch run."""
+    """The checksum short-circuit (client.py:157-206) re-extracts exactly the
+    changed files, and its triples equal a from-scratch extraction: the same
+    corpus again extracts nothing, an added file is extracted alone, and —
+    since lang is part of the reuse key — so is a file whose lang metadata
+    changes with content and path unchanged (else the incremental run keeps
+    stale-lang triples and diverges from a from-scratch run)."""
     from raptor_spark.catalog import Catalog
     from raptor_spark.extract import extract_triples
     from raptor_spark.schemas import FILES_SCHEMA
@@ -108,15 +128,20 @@ def test_incremental_lang_change_reextracts(spark, tmp_path_factory):
     prev = str(tmp_path_factory.mktemp("prev"))
     Catalog(spark, prev).write("extracted", extract_triples(f1))
 
-    v2 = [dict(r) for r in v1]
-    v2[0]["lang"] = "js"  # metadata-only change
-    f2 = spark.createDataFrame(v2, schema=FILES_SCHEMA)
-    p = Pipeline(spark, str(tmp_path_factory.mktemp("inc")))
-    inc = p.incremental_triples(f2, prev)
-    full = extract_triples(f2)
-    assert p.incremental_stats["files_extracted"] == 1
-    assert inc.exceptAll(full).count() == 0
-    assert full.exceptAll(inc).count() == 0
+    added = v1 + [
+        {"repo": "orgX/new", "path": "src/n.py", "commit": "c" * 8, "lang": "python",
+         "content": "def brand_new(arg):\n    return arg\n"},
+    ]
+    lang_changed = [dict(r) for r in v1]
+    lang_changed[0]["lang"] = "js"  # metadata-only change
+    for rows, n_extracted in ((v1, 0), (added, 1), (lang_changed, 1)):
+        f2 = spark.createDataFrame(rows, schema=FILES_SCHEMA)
+        p = Pipeline(spark, str(tmp_path_factory.mktemp("inc")))
+        inc = p.incremental_triples(f2, prev)
+        full = extract_triples(f2)
+        assert p.incremental_stats["files_extracted"] == n_extracted
+        assert inc.exceptAll(full).count() == 0
+        assert full.exceptAll(inc).count() == 0
 
 
 def test_nodes_edges_shapes(spark, run_dir, first_run):

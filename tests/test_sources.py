@@ -1,5 +1,5 @@
 """Sources/sinks gates (SURVEY.md §2.1): permissive CSV validation, file-type
-dispatch, catalog manifest round-trip, incremental change-detection join."""
+dispatch, catalog manifest round-trip."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from pyspark.sql.types import (
 )
 
 from raptor_spark.catalog import Catalog
-from raptor_spark.extract import filter_unprocessed
 from raptor_spark.sources import file_type_dispatch, read_csv_validated
 
 
@@ -110,19 +109,3 @@ def test_catalog_manifest_roundtrip(spark, tmp_path):
     assert cat.read("t").count() == 10
     cat.drop("t")
     assert not cat.exists("t")
-
-
-def test_filter_unprocessed_change_detection(spark, files_df, triples_df):
-    """The checksum short-circuit (client.py:157-206): a second run over the
-    same corpus extracts nothing; a new file passes through."""
-    remaining = filter_unprocessed(files_df, triples_df)
-    assert remaining.count() == 0
-
-    new = spark.createDataFrame(
-        [("orgX/new", "src/n.py", "c" * 40, "python", "def brand_new(arg):\n    return arg\n")],
-        files_df.schema,
-    )
-    both = files_df.unionByName(new)
-    remaining2 = filter_unprocessed(both, triples_df)
-    assert [r.path for r in remaining2.collect()] == ["src/n.py"]
-    assert set(remaining2.columns) == set(files_df.columns)
