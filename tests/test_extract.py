@@ -4,9 +4,11 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from raptor_spark.catalog import Catalog
 from raptor_spark.extract import PRED_ERROR, extract_triples
 from raptor_spark.functions import sha256_col
 from raptor_spark.oracle import oracle_triples, precision_recall, triple_keys
+from raptor_spark.pipeline import Pipeline
 from raptor_spark.tokenize import ALL_PREDS, sha256_hex
 
 
@@ -52,6 +54,24 @@ def test_edge_case_files_survive(spark, triples_df):
     # empty + whitespace-only files still produce their repo-contains-path row
     for path in ("edge/empty.py", "edge/blank.py", "edge/huge.py", "edge/weird.py"):
         assert triples_df.filter(F.col("path") == path).count() >= 1, path
+
+
+def test_incremental_change_detection(spark, files_df, triples_df, tmp_path):
+    # processing the same corpus twice → second pass extracts zero files
+    prev = str(tmp_path / "prev")
+    Catalog(spark, prev).write("extracted", triples_df)
+    p = Pipeline(spark, str(tmp_path / "inc"))
+    p.incremental_triples(files_df, prev)
+    assert p.incremental_stats["files_extracted"] == 0
+    # dropping one sha's triples makes exactly the files with that content
+    # reappear
+    one = files_df.limit(1).select(sha256_col("content").alias("sha256"))
+    fewer = str(tmp_path / "fewer")
+    Catalog(spark, fewer).write(
+        "extracted", triples_df.join(one, "sha256", "left_anti")
+    )
+    p.incremental_triples(files_df, fewer)
+    assert p.incremental_stats["files_extracted"] >= 1
 
 
 def test_extraction_plan_is_shuffle_free(spark, files_df, tmp_path):

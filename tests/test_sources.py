@@ -1,5 +1,5 @@
 """Sources/sinks gates (SURVEY.md §2.1): permissive CSV validation, file-type
-dispatch, catalog manifest round-trip."""
+dispatch, catalog manifest round-trip, incremental change-detection join."""
 
 from __future__ import annotations
 
@@ -13,6 +13,8 @@ from pyspark.sql.types import (
 )
 
 from raptor_spark.catalog import Catalog
+from raptor_spark.pipeline import Pipeline
+from raptor_spark.schemas import TRIPLES_SCHEMA
 from raptor_spark.sources import file_type_dispatch, read_csv_validated
 
 
@@ -109,3 +111,25 @@ def test_catalog_manifest_roundtrip(spark, tmp_path):
     assert cat.read("t").count() == 10
     cat.drop("t")
     assert not cat.exists("t")
+
+
+def test_filter_unprocessed_change_detection(spark, files_df, triples_df, tmp_path):
+    """The checksum short-circuit (client.py:157-206) in
+    Pipeline.incremental_triples: a second run over the same corpus extracts
+    nothing; a new file passes through alone."""
+    prev = str(tmp_path / "prev")
+    Catalog(spark, prev).write("extracted", triples_df)
+    p = Pipeline(spark, str(tmp_path / "inc"))
+    p.incremental_triples(files_df, prev)
+    assert p.incremental_stats["files_extracted"] == 0
+
+    new = spark.createDataFrame(
+        [("orgX/new", "src/n.py", "c" * 40, "python", "def brand_new(arg):\n    return arg\n")],
+        files_df.schema,
+    )
+    both = files_df.unionByName(new)
+    inc = p.incremental_triples(both, prev)
+    assert p.incremental_stats["files_extracted"] == 1
+    fresh = inc.exceptAll(triples_df.select(*inc.columns))
+    assert [r.path for r in fresh.select("path").distinct().collect()] == ["src/n.py"]
+    assert inc.columns == TRIPLES_SCHEMA.fieldNames()
