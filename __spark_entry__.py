@@ -3013,6 +3013,14 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cents_sum(x):
+    """Sum of a money expression to the cent, exact and engine-independent:
+    floor(x·100) per element (the same IEEE multiply+floor on Spark and
+    DuckDB), summed as BIGINT, divided by 100 at the end — a rounded double
+    sum differs across engines in the last cent with summation order."""
+    return F.sum(F.floor(x * 100).cast("long")) / 100
+
+
 def q_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 analog: bilateral shipping volume between two nations by
     ship year (supplier nation × customer nation). The two nation dims are
@@ -3048,9 +3056,9 @@ def q_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year")
         )
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
+            _cents_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+                "revenue"
+            ),
             F.count("*").alias("n_items"),
         )
         .orderBy("supp_nation", "cust_nation", "l_year")
@@ -3077,9 +3085,9 @@ def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+            _cents_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+                "revenue"
+            )
         )
         .select(
             "c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal"),
@@ -9515,7 +9523,8 @@ def oracle_sql() -> dict[str, str]:
         "nation_trade_volume": """
             SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                    CAST(year(l_shipdate) AS BIGINT) AS l_year,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+                   CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100)
+                                 AS BIGINT)) AS BIGINT) / 100 AS revenue,
                    count(*) AS n_items
             FROM lineitem
             JOIN supplier ON l_suppkey = s_suppkey
@@ -9531,7 +9540,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         "returned_items": """
             SELECT c_custkey, c_name, round(c_acctbal, 2) AS acctbal, n_name,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+                   CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100)
+                                 AS BIGINT)) AS BIGINT) / 100 AS revenue
             FROM lineitem
             JOIN orders ON l_orderkey = o_orderkey
             JOIN customer ON o_custkey = c_custkey
@@ -10395,10 +10405,10 @@ def oracle_sql() -> dict[str, str]:
         """,
         "late_shipment_priority": """
             SELECT l_linestatus,
-                   sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                            THEN 1 ELSE 0 END) AS high_line_count,
-                   sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                            THEN 1 ELSE 0 END) AS low_line_count
+                   CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                                 THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+                   CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                                 THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
             FROM lineitem JOIN orders ON l_orderkey = o_orderkey
             WHERE l_shipdate > o_orderdate + INTERVAL 90 DAY
             GROUP BY 1 ORDER BY l_linestatus

@@ -1,4 +1,4 @@
-"""Per-partition lineage rows + stage timings (FIXTURES.md §2 lineage schema).
+"""Per-partition lineage rows of a run's stages (FIXTURES.md §2 lineage schema).
 
 Plays the role of the reference's Redis step state machine
 (svc/document_orchestrator_service/redis_manager.py:54-66, update 81-95) and
@@ -14,8 +14,8 @@ with different parallelism (SURVEY.md §7.4 risk 3).
 
 from __future__ import annotations
 
-import time
 import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,36 +67,36 @@ def triple_rollup(triples: DataFrame) -> DataFrame:
 
 def stage_lineage(
     run_id: str,
-    stage: str,
-    wall_ms: int,
+    wall_ms_by_stage: dict[str, int],
     rollup: DataFrame,
-    triple_counts: DataFrame | None = None,
+    triple_counts: DataFrame,
+    no_triples: Iterable[str],
 ) -> DataFrame:
-    """Build the lineage rows for one completed stage from the run's
-    persisted ``input_rollup`` (it re-hashes every input row, so one per run)
-    and, for a stage that records the triple table, the run's persisted
-    ``triple_rollup``; without it ``triple_count`` is 0."""
-    if triple_counts is None:
-        base = rollup.withColumn("triple_count", F.lit(0).cast("long"))
-    else:
-        base = rollup.join(triple_counts, on="partition_id", how="left").withColumn(
-            "triple_count", F.coalesce(F.col("triple_count"), F.lit(0))
-        )
-    return base.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(stage).alias("stage"),
-        F.col("partition_id"),
-        F.col("input_sha256_rollup"),
-        F.col("row_count").cast("long"),
-        F.col("triple_count").cast("long"),
-        F.lit(wall_ms).cast("long").alias("wall_ms"),
-        F.lit(STATUS_COMPLETE).alias("status"),
+    """Build the lineage rows of every stage a run completed, one per
+    (stage, partition), from the run's persisted ``input_rollup`` (it
+    re-hashes every input row, so one per run) joined once to its persisted
+    ``triple_rollup``. Stages in ``no_triples`` do not record the triple
+    table: their ``triple_count`` is 0."""
+    stages = F.array(
+        *[
+            F.struct(F.lit(s).alias("stage"), F.lit(ms).cast("long").alias("wall_ms"))
+            for s, ms in wall_ms_by_stage.items()
+        ]
     )
-
-
-class StageTimer:
-    def __init__(self) -> None:
-        self.start = time.monotonic()
-
-    def ms(self) -> int:
-        return int((time.monotonic() - self.start) * 1000)
+    triple_count = F.when(F.col("s.stage").isin(*no_triples), F.lit(0)).otherwise(
+        F.coalesce(F.col("triple_count"), F.lit(0))
+    )
+    return (
+        rollup.join(triple_counts, on="partition_id", how="left")
+        .withColumn("s", F.explode(stages))
+        .select(
+            F.lit(run_id).alias("run_id"),
+            F.col("s.stage").alias("stage"),
+            F.col("partition_id"),
+            F.col("input_sha256_rollup"),
+            F.col("row_count").cast("long"),
+            triple_count.cast("long").alias("triple_count"),
+            F.col("s.wall_ms").alias("wall_ms"),
+            F.lit(STATUS_COMPLETE).alias("status"),
+        )
+    )

@@ -3,18 +3,22 @@
 The reference resumes work from a Redis-held per-request step machine
 ({step: analysis → summary → save → complete},
 svc/document_orchestrator_service/kafka_handler.py:186-204, 276-431). Here the
-same resumability comes from stage-boundary table commits: each stage writes
-its output table + lineage rows, and ``run(..., resume=True)`` skips any stage
+same resumability comes from stage-boundary table commits: every stage runs
+through one ``Pipeline._stage`` step, which writes its output table with the
+layout ``LAYOUT`` gives it, and ``run(..., resume=True)`` skips any stage
 whose output manifest is already committed AND whose recorded input roll-up
 still matches the current input (so a changed corpus invalidates downstream
-checkpoints instead of silently reusing them).
+checkpoints instead of silently reusing them). The lineage rows of the stages
+a run committed are appended in one ``Catalog.append`` when the run ends,
+failed runs included.
 
 Stages:
   extracted  — triples (extract.extract_triples)
   components — (name, component) from LSH link + connected components; the
                linking checkpoint: the triples' canonical columns are added
                in memory from a mapping rebuilt from it, never committed
-  nodes / edges — final graph, partitioned (lang, repo_bucket)
+  nodes / edges — final graph, partitioned (lang, repo_bucket), built and
+               committed from two driver threads
 
 Run:  python -m raptor_spark.pipeline --input <files.parquet> --output <dir>
       [--resume] [--incremental-from <prev_dir>] [--master local[8]]
@@ -24,17 +28,16 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
-import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from raptor_spark.catalog import Catalog
 from raptor_spark.cc import connected_components
 from raptor_spark.extract import extract_triples
 from raptor_spark.lineage import (
-    StageTimer,
     input_rollup,
     new_run_id,
     stage_lineage,
@@ -50,6 +53,22 @@ from raptor_spark.materialize import build_edges, build_nodes
 from raptor_spark.schemas import FILES_SCHEMA
 
 STAGES = ("extracted", "components", "nodes", "edges")
+
+# stage → (partition columns, within-file sort order) of its committed table.
+# Where a sort order is given, rows are first hash-clustered by the partition
+# columns so each output directory is written by one task instead of every
+# task writing every directory (64 tasks × 64 dirs of ~20-row files measured
+# 18s of commit churn on the edges stage). The big pred-partitioned triple
+# table is NOT clustered: there the extra full shuffle costs more than the
+# committer saves. The sort order (≙ Iceberg sort order / Qdrant payload
+# index, SURVEY.md §2.1) clusters equal keys so parquet min/max stats prune
+# row groups on point lookups.
+LAYOUT: dict[str, tuple[list[str] | None, list[str] | None]] = {
+    "extracted": (["pred"], None),
+    "components": (None, None),
+    "nodes": (["lang", "repo_bucket"], ["kind", "canonical"]),
+    "edges": (["lang", "repo_bucket"], ["pred", "src"]),
+}
 
 
 def _corpus_fingerprint(rollup: DataFrame) -> str:
@@ -69,70 +88,33 @@ class Pipeline:
         self.spark = spark
         self.catalog = Catalog(spark, output_dir)
         self.run_id = new_run_id()
-        # concurrent stage commits write their DATA to distinct dirs (safe),
-        # but all append to the ONE lineage table — and two simultaneous
-        # Spark append jobs on the same path clash on the shared _temporary
-        # staging dir, so lineage appends are serialized
-        self._lineage_lock = threading.Lock()
-        self._lineage_parts: list[DataFrame] = []
 
-    def _stage_valid(self, stage: str, fingerprint: str, resume: bool) -> bool:
-        if not resume or not self.catalog.exists(stage):
-            return False
-        return self.catalog.manifest(stage).get("input_fingerprint") == fingerprint
-
-    def _commit(
+    def _stage(
         self,
         stage: str,
-        df: DataFrame,
+        build: Callable[[], DataFrame],
         fingerprint: str,
-        partition_by: list[str] | None = None,
-        cluster_for_write: bool = False,
-        sort_by: list[str] | None = None,
-    ) -> DataFrame:
-        if cluster_for_write and partition_by:
-            # final graph tables: hash-cluster rows by the partition columns
-            # so each output directory is written by one task instead of
-            # every task writing every directory (64 tasks × 64 dirs of
-            # ~20-row files measured 18s of commit churn on the edges stage).
-            # NOT done for the big pred-partitioned triple table — there the
-            # extra full shuffle costs more than the committer saves.
-            df = df.repartition(*[F.col(c) for c in partition_by])
+        resume: bool,
+    ) -> tuple[DataFrame, int | None]:
+        """One stage step: on resume, reuse the committed table if it was
+        made from this corpus; else build the stage's frame, lay it out as
+        ``LAYOUT`` says, commit and read it back. Returns the committed frame
+        and the step's wall ms (None when the stage was reused)."""
+        if (
+            resume
+            and self.catalog.exists(stage)
+            and self.catalog.manifest(stage).get("input_fingerprint") == fingerprint
+        ):
+            return self.catalog.read(stage), None
+        start = time.monotonic()
+        partition_by, sort_by = LAYOUT[stage]
+        df = build()
         if sort_by:
-            # within-file sort order (≙ Iceberg sort order / Qdrant payload
-            # index, SURVEY.md §2.1): clusters equal keys so parquet
-            # min/max stats prune row groups on point lookups
-            df = df.sortWithinPartitions(*sort_by)
+            df = df.repartition(*partition_by).sortWithinPartitions(*sort_by)
         self.catalog.write(
             stage, df, partition_by=partition_by, meta={"input_fingerprint": fingerprint}
         )
-        return self.catalog.read(stage)
-
-    def _record(
-        self, stage: str, timer: StageTimer, triple_counts: DataFrame | None = None
-    ) -> None:
-        # lineage rows of a committed stage are STASHED here and flushed in
-        # ONE append at the end of run(): per-stage appends were one tiny
-        # write job + parquet commit each on the same table (serialized
-        # under the lock), ~2.4 s of pure fixed overhead at bench size. The
-        # batched flush writes the identical rows (per-stage wall_ms captured
-        # now) in a single job.
-        with self._lineage_lock:
-            self._lineage_parts.append(
-                stage_lineage(
-                    self.run_id, stage, timer.ms(), self._rollup, triple_counts
-                )
-            )
-
-    def _flush_lineage(self) -> None:
-        with self._lineage_lock:
-            parts, self._lineage_parts = self._lineage_parts, []
-        if not parts:
-            return
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        self.catalog.append("lineage", out)
+        return self.catalog.read(stage), int((time.monotonic() - start) * 1000)
 
     def incremental_triples(self, files: DataFrame, prev_output: str) -> DataFrame:
         """Stage-1 input for an incremental run: reuse the previous run's
@@ -180,133 +162,87 @@ class Pipeline:
         resume: bool = False,
         incremental_from: str | None = None,
     ) -> dict[str, DataFrame]:
-        try:
-            return self._run(files, resume, incremental_from)
-        except BaseException:
-            # a failed stage must not lose the COMPLETED stages' audit rows —
-            # they're stashed for the end-of-run batched flush (see _record)
-            self._flush_lineage()
-            raise
-
-    def _run(
-        self,
-        files: DataFrame,
-        resume: bool,
-        incremental_from: str | None,
-    ) -> dict[str, DataFrame]:
         files = files.persist()
         # one content pass feeds the fingerprint AND every stage's lineage
-        self._rollup = input_rollup(files).persist()
-        fingerprint = _corpus_fingerprint(self._rollup)
+        rollup = input_rollup(files).persist()
+        intermediates = [files, rollup]
+        wall_ms: dict[str, int | None] = {}  # stage → commit ms, None if reused
+        tc = None
+        try:
+            fingerprint = _corpus_fingerprint(rollup)
 
-        # -- stage 1: extract ------------------------------------------------
-        t = StageTimer()
-        extract = not self._stage_valid("extracted", fingerprint, resume)
-        if extract:
-            stage1 = (
-                self.incremental_triples(files, incremental_from)
-                if incremental_from
-                else extract_triples(files)
-            )
-            triples = self._commit("extracted", stage1, fingerprint, partition_by=["pred"])
-        else:
-            triples = self.catalog.read("extracted")
-        triples = triples.persist()
-        # per-bucket counts of the committed triple table: the lineage
-        # triple_count of extracted, nodes and edges. Made here on the main
-        # thread, before the nodes/edges threads share it
-        tc = triple_rollup(triples).persist()
-        if extract:
-            self._record("extracted", t, tc)
-
-        # one featurized name-dimension table shared by linking and the
-        # canonical mapping — lazy, so resume-skipped stages never compute it
-        feats = name_features(triples).persist()
-
-        # -- stage 2: components ----------------------------------------------
-        if self._stage_valid("components", fingerprint, resume):
-            comps = self.catalog.read("components")
-        else:
-            t = StageTimer()
-            comps = self._commit(
-                "components",
-                connected_components(link_edges(triples, feats=feats)),
+            # -- stage 1: extract ---------------------------------------------
+            triples, wall_ms["extracted"] = self._stage(
+                "extracted",
+                lambda: (
+                    self.incremental_triples(files, incremental_from)
+                    if incremental_from
+                    else extract_triples(files)
+                ),
                 fingerprint,
+                resume,
             )
-            self._record("components", t)
+            triples = triples.persist()
+            # per-bucket counts of the committed triple table: the lineage
+            # triple_count of extracted, nodes and edges
+            tc = triple_rollup(triples).persist()
+            # one featurized name-dimension table shared by linking and the
+            # canonical mapping — lazy, so resume-skipped stages never compute it
+            feats = name_features(triples).persist()
+            intermediates += [tc, feats]
 
-        # triples + canonical columns. `components` is the linking checkpoint:
-        # the name → canonical mapping is one names-sized groupBy over it, so
-        # the linked triples stay in memory instead of being committed as a
-        # second copy of the triple table
-        linked = apply_linking(
-            triples, canonical_mapping(triples, comps, feats=feats)
-        ).persist()
+            # -- stage 2: components ------------------------------------------
+            comps, wall_ms["components"] = self._stage(
+                "components",
+                lambda: connected_components(link_edges(triples, feats=feats)),
+                fingerprint,
+                resume,
+            )
 
-        # -- stage 3: nodes / edges -------------------------------------------
-        # Both derive from the in-memory linked triples and write disjoint
-        # dirs, so when both are pending their build+write jobs run from two
-        # driver threads — the commits are dominated by many small serial
-        # steps (partitioned write of ~#langs × N_REPO_BUCKETS dirs, manifest,
-        # read-back) that overlap cleanly on an idle scheduler.
-        specs = {
-            "nodes": dict(
-                build=lambda: build_nodes(linked),
-                sort_by=["kind", "canonical"],
-            ),
-            "edges": dict(
-                build=lambda: build_edges(linked),
-                sort_by=["pred", "src"],
-            ),
-        }
-        results: dict[str, DataFrame] = {}
-        pending = []
-        for stage, spec in specs.items():
-            if self._stage_valid(stage, fingerprint, resume):
-                results[stage] = self.catalog.read(stage)
-            else:
-                pending.append((stage, spec))
+            # triples + canonical columns. `components` is the linking
+            # checkpoint: the name → canonical mapping is one names-sized
+            # groupBy over it, so the linked triples stay in memory instead of
+            # being committed as a second copy of the triple table
+            linked = apply_linking(
+                triples, canonical_mapping(triples, comps, feats=feats)
+            ).persist()
+            intermediates.append(linked)
 
-        errors: list[BaseException] = []
-
-        def _run(stage: str, spec: dict) -> None:
-            try:
-                t = StageTimer()
-                results[stage] = self._commit(
-                    stage,
-                    spec["build"](),
-                    fingerprint,
-                    partition_by=["lang", "repo_bucket"],
-                    cluster_for_write=True,
-                    sort_by=spec["sort_by"],
+            # -- stage 3: nodes / edges ---------------------------------------
+            # Both derive from the in-memory linked triples and write disjoint
+            # dirs, so their build+write jobs run from two driver threads: the
+            # commits are dominated by many small serial steps (partitioned
+            # write of ~#langs × N_REPO_BUCKETS dirs, manifest, read-back)
+            # that overlap cleanly on an idle scheduler (one after the other
+            # measured slower, median 19.73 s → 23.28 s on build_bulk).
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                futures = {
+                    stage: pool.submit(self._stage, stage, build, fingerprint, resume)
+                    for stage, build in (
+                        ("nodes", lambda: build_nodes(linked)),
+                        ("edges", lambda: build_edges(linked)),
+                    )
+                }
+            graph = {}
+            for stage, future in futures.items():
+                if future.exception() is None:
+                    graph[stage], wall_ms[stage] = future.result()
+            for future in futures.values():
+                future.result()  # re-raises the first failure
+        finally:
+            # the audit rows of every stage this run committed, failed runs
+            # included, in one append — before the roll-ups they read go
+            committed = {s: ms for s, ms in wall_ms.items() if ms is not None}
+            if committed:
+                self.catalog.append(
+                    "lineage",
+                    stage_lineage(
+                        self.run_id, committed, rollup, tc, no_triples=("components",)
+                    ),
                 )
-                self._record(stage, t, tc)
-            except BaseException as e:  # re-raised on the caller thread
-                errors.append(e)
-
-        if len(pending) > 1:
-            threads = [
-                threading.Thread(target=_run, args=(stage, spec))
-                for stage, spec in pending
-            ]
-            for th in threads:
-                th.start()
-            for th in threads:
-                th.join()
-        else:
-            for stage, spec in pending:
-                _run(stage, spec)
-        if errors:
-            raise errors[0]
-        self._flush_lineage()  # before the roll-ups' unpersist: lineage reads them
-        for df in (files, self._rollup, tc, linked):
-            df.unpersist()
-        return {
-            "extracted": triples,
-            "components": comps,
-            "nodes": results["nodes"],
-            "edges": results["edges"],
-        }
+            for df in intermediates:
+                df.unpersist()
+        return {"extracted": triples, "components": comps, **graph}
 
 
 def main() -> None:

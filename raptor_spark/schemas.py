@@ -46,15 +46,6 @@ TRIPLES_SCHEMA = StructType(
     ]
 )
 
-# Stage-2 output: triples + canonicalized symbol names.
-LINKED_SCHEMA = StructType(
-    TRIPLES_SCHEMA.fields
-    + [
-        StructField("subj_canonical", StringType(), True),
-        StructField("obj_canonical", StringType(), True),
-    ]
-)
-
 NODES_SCHEMA = StructType(
     [
         StructField("id", StringType(), False),

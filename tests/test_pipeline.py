@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from raptor_spark.pipeline import STAGES, Pipeline
+from raptor_spark.schemas import FILES_SCHEMA, LINEAGE_SCHEMA
 
 
 @pytest.fixture(scope="module")
@@ -46,6 +47,9 @@ def test_lineage_rows_written(spark, files_df, run_dir, first_run):
     # linked triples are never committed
     assert first_run["tables"] == {"extracted", "components", "nodes", "edges", "lineage"}
     lineage = Pipeline(spark, run_dir).catalog.read("lineage")
+    assert [(f.name, f.dataType) for f in lineage.schema] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA
+    ]
     first = lineage.filter(F.col("run_id") == first_run["run_id"])
     triple_counts = {
         r.stage: r.n
@@ -74,8 +78,6 @@ def test_incremental_run_equals_full_run(
     (b) produce byte-identical extracted/nodes/edges to a from-scratch run
     on v2 — the checksum short-circuit as a correctness-preserving
     optimization."""
-    from raptor_spark.schemas import FILES_SCHEMA
-
     v2 = [dict(r) for r in corpus_rows[:-20]]
     for r in v2[:10]:
         r["content"] = (r["content"] or "") + "\n# touched in v2\n"
@@ -116,7 +118,6 @@ def test_incremental_lang_change_reextracts(spark, tmp_path_factory):
     stale-lang triples and diverges from a from-scratch run)."""
     from raptor_spark.catalog import Catalog
     from raptor_spark.extract import extract_triples
-    from raptor_spark.schemas import FILES_SCHEMA
 
     v1 = [
         {"repo": "o/r", "path": "a.py", "commit": "c" * 8, "lang": "python",
@@ -162,22 +163,43 @@ def test_nodes_edges_shapes(spark, run_dir, first_run):
     assert {"lang", "repo_bucket"} <= set(nodes.columns)
 
 
+def test_run_leaves_only_extracted_cached(spark, corpus_rows, tmp_path_factory):
+    """A run unpersists every intermediate it cached; the only plan it
+    leaves in the session's cache is the returned ``extracted`` frame."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    files = spark.createDataFrame(corpus_rows[:60], schema=FILES_SCHEMA)
+    before = cache.cachedData().size()
+    out = Pipeline(spark, str(tmp_path_factory.mktemp("kg_cache"))).run(files)
+    assert cache.cachedData().size() == before + 1
+    assert out["extracted"].is_cached
+    out["extracted"].unpersist()
+
+
+@pytest.mark.parametrize(
+    "failing, completed",
+    [
+        ("link_edges", {"extracted"}),
+        # a graph stage fails in its worker thread while its sibling commits
+        ("build_edges", {"extracted", "components", "nodes"}),
+    ],
+    ids=["link_edges", "build_edges"],
+)
 def test_failed_stage_preserves_completed_lineage(
-    spark, files_df, tmp_path_factory, monkeypatch
+    spark, files_df, tmp_path_factory, monkeypatch, failing, completed
 ):
-    """A stage failure must still flush the COMPLETED stages' stashed
-    lineage rows (the batched flush's crash-path contract)."""
+    """A stage failure re-raises, and the lineage rows of the stages that
+    committed before it are still appended."""
     import raptor_spark.pipeline as pl
 
     out_dir = str(tmp_path_factory.mktemp("kg_fail"))
 
-    def boom(triples, **kwargs):
-        raise RuntimeError("injected link failure")
+    def boom(*args, **kwargs):
+        raise RuntimeError(f"injected {failing} failure")
 
-    monkeypatch.setattr(pl, "link_edges", boom)
+    monkeypatch.setattr(pl, failing, boom)
     p = Pipeline(spark, out_dir)
-    with pytest.raises(RuntimeError, match="injected link failure"):
+    with pytest.raises(RuntimeError, match=f"injected {failing} failure"):
         p.run(files_df)
     lineage = p.catalog.read("lineage")
     stages = {r.stage for r in lineage.select("stage").distinct().collect()}
-    assert stages == {"extracted"}
+    assert stages == completed
