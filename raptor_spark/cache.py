@@ -36,7 +36,39 @@ import os
 import threading
 import time
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
+
+_FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+_PATHS_PER_ANSWER = 32  # file paths fetched per py4j answer. An answer over
+# 8 KB stalls ~40 ms (the JVM's Nagle wait against Python's delayed ACK):
+# measured, the 97 paths (~14 KB) of a serve-graph table took 44 ms in one
+# answer, 21 ms one call per path, and 2 ms in answers of 32.
+
+
+def _input_files(analyzed) -> list[str]:
+    """Sorted distinct data files of the file-source relations in an
+    analyzed plan and its subquery plans, a chunk of paths per py4j
+    answer rather than one call per file."""
+    array_seq = JavaClass("scala.collection.immutable.ArraySeq", analyzed._gateway_client)
+
+    def seq(s) -> list:
+        return [s.apply(i) for i in range(s.size())]
+
+    files: set[str] = set()
+    for plan in [analyzed, *seq(analyzed.subqueriesAll())]:
+        for leaf in seq(plan.collectLeaves()):
+            if leaf.getClass().getSimpleName() != "LogicalRelation":
+                continue
+            rel = leaf.relation()
+            if rel.getClass().getName() != _FS_RELATION:
+                continue
+            paths = array_seq.unsafeWrapArray(rel.inputFiles())
+            for i in range(0, paths.length(), _PATHS_PER_ANSWER):
+                chunk = paths.slice(i, i + _PATHS_PER_ANSWER).mkString("\x00")
+                files.update(chunk.split("\x00"))
+    return sorted(files)
+
 
 def plan_key(df: DataFrame, extra: str | None = None) -> str:
     """sha256 of the CANONICALIZED analyzed logical plan plus the plan's
@@ -46,11 +78,20 @@ def plan_key(df: DataFrame, extra: str | None = None) -> str:
     inside string literals and collide distinct queries (``= 'a#1'`` vs
     ``= 'a#2'``) into one cache entry, silently serving the wrong result.
     The canonicalized string, however, ELIDES the file-source location
-    (two same-schema parquet dirs print identically), so the sorted
-    ``df.inputFiles()`` list is hashed in explicitly — which is also the
+    (two same-schema parquet dirs print identically), so the sorted input
+    file list is hashed in explicitly — which is also the
     snapshot-invalidation mechanism: a Catalog commit writes a new
     ``data-<n>`` dir, so the same query over a re-committed table keys
     fresh (gated in test_cache.py).
+
+    The files come from the ANALYZED plan's ``HadoopFsRelation`` leaves
+    (subqueries included), not from ``df.inputFiles()``: that reads the
+    optimized plan, where a persisted subtree (``df.persist()``, or a
+    current read ``Catalog.read`` holds in memory) is an
+    ``InMemoryRelation`` with no files. Keyed that way, the same query
+    over two snapshots of a held table hashed identically and the cache
+    served the old snapshot's rows, and ``df`` and ``df.persist()`` keyed
+    apart.
 
     Driver-local data is NOT keyable this way: ``createDataFrame`` plans
     print as ``LogicalRDD [none#0L, ...]`` (SQL VALUES as ``LocalRelation``)
@@ -61,9 +102,8 @@ def plan_key(df: DataFrame, extra: str | None = None) -> str:
     ``extra`` — a string that pins down that data (the SemanticQueryCache
     passes the JSON of its query vector); without it this raises rather
     than risk a wrong-result hit."""
-    plan = (
-        df._jdf.queryExecution().analyzed().canonicalized().toString()  # type: ignore[operator]
-    )
+    analyzed = df._jdf.queryExecution().analyzed()  # type: ignore[operator]
+    plan = analyzed.canonicalized().toString()
     if extra is None and ("LogicalRDD" in plan or "LocalRelation" in plan):
         raise ValueError(
             "plan contains driver-local data (LogicalRDD/LocalRelation) that "
@@ -71,7 +111,7 @@ def plan_key(df: DataFrame, extra: str | None = None) -> str:
             "JSON dump of the local rows"
         )
     h = hashlib.sha256(plan.encode())
-    for f in sorted(df.inputFiles()):
+    for f in _input_files(analyzed):
         h.update(b"\x00")
         h.update(f.encode())
     if extra is not None:

@@ -99,22 +99,25 @@ class Pipeline:
         """One stage step: on resume, reuse the committed table if it was
         made from this corpus; else build the stage's frame, lay it out as
         ``LAYOUT`` says, commit and read it back. Returns the committed frame
-        and the step's wall ms (None when the stage was reused)."""
-        if (
-            resume
-            and self.catalog.exists(stage)
-            and self.catalog.manifest(stage).get("input_fingerprint") == fingerprint
-        ):
-            return self.catalog.read(stage), None
+        and the step's wall ms (None when the stage was reused). Both reads
+        name the snapshot id, so the catalog never holds a build's tables in
+        memory."""
+        if resume and self.catalog.exists(stage):
+            m = self.catalog.manifest(stage)
+            if m.get("input_fingerprint") == fingerprint:
+                return self.catalog.read(stage, snapshot=m["snapshot_id"]), None
         start = time.monotonic()
         partition_by, sort_by = LAYOUT[stage]
         df = build()
         if sort_by:
             df = df.repartition(*partition_by).sortWithinPartitions(*sort_by)
-        self.catalog.write(
+        m = self.catalog.write(
             stage, df, partition_by=partition_by, meta={"input_fingerprint": fingerprint}
         )
-        return self.catalog.read(stage), int((time.monotonic() - start) * 1000)
+        return (
+            self.catalog.read(stage, snapshot=m["snapshot_id"]),
+            int((time.monotonic() - start) * 1000),
+        )
 
     def incremental_triples(self, files: DataFrame, prev_output: str) -> DataFrame:
         """Stage-1 input for an incremental run: reuse the previous run's
@@ -134,7 +137,10 @@ class Pipeline:
         """
         from raptor_spark.functions import sha256_col
 
-        prev_triples = Catalog(self.spark, prev_output).read("extracted")
+        prev = Catalog(self.spark, prev_output)
+        prev_triples = prev.read(
+            "extracted", snapshot=prev.manifest("extracted")["snapshot_id"]
+        )
         key = ["repo", "path", "lang", "sha256"]
         cur_keys = files.select(
             "repo", "path", "lang", sha256_col("content").alias("sha256")

@@ -111,6 +111,46 @@ def test_new_snapshot_invalidates_key(spark, tmp_path):
     assert (cache.misses, cache.hits) == (2, 1)
 
 
+def test_persisted_input_keys_by_snapshot(spark, tmp_path):
+    """A persisted input is an InMemoryRelation in the optimized plan, with
+    no files: the key must still name the snapshot's files, or the cache
+    serves the previous snapshot's result after a commit."""
+    from raptor_spark.catalog import Catalog
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    cache = QueryCache(spark, str(tmp_path / "qc"))
+    cat.write("t", spark.range(10).selectExpr("id", "id * 2 AS v"))
+
+    def q():
+        return (
+            cat.read("t")
+            .persist()
+            .groupBy((F.col("id") % 2).alias("k"))
+            .agg(F.sum("v").alias("s"))
+        )
+
+    k1 = plan_key(q())
+    assert sorted(map(tuple, cache.get_or_compute(q()).collect())) == [(0, 40), (1, 50)]
+    cat.write("t", spark.range(10).selectExpr("id", "id * 3 AS v"))
+    assert plan_key(q()) != k1
+    assert sorted(map(tuple, cache.get_or_compute(q()).collect())) == [(0, 60), (1, 75)]
+    cat.drop("t")
+
+
+def test_persist_does_not_change_key(spark):
+    def orders():
+        return spark.read.parquet(f"{SF_DIR}/orders.parquet").filter(F.col("o_totalprice") > 100)
+
+    key, count_key = plan_key(orders()), plan_key(orders().groupBy("o_orderpriority").count())
+    # fresh frames: a frame's optimized plan is fixed when first computed
+    held = orders().persist()
+    try:
+        assert plan_key(held) == key
+        assert plan_key(orders().groupBy("o_orderpriority").count()) == count_key
+    finally:
+        held.unpersist()
+
+
 def test_cached_queries_flag_wires_end_to_end(spark, tmp_path, monkeypatch):
     """__spark_entry__ read-path wiring: with RAPTOR_QUERY_CACHE_DIR set, a
     repeat invocation of a CACHED_QUERIES entry is a cache hit with identical

@@ -212,6 +212,110 @@ def test_prune_drops_pinned_frames(spark, tmp_path):
     assert sorted(sid for _table, sid in cat._pinned) == [2, 3]
 
 
+def _cached_plans(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
+def _small_table(spark, n=40):
+    return spark.range(n).withColumn("k", (F.col("id") % 4).cast("int"))
+
+
+def test_current_read_of_small_table_is_held(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path))
+    cat.write("t", _small_table(spark), partition_by=["k"])
+    held = cat.read("t")
+    assert held.is_cached
+    assert [tuple(r) for r in held.filter(F.col("id") == 7).collect()] == [(7, 3)]
+    assert _rows(held) == [(i, i % 4) for i in range(40)]
+    assert cat.read("t") is held
+    cat.drop("t")
+
+
+def test_read_by_snapshot_id_is_not_held(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path))
+    before = _cached_plans(spark)
+    m = cat.write("t", _small_table(spark))
+    df = cat.read("t", snapshot=m["snapshot_id"])
+    assert not df.is_cached and df.count() == 40
+    # merge and compact read the current snapshot without holding it
+    cat.merge("t", spark.range(40, 45).withColumn("k", F.lit(0)), key=["id"])
+    cat.compact("t")
+    assert _cached_plans(spark) == before
+
+
+def test_appended_table_is_not_held(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path))
+    before = _cached_plans(spark)
+    cat.append("log", spark.range(3))
+    assert "bytes" not in cat.manifest("log")
+    assert not cat.read("log").is_cached
+    cat.write("t", _small_table(spark))
+    assert cat.read("t").is_cached
+    cat.append("t", _small_table(spark, 4))
+    got = cat.read("t")
+    assert not got.is_cached and got.count() == 44
+    assert _cached_plans(spark) == before  # the held snapshot was released
+
+
+def test_table_over_the_cap_is_not_held(spark, tmp_path, monkeypatch):
+    cat = Catalog(spark, str(tmp_path))
+    m = cat.write("t", _small_table(spark))
+    monkeypatch.setattr(catalog_mod, "HOLD_MAX_BYTES", m["bytes"] - 1)
+    assert not cat.read("t").is_cached
+    monkeypatch.setattr(catalog_mod, "HOLD_MAX_BYTES", m["bytes"])
+    assert cat.read("t").is_cached
+    cat.drop("t")
+
+
+def test_new_commit_releases_held_frame(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path))
+    before = _cached_plans(spark)
+    cat.write("t", _small_table(spark))
+    old = cat.read("t")
+    assert _cached_plans(spark) == before + 1
+    cat.write("t", _small_table(spark, 8))
+    new = cat.read("t")
+    assert not old.is_cached and new.is_cached
+    assert _cached_plans(spark) == before + 1
+    assert new.count() == 8
+    cat.drop("t")
+
+
+def test_prune_releases_held_frame(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path), keep_snapshots=1)
+    before = _cached_plans(spark)
+    cat.write("t", _small_table(spark))
+    assert cat.read("t").is_cached
+    cat.write("t", _small_table(spark, 8))  # prunes snapshot 0
+    assert _cached_plans(spark) == before
+    assert [m["snapshot_id"] for m in cat.snapshots("t")] == [1]
+
+
+def test_drop_releases_held_and_pinned_frames(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path))
+    before = _cached_plans(spark)
+    m = cat.write("t", _small_table(spark))
+    assert cat.read("t").is_cached and cat.read("t", snapshot=m["snapshot_id"]).count() == 40
+    assert _cached_plans(spark) == before + 1
+    cat.drop("t")
+    assert _cached_plans(spark) == before
+    assert not cat._pinned and not cat.exists("t")
+
+
+def test_fresh_instance_sees_other_instance_commits(spark, tmp_path):
+    a, b = Catalog(spark, str(tmp_path)), Catalog(spark, str(tmp_path))
+    a.write("t", _small_table(spark))
+    assert a.read("t").is_cached
+    b.append("t", _small_table(spark, 4))
+    assert Catalog(spark, str(tmp_path)).read("t").count() == 44
+    assert a.read("t").count() == 44
+    b.write("t", _small_table(spark, 8))
+    assert _rows(Catalog(spark, str(tmp_path)).read("t")) == [(i, i % 4) for i in range(8)]
+    assert _rows(a.read("t")) == [(i, i % 4) for i in range(8)]
+    for cat in (a, b):
+        cat.drop("t")
+
+
 def _torn_pointer_json(monkeypatch):
     """Make every dump of the ``manifest.json`` pointer write half a
     document and then fail, as a crash mid-write would."""
