@@ -38,8 +38,10 @@ the result is independent of partitioning — SURVEY.md §7.4 risk 3.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructField, StructType
 
 MAX_ITERATIONS = 25
 JUMP_AFTER = 4  # plain min-propagation rounds before pointer jumping kicks in
@@ -48,10 +50,10 @@ DRIVER_CC_MAX_EDGES = 4_000_000  # ≤ this many distinct directed edges →
 # dimension is orders of magnitude smaller than the corpus, so small-to-mid
 # corpora produce edge sets where every distributed round (2 jobs each,
 # ~8-14 rounds) is pure fixed overhead — the same size-gated reasoning as
-# broadcast-join selection, using the sizing count the loop already pays
-# for. Measured THREE times on REAL alias graphs, interleaved A/B in one
-# session each time: 541k directed edges (1M-file corpus) driver 9.2 s vs
-# loop 35.4 s; 1.11M (2M files) driver 15.8 s vs loop 34.9-37.9 s;
+# broadcast-join selection (the gate is one capped collect of the raw
+# edge rows, see connected_components). Measured THREE times on REAL alias
+# graphs, interleaved A/B in one session each time: 541k directed edges
+# (1M-file corpus) driver 9.2 s vs loop 35.4 s; 1.11M (2M files) driver 15.8 s vs loop 34.9-37.9 s;
 # 2.42M (4M files) driver 28.6-33.4 s vs loop 92.0-95.4 s — identical
 # output every time. Driver time is linear (~12.5 s per 1M directed
 # rows); the loop is NOT flat past ~1M (each pointer-jumping round's work
@@ -64,8 +66,6 @@ DRIVER_CC_MAX_EDGES = 4_000_000  # ≤ this many distinct directed edges →
 # The 4M constant assumes that 8g driver: _driver_cc_edge_cap scales it
 # linearly down (500k edges/GiB) when spark.driver.memory is configured
 # smaller, so a 2g driver never collects an edge set sized for 8g.
-
-_EDGES_PER_GIB = DRIVER_CC_MAX_EDGES // 8  # the measured 8g sizing above
 
 
 def _parse_memory_gib(mem: str) -> float:
@@ -80,24 +80,30 @@ def _parse_memory_gib(mem: str) -> float:
     return float(m) / 1024
 
 
-def _driver_cc_edge_cap(spark) -> int:
-    """DRIVER_CC_MAX_EDGES scaled by the session's configured driver
-    memory: the 4M-edge gate was sized against the 8g default, so a
-    smaller driver gets a proportionally smaller cap (and anything
+def driver_memory_cap(spark, cap_at_8g: int) -> int:
+    """A driver-collect cap sized against the 8g default driver, scaled
+    linearly down by the session's configured spark.driver.memory, so a
+    smaller driver never collects a set sized for 8g (anything
     unparseable falls back to Spark's 1g default — conservative)."""
     try:
         mem = spark.conf.get("spark.driver.memory", "1g")
         gib = _parse_memory_gib(mem)
     except Exception:
         gib = 1.0
-    return min(DRIVER_CC_MAX_EDGES, max(0, int(gib * _EDGES_PER_GIB)))
+    return min(cap_at_8g, max(0, int(gib * (cap_at_8g // 8))))
 
 
-def _driver_union_find(sym: DataFrame) -> DataFrame:
-    """Union-find over a collected symmetric edge set; labels = min member
+def _driver_cc_edge_cap(spark) -> int:
+    """DRIVER_CC_MAX_EDGES scaled by the session's driver memory."""
+    return driver_memory_cap(spark, DRIVER_CC_MAX_EDGES)
+
+
+def _driver_union_find(edges: pd.DataFrame, dt: DataType, spark) -> DataFrame:
+    """Union-find over collected (a, b) edge rows; labels = min member
     (union-by-min keeps every root the minimum of its set, so root == the
     distributed loop's min-label fixpoint). Same output schema and values
-    as the loop.
+    as the loop. The rows need not be symmetric or distinct: union is
+    undirected and idempotent.
 
     Edge transfer rides Arrow BOTH ways (toPandas in, a pandas frame out
     through createDataFrame's Arrow path) instead of row-object
@@ -107,11 +113,6 @@ def _driver_union_find(sym: DataFrame) -> DataFrame:
     toPandas 0.8 s, row-list output 3.3 s → pandas output 2.8 s, the
     union-find loop itself 1.2 s — ~4 s serial saved per invocation,
     identical output (parity-pinned in tests/test_graph_ops.py)."""
-    import pandas as pd
-
-    from pyspark.sql.types import StructField, StructType
-
-    pdf = sym.toPandas()
     parent: dict = {}
 
     def find(x):
@@ -122,7 +123,7 @@ def _driver_union_find(sym: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in zip(pdf["src"].to_numpy(), pdf["dst"].to_numpy()):
+    for a, b in zip(edges["a"].to_numpy(), edges["b"].to_numpy()):
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -132,7 +133,6 @@ def _driver_union_find(sym: DataFrame) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
 
-    dt = sym.schema["src"].dataType
     schema = StructType(
         [StructField("name", dt, False), StructField("component", dt, False)]
     )
@@ -140,7 +140,7 @@ def _driver_union_find(sym: DataFrame) -> DataFrame:
     out = pd.DataFrame(
         {"name": names, "component": [find(v) for v in names]}
     )
-    return sym.sparkSession.createDataFrame(out, schema)
+    return spark.createDataFrame(out, schema)
 
 
 def connected_components(
@@ -153,12 +153,34 @@ def connected_components(
 
     ``driver_cc_max_edges=None`` (default) sizes the driver fast-path gate
     from the session's spark.driver.memory (_driver_cc_edge_cap); pass an
-    explicit value to pin it."""
+    explicit value to pin it. The gate reads the raw edge rows: each makes
+    at most two directed edges, so ≤ half the cap in rows keeps the
+    distinct directed edge set within the measured cap, and one
+    ``limit(rows + 1)`` collect both sizes the input and hands the driver
+    path its rows — no explode, distinct or count job."""
     if driver_cc_max_edges is None:
         driver_cc_max_edges = _driver_cc_edge_cap(edges.sparkSession)
+    max_rows = driver_cc_max_edges // 2
+    # persist BEFORE the sizing collect: over the cap, the collect otherwise
+    # computes the full (typically expensive, unpersisted) edge lineage
+    # once, and the loop a second time — measured 2× the whole linking
+    # stage at 100k files
+    edges = edges.select("a", "b").persist()
+    try:
+        head = edges.limit(max_rows + 1).toPandas()
+        if len(head) <= max_rows:
+            return _driver_union_find(
+                head, edges.schema["a"].dataType, edges.sparkSession
+            )
+        return _label_propagation(edges, max_iterations)
+    finally:
+        edges.unpersist()
+
+
+def _label_propagation(edges: DataFrame, max_iterations: int) -> DataFrame:
+    """The distributed loop of the module docstring over persisted edges."""
     # both directions in ONE pass over edges: a union of two selects scans
-    # the (typically unpersisted, expensive) edge lineage twice — at 100k
-    # files that recomputed the whole LSH linking stage a second time
+    # the edge lineage twice
     sym = (
         edges.select(
             F.explode(
@@ -170,26 +192,14 @@ def connected_components(
         )
         .select("e.src", "e.dst")
         .distinct()
+        .persist()  # every round joins it
     )
-    # persist BEFORE the sizing count: the count otherwise computes the full
-    # (typically expensive, unpersisted) edge lineage once, and filling the
-    # cache afterwards computes it a second time — measured 2× the whole
-    # linking stage at 100k files
-    sym = sym.persist()
-    n_sym = sym.count()  # materialize before the loop references it every round
-    if n_sym <= driver_cc_max_edges:
-        out = _driver_union_find(sym)
-        sym.unpersist()
-        return out
-
     labels = (
         sym.select(F.col("src").alias("name"))
         .distinct()
         .withColumn("component", F.col("name"))
         .localCheckpoint()
     )
-
-    from pyspark.sql import Observation
 
     prev_hash = None
     for i in range(max_iterations):
@@ -261,7 +271,7 @@ def merge_components(
     Singleton vertices survive as (name, name) self-edges.
 
     Parity with the from-scratch run is gated in
-    tests/test_cc.py::merge_components_equals_full_recompute.
+    tests/test_graph_ops.py::test_merge_components_equals_full_recompute.
     """
     star = labels.select(F.col("name").alias("a"), F.col("component").alias("b"))
     return connected_components(

@@ -8,7 +8,6 @@ from __future__ import annotations
 import json
 import os
 import types
-import uuid
 
 import pyspark.sql.functions as F
 import pytest
@@ -19,19 +18,6 @@ from raptor_spark.catalog import Catalog
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
-
-
-def _spark_jobs(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` starts on this thread."""
-    sc = spark.sparkContext
-    group = f"test-catalog-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_merge_is_keyed_upsert_and_idempotent(spark, tmp_path):
@@ -153,10 +139,11 @@ def test_diff_snapshots_identical_is_empty(spark, tmp_path):
     assert diff_snapshots(cat, "t", ["k"], old_snapshot=s1).count() == 0
 
 
-def test_pinned_read_of_unchanged_snapshot_runs_one_job(spark, tmp_path):
-    # 40 partition dirs: more than Spark lists on the driver, so resolving
-    # the table afresh would run a listing job (and inferring its schema
-    # another) before the lookup's own job
+def test_pinned_read_of_unchanged_snapshot_runs_one_job(spark, tmp_path, spark_jobs):
+    # 40 partition dirs. Resolving the table afresh would list them again
+    # (on the driver, see test_first_read_of_bucketed_snapshot_runs_no_job)
+    # and, without the manifest's schema, infer the schema in a job of its
+    # own; the pinned frame does neither, so only the lookup's job runs
     cat = Catalog(spark, str(tmp_path))
     df = spark.range(400).withColumn("k", (F.col("id") % 40).cast("int"))
     cat.write("t", df, partition_by=["k"])
@@ -165,8 +152,23 @@ def test_pinned_read_of_unchanged_snapshot_runs_one_job(spark, tmp_path):
         return cat.read("t").filter(F.col("id") == 7).collect()
 
     assert [tuple(r) for r in lookup()] == [(7, 7)]
-    assert _spark_jobs(spark, lookup) == 1
+    assert spark_jobs(lookup) == 1
     assert cat.read("t") is cat.read("t")
+
+
+def test_first_read_of_bucketed_snapshot_runs_no_job(spark, tmp_path, spark_jobs):
+    # the (lang, repo_bucket) fan-out of nodes/edges: 3 langs × 64 bucket
+    # dirs. At Spark's default listing threshold (32 dirs) each lang dir is
+    # listed by a Spark job; the session lists them on the driver
+    cat = Catalog(spark, str(tmp_path))
+    df = spark.range(3 * 64).select(
+        F.concat(F.lit("lang"), (F.col("id") % 3).cast("string")).alias("lang"),
+        (F.col("id") % 64).cast("int").alias("repo_bucket"),
+        F.col("id"),
+    )
+    m = cat.write("t", df, partition_by=["lang", "repo_bucket"])
+    assert spark_jobs(lambda: cat.read("t", snapshot=m["snapshot_id"])) == 0
+    assert cat.read("t", snapshot=m["snapshot_id"]).count() == 3 * 64
 
 
 def test_read_uses_committed_schema(spark, tmp_path):

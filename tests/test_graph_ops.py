@@ -162,6 +162,18 @@ def test_driver_union_find_matches_distributed_loop(spark):
     }
     assert fast == loop and len(fast) > 0
 
+    # the driver path reads raw edge rows: reversed and repeated pairs
+    # (and self-loops) must label exactly as the distinct edge set does
+    messy = [(a, b) for a, b in pairs if a != b]
+    messy += [(b, a) for a, b in messy[::3]] + messy[::5] + [(300, 300)]
+    me = _edges(spark, messy)
+    for cap in (10**6, 0):
+        got = {
+            (r.name, r.component)
+            for r in connected_components(me, driver_cc_max_edges=cap).collect()
+        }
+        assert got == fast | {(300, 300)}
+
     # string labels (the near_dup_clusters / link_edges domain)
     se = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("x", "y")], ["a", "b"]

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -14,6 +16,7 @@ from raptor_spark.oracle import (
     oracle_triples,
 )
 from raptor_spark.synth import ALIAS_CLUSTERS, HEAD_SYMBOLS
+from raptor_spark.tokenize import PRED_DEFINES
 
 
 @pytest.fixture(scope="module")
@@ -88,3 +91,94 @@ def test_name_features_matches_oracle(feats, corpus_rows):
     triples = oracle_triples(corpus_rows)
     assert {r.name for r in feats} == set(_canonical_names(triples))
     assert {r.name for r in feats if r.is_head} == _head_names(triples)
+
+
+# -- driver path vs distributed path ------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def parity_feats(spark):
+    """Defined names over four repos, featurized: three head names defined
+    everywhere (plus ``Main``, which links to the head ``main`` exactly),
+    same-nospace alias groups, fuzzy alias pairs, and 100
+    ``handle_request_payload_*`` names whose shared shingles fill LSH
+    buckets past MAX_BAND_BUCKET."""
+    heads = ["main", "init", "initialize_app"]
+    named = [
+        "Main", "fetchData", "fetch_data", "FetchData", "parseConfigFile",
+        "parse_config_files", "loadUserProfile", "load_user_profiles", "renderPage",
+        "initialize_apps",  # Jaccard .81 to a head: heads never link fuzzily
+    ]
+    crowd = [f"handle_request_payload_{a}{b}" for a in "abcd" for b in "abcdefghijklmnopqrstuvwxy"]
+    rows = [
+        (PRED_DEFINES, f"{name}@r{i}/m.py", f"r{i}")
+        for i in range(4)
+        for name in heads + (named + crowd if i == 0 else [])
+    ]
+    triples = spark.createDataFrame(rows, "pred string, obj string, repo string")
+    feats = name_features(triples).persist()
+    yield feats
+    feats.unpersist()
+
+
+def _pairs(df):
+    return {tuple(r) for r in df.collect()}
+
+
+def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
+    """Below and above the name cap, link_edges, connected_components and
+    canonical_mapping give identical rows — with and without the oversize
+    bucket drop."""
+    import raptor_spark.link as link
+
+    heads = {r.name for r in parity_feats.filter("is_head").collect()}
+    assert heads == {"main", "init", "initialize_app"}
+    sig = link._signatures(parity_feats).filter(~F.col("is_head")).toPandas()
+    buckets = Counter(
+        (ft, b, h)
+        for ft, bands in zip(sig["first_token"], sig["band_hashes"])
+        for b, h in enumerate(bands.tolist())
+    )
+    assert max(buckets.values()) > link.MAX_BAND_BUCKET
+
+    edge_sets = {}
+    for max_bucket in (link.MAX_BAND_BUCKET, 10**6):
+        monkeypatch.setattr(link, "MAX_BAND_BUCKET", max_bucket)
+        driver = link_edges(None, parity_feats, driver_link_max_names=10**6)
+        dist = link_edges(None, parity_feats, driver_link_max_names=0)
+        edge_sets[max_bucket] = _pairs(driver)
+        assert edge_sets[max_bucket] == _pairs(dist)
+
+        comps = connected_components(driver)
+        comps_dist = connected_components(dist, driver_cc_max_edges=0)
+        assert _pairs(comps) == _pairs(comps_dist)
+        assert _pairs(
+            canonical_mapping(None, comps, parity_feats, driver_link_max_names=10**6)
+        ) == _pairs(
+            canonical_mapping(None, comps_dist, parity_feats, driver_link_max_names=0)
+        )
+
+    capped, uncapped = edge_sets.values()
+    # the exact block: same-nospace groups, a head included
+    assert {("Main", "main"), ("FetchData", "fetchData"), ("FetchData", "fetch_data"),
+            ("fetchData", "fetch_data")} <= capped
+    # the fuzzy block
+    assert {("parseConfigFile", "parse_config_files"),
+            ("loadUserProfile", "load_user_profiles")} <= capped
+    # heads only link exactly
+    assert {p for p in uncapped if heads & set(p)} == {("Main", "main")}
+    # the oversize buckets were dropped: they held pairs no other bucket did
+    assert capped < uncapped
+
+
+def test_driver_linking_runs_few_jobs(spark, parity_feats, spark_jobs):
+    """Below the cap, the linking chain over materialized name features
+    runs a handful of Spark jobs: the signature collect, the edge collect,
+    and the (name, norm) and component collects."""
+    parity_feats.count()
+
+    def chain():
+        comps = connected_components(link_edges(None, parity_feats))
+        canonical_mapping(None, comps, parity_feats)
+
+    assert spark_jobs(chain) <= 4
