@@ -50,10 +50,11 @@ DRIVER_CC_MAX_EDGES = 4_000_000  # ≤ this many distinct directed edges →
 # dimension is orders of magnitude smaller than the corpus, so small-to-mid
 # corpora produce edge sets where every distributed round (2 jobs each,
 # ~8-14 rounds) is pure fixed overhead — the same size-gated reasoning as
-# broadcast-join selection (the gate is one capped collect of the raw
-# edge rows, see connected_components). Measured THREE times on REAL alias
+# broadcast-join selection (the gate is one capped count of the raw edge
+# rows, see connected_components). Measured THREE times on REAL alias
 # graphs, interleaved A/B in one session each time: 541k directed edges
-# (1M-file corpus) driver 9.2 s vs loop 35.4 s; 1.11M (2M files) driver 15.8 s vs loop 34.9-37.9 s;
+# (1M-file corpus) driver 9.2 s vs loop 35.4 s; 1.11M (2M files) driver
+# 15.8 s vs loop 34.9-37.9 s;
 # 2.42M (4M files) driver 28.6-33.4 s vs loop 92.0-95.4 s — identical
 # output every time. Driver time is linear (~12.5 s per 1M directed
 # rows); the loop is NOT flat past ~1M (each pointer-jumping round's work
@@ -91,6 +92,13 @@ def driver_memory_cap(spark, cap_at_8g: int) -> int:
     except Exception:
         gib = 1.0
     return min(cap_at_8g, max(0, int(gib * (cap_at_8g // 8))))
+
+
+def capped_count(df: DataFrame, cap: int) -> int:
+    """min(row count, cap + 1) in one Spark job: a capped collect of a
+    constant column, so sizing an input ships at most cap + 1 ints to the
+    driver and none of its rows (a plain count runs 2-3 jobs under AQE)."""
+    return len(df.limit(cap + 1).select(F.lit(1)).toPandas())
 
 
 def _driver_cc_edge_cap(spark) -> int:
@@ -153,24 +161,28 @@ def connected_components(
 
     ``driver_cc_max_edges=None`` (default) sizes the driver fast-path gate
     from the session's spark.driver.memory (_driver_cc_edge_cap); pass an
-    explicit value to pin it. The gate reads the raw edge rows: each makes
+    explicit value to pin it.
+
+    The gate sizes the raw edge rows with one capped count. Each row makes
     at most two directed edges, so ≤ half the cap in rows keeps the
-    distinct directed edge set within the measured cap, and one
-    ``limit(rows + 1)`` collect both sizes the input and hands the driver
-    path its rows — no explode, distinct or count job."""
+    distinct directed edge set within the measured cap. For distinct
+    ``a < b`` rows — link_edges output, the alias graphs the cap was
+    measured on, and the dedup and graph-operator pair sets — that is the
+    old distinct-edge gate exactly. Reversed, duplicate and self-loop rows
+    count in full, so such an input (merge_components' star carries one
+    self-loop row per component root) can go to the loop below the
+    distinct-edge cap, by at most a factor of two in rows."""
     if driver_cc_max_edges is None:
         driver_cc_max_edges = _driver_cc_edge_cap(edges.sparkSession)
     max_rows = driver_cc_max_edges // 2
-    # persist BEFORE the sizing collect: over the cap, the collect otherwise
-    # computes the full (typically expensive, unpersisted) edge lineage
-    # once, and the loop a second time — measured 2× the whole linking
-    # stage at 100k files
+    # persist BEFORE sizing: over the cap, the count otherwise computes the
+    # full (typically expensive, unpersisted) edge lineage once, and the
+    # loop a second time — measured 2× the whole linking stage at 100k files
     edges = edges.select("a", "b").persist()
     try:
-        head = edges.limit(max_rows + 1).toPandas()
-        if len(head) <= max_rows:
+        if capped_count(edges, max_rows) <= max_rows:
             return _driver_union_find(
-                head, edges.schema["a"].dataType, edges.sparkSession
+                edges.toPandas(), edges.schema["a"].dataType, edges.sparkSession
             )
         return _label_propagation(edges, max_iterations)
     finally:

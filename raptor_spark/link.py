@@ -29,16 +29,16 @@ for a 400-file build). Both paths read one JVM projection of the name
 features, ``_signatures`` (hashed shingles + band hashes per name), so they
 share every hash value:
 
-* driver path (names ≤ the driver-memory-scaled DRIVER_LINK_MAX_NAMES):
-  one ``limit(cap + 1)`` collect of the signature rows — also the size
-  gate — then the exact block, band buckets and Jaccard verify in driver
-  dicts. No shuffle; ``canonical_mapping`` likewise collects the
-  ``(name, norm)`` and component rows and takes the min on the driver.
+* driver path (names ≤ the driver-memory-scaled DRIVER_LINK_MAX_NAMES,
+  sized by one capped count): one collect of the signature rows, then the
+  exact block, band buckets and Jaccard verify in driver dicts. No shuffle.
 * distributed path (above the cap): the exact block is a self-join on
   ``nospace``; the fuzzy block is one bucket groupBy of (name, hsh, band)
   rows with the pair expansion and Jaccard verify fused into the bucket
   expression, then one distinct of the verified pairs and one of the
-  union. ``canonical_mapping`` is a join + groupBy + join over the names.
+  union.
+
+``canonical_mapping`` is a join + groupBy + join over the names on both.
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from raptor_spark.cc import driver_memory_cap
+from raptor_spark.cc import capped_count, driver_memory_cap
 from raptor_spark.functions import norm_identifier_col
 from raptor_spark.oracle import HEAD_SYMBOL_MAX_DF, JACCARD_THRESHOLD
 from raptor_spark.tokenize import PRED_CALLS, PRED_DEFINES, char_shingles, normalize_identifier
@@ -76,21 +76,24 @@ MAX_BAND_BUCKET = 64  # skew guard: an LSH bucket bigger than this means the
 #              the bucket (members keep their other N_BANDS-1 chances, and
 #              true alias pairs are still covered by the exact nospace block)
 
-DRIVER_LINK_MAX_NAMES = 50_000  # ≤ this many featurized names → link,
-# and map to canonicals, on the driver (sized for an 8g driver and scaled
-# down with spark.driver.memory like cc.DRIVER_CC_MAX_EDGES, so 12.5k names
-# at 2g). Measured at local[4], 2g driver, on generate_corpus_df corpora,
-# link_edges + connected_components + canonical_mapping over persisted
-# name features, two warm reps each, identical mappings:
-#   names   driver      distributed
-#     672   1.0–1.8 s   2.3–4.3 s
-#   16.0k   2.3–2.4 s   3.9–5.2 s
-#   31.8k   3.8–3.9 s   6.0–6.7 s
-#   63.6k   6.6–7.9 s   9.9–12.1 s
-# The driver step is serial Python, ~0.1 ms per name; the distributed path
-# runs ~20 jobs but gains with cores, so the cap stays well below the
-# 4-core crossover. Driver memory is ~3.7 KB per name (signature frame
-# 0.4 KB + buckets and shingle sets; 370 MB peak at 100k names).
+DRIVER_LINK_MAX_NAMES = 160_000  # ≤ this many featurized names → link on
+# the driver (sized for an 8g driver and scaled down with spark.driver.memory
+# like cc.DRIVER_CC_MAX_EDGES: 40k names at 2g). Driver memory sets the cap:
+# the link step may hold what cc's driver step holds at its own cap.
+# Measured in the driver process as the collected pandas frame plus the
+# step's tracemalloc peak: the link step takes 3.6 KB per name at 25k names
+# and 3.8 KB at 100k; the cc step 312 B per raw edge row at 250k and 1M
+# rows. cc's 8g cap of 2M raw rows is ~620 MB, which holds ~160k names.
+# Time does not bind below the cap on 4 cores. link_edges over persisted
+# features, local[4], 8g, two reps each:
+#   names   driver       distributed
+#     40k   3.3–4.4 s    3.9–8.4 s
+#    160k   9.6–10.5 s   11.5–12.5 s
+# The driver step is serial; the distributed path gains with cores and may
+# win below the cap on more than 4 cores (not measured). build_bulk (719
+# names, 2g driver) and bench.py's kg_pipeline (16k names) take the driver
+# path. BENCH/run_scaling.sh over 30k files (47.6k names) takes the driver
+# path at its 8g default and the distributed path with SCALING_DRIVER_MEM=2g.
 
 _NAME_FEATURES_SCHEMA = StructType(
     [
@@ -104,9 +107,6 @@ _NAME_FEATURES_SCHEMA = StructType(
 )
 _EDGE_SCHEMA = StructType(
     [StructField("a", StringType(), False), StructField("b", StringType(), False)]
-)
-_MAPPING_SCHEMA = StructType(
-    [StructField("name", StringType(), False), StructField("canonical", StringType(), True)]
 )
 
 
@@ -154,12 +154,6 @@ def name_features(triples: DataFrame) -> DataFrame:
         ).alias("is_head"),
     )
     return flagged.mapInPandas(_featurize, schema=_NAME_FEATURES_SCHEMA)
-
-
-def _driver_link_name_cap(spark, pinned: int | None) -> int:
-    """``pinned`` if given, else DRIVER_LINK_MAX_NAMES scaled by the
-    session's driver memory."""
-    return driver_memory_cap(spark, DRIVER_LINK_MAX_NAMES) if pinned is None else pinned
 
 
 def _minhash(seed: int):
@@ -239,34 +233,29 @@ def _driver_link_pairs(sig: pd.DataFrame) -> list[tuple[str, str]]:
     return sorted(pairs)
 
 
-def link_edges(
-    triples: DataFrame,
-    feats: DataFrame | None = None,
-    driver_link_max_names: int | None = None,
-) -> DataFrame:
+def link_edges(triples: DataFrame, feats: DataFrame | None = None) -> DataFrame:
     """(a, b) undirected link edges between defined names, a < b.
 
     ``feats`` — a precomputed (ideally persisted) ``name_features`` table;
     pass it when another consumer (``canonical_mapping``) shares the same
     name dimension so the distinct+featurize pass runs once per pipeline.
 
-    Up to the name cap (``driver_link_max_names``; None sizes it from
-    spark.driver.memory, see DRIVER_LINK_MAX_NAMES) the signature rows are
-    collected in one ``limit(cap + 1)`` job — which is also the size gate —
-    and blocked, bucketed and verified on the driver; above it the
-    distributed path runs. Both give the same edge set (parity-pinned in
-    tests/test_linking.py).
+    Up to the name cap (DRIVER_LINK_MAX_NAMES, scaled by spark.driver.memory)
+    the signature rows are collected in one job and blocked, bucketed and
+    verified on the driver; above it the distributed path runs. Both give
+    the same edge set (parity-pinned in tests/test_linking.py).
     """
     if feats is None:
         feats = name_features(triples).persist()
     spark = feats.sparkSession
-    cap = _driver_link_name_cap(spark, driver_link_max_names)
     sig = _signatures(feats)
-    rows = sig.limit(cap + 1).toPandas()
-    if len(rows) > cap:
+    # size the name set with a capped count: above the cap no signature is
+    # computed or collected on the way to the distributed path
+    cap = driver_memory_cap(spark, DRIVER_LINK_MAX_NAMES)
+    if capped_count(feats, cap) > cap:
         return _distributed_link_edges(feats, sig)
     return spark.createDataFrame(
-        pd.DataFrame(_driver_link_pairs(rows), columns=["a", "b"], dtype=object),
+        pd.DataFrame(_driver_link_pairs(sig.toPandas()), columns=["a", "b"], dtype=object),
         _EDGE_SCHEMA,
     )
 
@@ -281,12 +270,16 @@ def _distributed_link_edges(feats: DataFrame, sig: DataFrame) -> DataFrame:
     )
 
     # -- 2. fuzzy block: LSH band rows of the non-head names -----------------
+    # _outer: band_hashes is never null or empty, so the rows are the same,
+    # but a plain posexplode makes the optimizer infer a size(band_hashes) > 0
+    # filter and push it below the projection, which then computes all 32
+    # MinHashes twice (1.7× the signature stage, measured at local[1])
     bands = sig.filter(~F.col("is_head")).select(
         "name",
         "first_token",
         "nospace",
         "hsh",
-        F.posexplode("band_hashes").alias("band_id", "band_hash"),
+        F.posexplode_outer("band_hashes").alias("band_id", "band_hash"),
     )
 
     # -- 2b + 3 fused: capped-bucket collect_list expansion with the Jaccard
@@ -346,43 +339,20 @@ def _distributed_link_edges(feats: DataFrame, sig: DataFrame) -> DataFrame:
 
 
 def canonical_mapping(
-    triples: DataFrame,
-    components: DataFrame,
-    feats: DataFrame | None = None,
-    driver_link_max_names: int | None = None,
+    triples: DataFrame, components: DataFrame, feats: DataFrame | None = None
 ) -> DataFrame:
     """name → canonical, where canonical = min normalized name within the
     component (matches the oracle). ``components`` is (name, component) from
     raptor_spark.cc; names not in any component map to their own norm.
-    ``feats`` — optional shared ``name_features`` table (see link_edges).
-    Up to the name cap (as in ``link_edges``) the ``(name, norm)`` and
-    component rows are collected and the min taken on the driver."""
+    ``feats`` — optional shared ``name_features`` table (see link_edges)."""
     if feats is None:
         feats = name_features(triples)
     feats = feats.select("name", "norm")
-    spark = feats.sparkSession
-    cap = _driver_link_name_cap(spark, driver_link_max_names)
-    names = feats.limit(cap + 1).toPandas()
-    comps = (
-        components.select("name", "component").limit(cap + 1).toPandas()
-        if len(names) <= cap
-        else None
+    with_comp = feats.join(components, on="name", how="left").withColumn(
+        "component", F.coalesce(F.col("component"), F.col("name"))
     )
-    if comps is None or len(comps) > cap:
-        with_comp = feats.join(components, on="name", how="left").withColumn(
-            "component", F.coalesce(F.col("component"), F.col("name"))
-        )
-        canon = with_comp.groupBy("component").agg(F.min("norm").alias("canonical"))
-        return with_comp.join(canon, on="component").select("name", "canonical")
-
-    comp_of = dict(zip(comps["name"], comps["component"]))
-    comp = [comp_of.get(n, n) for n in names["name"]]
-    canon: dict = {}
-    for c, norm in zip(comp, names["norm"]):
-        if c not in canon or norm < canon[c]:
-            canon[c] = norm
-    out = pd.DataFrame({"name": names["name"], "canonical": [canon[c] for c in comp]})
-    return spark.createDataFrame(out, _MAPPING_SCHEMA)
+    canon = with_comp.groupBy("component").agg(F.min("norm").alias("canonical"))
+    return with_comp.join(canon, on="component").select("name", "canonical")
 
 
 def apply_linking(triples: DataFrame, mapping: DataFrame) -> DataFrame:

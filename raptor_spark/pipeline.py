@@ -206,10 +206,9 @@ class Pipeline:
             )
 
             # triples + canonical columns. `components` is the linking
-            # checkpoint: the name → canonical mapping is a names-sized min
-            # over it (on the driver below link.DRIVER_LINK_MAX_NAMES), so
-            # the linked triples stay in memory instead of being committed as
-            # a second copy of the triple table
+            # checkpoint: the name → canonical mapping is one names-sized
+            # groupBy over it, so the linked triples stay in memory instead of
+            # being committed as a second copy of the triple table
             linked = apply_linking(
                 triples, canonical_mapping(triples, comps, feats=feats)
             ).persist()

@@ -144,18 +144,18 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
     edge_sets = {}
     for max_bucket in (link.MAX_BAND_BUCKET, 10**6):
         monkeypatch.setattr(link, "MAX_BAND_BUCKET", max_bucket)
-        driver = link_edges(None, parity_feats, driver_link_max_names=10**6)
-        dist = link_edges(None, parity_feats, driver_link_max_names=0)
+        monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", 10**6)
+        driver = link_edges(None, parity_feats)
+        monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", 0)
+        dist = link_edges(None, parity_feats)
         edge_sets[max_bucket] = _pairs(driver)
         assert edge_sets[max_bucket] == _pairs(dist)
 
         comps = connected_components(driver)
         comps_dist = connected_components(dist, driver_cc_max_edges=0)
         assert _pairs(comps) == _pairs(comps_dist)
-        assert _pairs(
-            canonical_mapping(None, comps, parity_feats, driver_link_max_names=10**6)
-        ) == _pairs(
-            canonical_mapping(None, comps_dist, parity_feats, driver_link_max_names=0)
+        assert _pairs(canonical_mapping(None, comps, parity_feats)) == _pairs(
+            canonical_mapping(None, comps_dist, parity_feats)
         )
 
     capped, uncapped = edge_sets.values()
@@ -173,8 +173,8 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
 
 def test_driver_linking_runs_few_jobs(spark, parity_feats, spark_jobs):
     """Below the cap, the linking chain over materialized name features
-    runs a handful of Spark jobs: the signature collect, the edge collect,
-    and the (name, norm) and component collects."""
+    runs a handful of Spark jobs: a capped count and a collect each for the
+    signatures and the edges; the mapping stays lazy."""
     parity_feats.count()
 
     def chain():
