@@ -53,8 +53,7 @@ class Catalog:
     Layout: ``{root}/{table}/data-<n>/*.parquet`` + ``manifest-<n>.json`` per
     snapshot, plus ``manifest.json`` — the current-snapshot pointer, replaced
     atomically LAST so a crashed write never becomes current. A table
-    'exists' iff ``manifest.json`` does. Legacy tables (bare ``data/`` dir,
-    no snapshot_id) remain readable as snapshot 0.
+    'exists' iff ``manifest.json`` does.
 
     Reads are pinned to the committed snapshot: ``read`` re-reads the
     manifest on every call but returns the DataFrame this instance resolved
@@ -69,15 +68,15 @@ class Catalog:
     partitions and persisted in Spark's in-memory columnar cache, so once
     the first query fills it, each later query scans memory, not the
     snapshot's (often ~100, partition-split) parquet files. Held is a
-    snapshot committed by ``write``/``merge``/``compact`` when it is read
+    snapshot committed by ``write``/``merge`` when it is read
     as current, its ``append_seq`` is 0, and its manifest records
     ``bytes`` ≤ ``HOLD_MAX_BYTES``. Never held: reads by snapshot id,
     appended tables (lineage), manifests without ``bytes``. A held frame
     is released (unpersisted) when this instance resolves a newer commit
     of the table, when ``_prune`` deletes its snapshot, or when the table
-    is dropped. Builds read by snapshot id (``Pipeline``), and ``merge``/
-    ``compact`` read the current snapshot unheld, so a build never fills
-    the cache with tables it is about to replace.
+    is dropped. Builds read by snapshot id (``Pipeline``), and ``merge``
+    reads the current snapshot unheld, so a build never fills the cache
+    with tables it is about to replace.
     """
 
     def __init__(self, spark: SparkSession, root: str, keep_snapshots: int = 3):
@@ -114,11 +113,7 @@ class Catalog:
             if name.startswith("manifest-") and name.endswith(".json"):
                 with open(os.path.join(d, name)) as f:
                     out.append(json.load(f))
-        return sorted(out, key=lambda m: m.get("snapshot_id", 0))
-
-    def _data_dir(self, table: str, snapshot: int | None = None) -> str:
-        m = self.manifest(table, snapshot)
-        return os.path.join(self._dir(table), m.get("data_dir", "data"))
+        return sorted(out, key=lambda m: m["snapshot_id"])
 
     def write(
         self,
@@ -133,7 +128,7 @@ class Catalog:
         d = self._dir(table)
         os.makedirs(d, exist_ok=True)
         prev = self.manifest(table) if self.exists(table) else None
-        sid = (prev.get("snapshot_id", 0) + 1) if prev else 0
+        sid = prev["snapshot_id"] + 1 if prev else 0
         data = os.path.join(d, f"data-{sid}")
         if os.path.exists(data):  # crashed uncommitted attempt
             shutil.rmtree(data)
@@ -145,7 +140,7 @@ class Catalog:
             "table": table,
             "snapshot_id": sid,
             "data_dir": f"data-{sid}",
-            "parent_snapshot_id": prev.get("snapshot_id") if prev else None,
+            "parent_snapshot_id": prev["snapshot_id"] if prev else None,
             "committed_at": time.time(),
             "partition_by": partition_by or [],
             "schema": df.schema.json(),
@@ -173,10 +168,7 @@ class Catalog:
         for m in self.snapshots(table):
             sid = m["snapshot_id"]
             if sid not in keep:
-                shutil.rmtree(
-                    os.path.join(self._dir(table), m.get("data_dir", "data")),
-                    ignore_errors=True,
-                )
+                shutil.rmtree(os.path.join(self._dir(table), m["data_dir"]), ignore_errors=True)
                 os.remove(self._manifest_path(table, sid))
                 self._pinned.pop((table, sid), None)
                 held = self._held.get(table)
@@ -191,11 +183,7 @@ class Catalog:
         if self.exists(table):
             prev = self.manifest(table)
             prev.pop("bytes", None)  # the appended files are not counted
-            manifest = {
-                **prev,
-                "snapshot_id": prev.get("snapshot_id", 0),
-                "append_seq": prev.get("append_seq", 0) + 1,
-            }
+            manifest = {**prev, "append_seq": prev.get("append_seq", 0) + 1}
         else:
             manifest = {
                 "table": table,
@@ -205,7 +193,7 @@ class Catalog:
             }
             # files of a crashed first append that never committed
             shutil.rmtree(os.path.join(self._dir(table), "data-0"), ignore_errors=True)
-        data = os.path.join(self._dir(table), manifest.get("data_dir", "data"))
+        data = os.path.join(self._dir(table), manifest["data_dir"])
         w = df.write.mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -241,32 +229,6 @@ class Catalog:
         )
         return self.write(table, merged, partition_by=partition_by, meta=meta)
 
-    def compact(self, table: str, target_files_per_partition: int = 1) -> dict:
-        """Rewrite the current snapshot with bin-packed files — the
-        small-files maintenance op (Iceberg rewrite_data_files). Appends and
-        many-task writes accumulate tiny parquet files whose per-file open
-        cost dominates scans at scale; compaction coalesces each partition
-        to ``target_files_per_partition`` and commits the result as a new
-        snapshot, so the pre-compaction data stays time-travelable until
-        retention prunes it. Row content is unchanged (asserted in tests)."""
-        m = self.manifest(table)
-        cur = self._frame(table, m)
-        partition_by = m.get("partition_by") or None
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            # hash-cluster by the partition columns: each partition value
-            # lands in exactly one task → one file per dir, written in
-            # parallel across dirs (no single-task coalesce bottleneck)
-            packed = cur.repartition(*[F.col(c) for c in partition_by])
-        else:
-            packed = cur.coalesce(max(1, target_files_per_partition))
-        return self.write(table, packed, partition_by=partition_by)
-
-    def data_files(self, table: str, snapshot: int | None = None) -> list[str]:
-        """Parquet data files of a snapshot (maintenance introspection)."""
-        return _parquet_files(self._data_dir(table, snapshot))
-
     def read(self, table: str, snapshot: int | None = None) -> DataFrame:
         """Current table, or a retained snapshot pinned by id (time travel).
         Returns the frame this instance resolved for the commit the manifest
@@ -281,21 +243,21 @@ class Catalog:
 
     def _frame(self, table: str, m: dict) -> DataFrame:
         """The pinned frame of the commit manifest ``m`` names."""
-        key = (table, m.get("snapshot_id", 0))
-        stamp = (m.get("append_seq", 0), m.get("committed_at"))
+        key = (table, m["snapshot_id"])
+        stamp = (m.get("append_seq", 0), m["committed_at"])
         pinned = self._pinned.get(key)
         if pinned is None or pinned[0] != stamp:
             reader = self.spark.read
             if "schema" in m:
                 reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
-            df = reader.parquet(os.path.join(self._dir(table), m.get("data_dir", "data")))
+            df = reader.parquet(os.path.join(self._dir(table), m["data_dir"]))
             pinned = self._pinned[key] = (stamp, df)
         return pinned[1]
 
     def _hold(self, table: str, m: dict, df: DataFrame) -> DataFrame:
         """``df`` (the current commit ``m`` names) held in memory when the
         rules of the class docstring allow it, else ``df`` itself."""
-        commit = (m.get("snapshot_id", 0), m.get("append_seq", 0), m.get("committed_at"))
+        commit = (m["snapshot_id"], m.get("append_seq", 0), m["committed_at"])
         held = self._held.get(table)
         if held is not None and held[0] == commit:
             return held[1]

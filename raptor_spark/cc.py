@@ -151,30 +151,22 @@ def _driver_union_find(edges: pd.DataFrame, dt: DataType, spark) -> DataFrame:
     return spark.createDataFrame(out, schema)
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = MAX_ITERATIONS,
-    driver_cc_max_edges: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(a, b) undirected → (name, component) where component is the min
     member name of the component. Vertices = all endpoint names.
 
-    ``driver_cc_max_edges=None`` (default) sizes the driver fast-path gate
-    from the session's spark.driver.memory (_driver_cc_edge_cap); pass an
-    explicit value to pin it.
-
-    The gate sizes the raw edge rows with one capped count. Each row makes
-    at most two directed edges, so ≤ half the cap in rows keeps the
-    distinct directed edge set within the measured cap. For distinct
-    ``a < b`` rows — link_edges output, the alias graphs the cap was
-    measured on, and the dedup and graph-operator pair sets — that is the
-    old distinct-edge gate exactly. Reversed, duplicate and self-loop rows
-    count in full, so such an input (merge_components' star carries one
-    self-loop row per component root) can go to the loop below the
-    distinct-edge cap, by at most a factor of two in rows."""
-    if driver_cc_max_edges is None:
-        driver_cc_max_edges = _driver_cc_edge_cap(edges.sparkSession)
-    max_rows = driver_cc_max_edges // 2
+    The driver fast path's gate is DRIVER_CC_MAX_EDGES scaled by the
+    session's spark.driver.memory (_driver_cc_edge_cap). It sizes the raw
+    edge rows with one capped count. Each row makes at most two directed
+    edges, so ≤ half the cap in rows keeps the distinct directed edge set
+    within the measured cap. For distinct ``a < b`` rows — link_edges
+    output, the alias graphs the cap was measured on, and the dedup and
+    graph-operator pair sets — that is the old distinct-edge gate exactly.
+    Reversed, duplicate and self-loop rows count in full, so such an input
+    (merge_components' star carries one self-loop row per component root)
+    can go to the loop below the distinct-edge cap, by at most a factor of
+    two in rows."""
+    max_rows = _driver_cc_edge_cap(edges.sparkSession) // 2
     # persist BEFORE sizing: over the cap, the count otherwise computes the
     # full (typically expensive, unpersisted) edge lineage once, and the
     # loop a second time — measured 2× the whole linking stage at 100k files
@@ -184,12 +176,12 @@ def connected_components(
             return _driver_union_find(
                 edges.toPandas(), edges.schema["a"].dataType, edges.sparkSession
             )
-        return _label_propagation(edges, max_iterations)
+        return _label_propagation(edges)
     finally:
         edges.unpersist()
 
 
-def _label_propagation(edges: DataFrame, max_iterations: int) -> DataFrame:
+def _label_propagation(edges: DataFrame) -> DataFrame:
     """The distributed loop of the module docstring over persisted edges."""
     # both directions in ONE pass over edges: a union of two selects scans
     # the edge lineage twice
@@ -214,7 +206,7 @@ def _label_propagation(edges: DataFrame, max_iterations: int) -> DataFrame:
     )
 
     prev_hash = None
-    for i in range(max_iterations):
+    for i in range(MAX_ITERATIONS):
         # propagate: min label among self and neighbors — ONE shuffle
         # (union + groupBy), not join-then-left-join
         contrib = sym.join(labels, sym.dst == labels.name).select(
@@ -263,13 +255,11 @@ def _label_propagation(edges: DataFrame, max_iterations: int) -> DataFrame:
         prev_hash = h
     sym.unpersist()
     raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} iterations"
+        f"connected_components did not converge in {MAX_ITERATIONS} iterations"
     )
 
 
-def merge_components(
-    labels: DataFrame, new_edges: DataFrame, max_iterations: int = MAX_ITERATIONS
-) -> DataFrame:
+def merge_components(labels: DataFrame, new_edges: DataFrame) -> DataFrame:
     """Incrementally fold new edges into an existing (name, component)
     labeling WITHOUT revisiting the old edge set.
 
@@ -286,6 +276,4 @@ def merge_components(
     tests/test_graph_ops.py::test_merge_components_equals_full_recompute.
     """
     star = labels.select(F.col("name").alias("a"), F.col("component").alias("b"))
-    return connected_components(
-        star.unionByName(new_edges.select("a", "b")), max_iterations
-    )
+    return connected_components(star.unionByName(new_edges.select("a", "b")))

@@ -239,25 +239,33 @@ def link_edges(triples: DataFrame, feats: DataFrame | None = None) -> DataFrame:
     ``feats`` — a precomputed (ideally persisted) ``name_features`` table;
     pass it when another consumer (``canonical_mapping``) shares the same
     name dimension so the distinct+featurize pass runs once per pipeline.
+    Without it, the features are built, persisted and released here.
 
     Up to the name cap (DRIVER_LINK_MAX_NAMES, scaled by spark.driver.memory)
     the signature rows are collected in one job and blocked, bucketed and
     verified on the driver; above it the distributed path runs. Both give
     the same edge set (parity-pinned in tests/test_linking.py).
     """
-    if feats is None:
+    owned = feats is None
+    if owned:
         feats = name_features(triples).persist()
-    spark = feats.sparkSession
-    sig = _signatures(feats)
-    # size the name set with a capped count: above the cap no signature is
-    # computed or collected on the way to the distributed path
-    cap = driver_memory_cap(spark, DRIVER_LINK_MAX_NAMES)
-    if capped_count(feats, cap) > cap:
-        return _distributed_link_edges(feats, sig)
-    return spark.createDataFrame(
-        pd.DataFrame(_driver_link_pairs(sig.toPandas()), columns=["a", "b"], dtype=object),
-        _EDGE_SCHEMA,
-    )
+    try:
+        spark = feats.sparkSession
+        sig = _signatures(feats)
+        # size the name set with a capped count: above the cap no signature
+        # is computed or collected on the way to the distributed path
+        cap = driver_memory_cap(spark, DRIVER_LINK_MAX_NAMES)
+        if capped_count(feats, cap) > cap:
+            edges = _distributed_link_edges(feats, sig)
+            # computed before the features it reads are released below
+            return edges.localCheckpoint() if owned else edges
+        return spark.createDataFrame(
+            pd.DataFrame(_driver_link_pairs(sig.toPandas()), columns=["a", "b"], dtype=object),
+            _EDGE_SCHEMA,
+        )
+    finally:
+        if owned:
+            feats.unpersist()
 
 
 def _distributed_link_edges(feats: DataFrame, sig: DataFrame) -> DataFrame:

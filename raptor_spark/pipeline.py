@@ -18,7 +18,7 @@ Stages:
                linking checkpoint: the triples' canonical columns are added
                in memory from a mapping rebuilt from it, never committed
   nodes / edges — final graph, partitioned (lang, repo_bucket), built and
-               committed from two driver threads
+               committed one after the other, each write using every core
 
 Run:  python -m raptor_spark.pipeline --input <files.parquet> --output <dir>
       [--resume] [--incremental-from <prev_dir>] [--master local[8]]
@@ -29,7 +29,6 @@ from __future__ import annotations
 import argparse
 import json
 import time
-from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,20 +53,23 @@ from raptor_spark.schemas import FILES_SCHEMA
 
 STAGES = ("extracted", "components", "nodes", "edges")
 
-# stage → (partition columns, within-file sort order) of its committed table.
-# Where a sort order is given, rows are first hash-clustered by the partition
-# columns so each output directory is written by one task instead of every
+# stage → (partition columns, clustered) of its committed table. A clustered
+# stage's rows are first hash-clustered by its partition columns, so each
+# output directory is written by one task, as one file, instead of every
 # task writing every directory (64 tasks × 64 dirs of ~20-row files measured
-# 18s of commit churn on the edges stage). The big pred-partitioned triple
-# table is NOT clustered: there the extra full shuffle costs more than the
-# committer saves. The sort order (≙ Iceberg sort order / Qdrant payload
-# index, SURVEY.md §2.1) clusters equal keys so parquet min/max stats prune
-# row groups on point lookups.
-LAYOUT: dict[str, tuple[list[str] | None, list[str] | None]] = {
-    "extracted": (["pred"], None),
-    "components": (None, None),
-    "nodes": (["lang", "repo_bucket"], ["kind", "canonical"]),
-    "edges": (["lang", "repo_bucket"], ["pred", "src"]),
+# 18s of commit churn on the edges stage). The clustering repartitions by
+# NUMBER, the session's default parallelism, so the write uses every core:
+# AQE coalesces a by-column repartition of a ~1 MB frame to one partition,
+# one task writing every file, and leaves a by-number one alone. No
+# within-file order is set: Spark's planned write sorts each task's rows by
+# the partition columns and drops any other sort beneath that. The big
+# pred-partitioned triple table is NOT clustered: there the extra full
+# shuffle costs more than the committer saves.
+LAYOUT: dict[str, tuple[list[str] | None, bool]] = {
+    "extracted": (["pred"], False),
+    "components": (None, False),
+    "nodes": (["lang", "repo_bucket"], True),
+    "edges": (["lang", "repo_bucket"], True),
 }
 
 
@@ -107,10 +109,10 @@ class Pipeline:
             if m.get("input_fingerprint") == fingerprint:
                 return self.catalog.read(stage, snapshot=m["snapshot_id"]), None
         start = time.monotonic()
-        partition_by, sort_by = LAYOUT[stage]
+        partition_by, clustered = LAYOUT[stage]
         df = build()
-        if sort_by:
-            df = df.repartition(*partition_by).sortWithinPartitions(*sort_by)
+        if clustered:
+            df = df.repartition(self.spark.sparkContext.defaultParallelism, *partition_by)
         m = self.catalog.write(
             stage, df, partition_by=partition_by, meta={"input_fingerprint": fingerprint}
         )
@@ -215,26 +217,13 @@ class Pipeline:
             intermediates.append(linked)
 
             # -- stage 3: nodes / edges ---------------------------------------
-            # Both derive from the in-memory linked triples and write disjoint
-            # dirs, so their build+write jobs run from two driver threads: the
-            # commits are dominated by many small serial steps (partitioned
-            # write of ~#langs × N_REPO_BUCKETS dirs, manifest, read-back)
-            # that overlap cleanly on an idle scheduler (one after the other
-            # measured slower, median 19.73 s → 23.28 s on build_bulk).
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futures = {
-                    stage: pool.submit(self._stage, stage, build, fingerprint, resume)
-                    for stage, build in (
-                        ("nodes", lambda: build_nodes(linked)),
-                        ("edges", lambda: build_edges(linked)),
-                    )
-                }
+            # both derive from the in-memory linked triples; each clustered
+            # write runs on every core (see LAYOUT), so they commit in turn
             graph = {}
-            for stage, future in futures.items():
-                if future.exception() is None:
-                    graph[stage], wall_ms[stage] = future.result()
-            for future in futures.values():
-                future.result()  # re-raises the first failure
+            for stage, build in (("nodes", build_nodes), ("edges", build_edges)):
+                graph[stage], wall_ms[stage] = self._stage(
+                    stage, lambda: build(linked), fingerprint, resume
+                )
         finally:
             # the audit rows of every stage this run committed, failed runs
             # included, in one append — before the roll-ups they read go

@@ -68,35 +68,6 @@ def test_retention_prunes_old_snapshots(spark, tmp_path):
     assert cat.read("t", snapshot=2).count() == 3
 
 
-def test_compact_preserves_rows_and_shrinks_files(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path))
-    df = spark.range(1000).repartition(16).withColumn("k", F.col("id") % 3)
-    cat.write("t", df)
-    for _ in range(3):  # simulate append churn → many small files
-        cat.append("t", spark.range(50).withColumn("k", F.col("id") % 3))
-    before_rows = _rows(cat.read("t"))
-    before_files = len(cat.data_files("t"))
-    m = cat.compact("t")
-    assert _rows(cat.read("t")) == before_rows
-    assert len(cat.data_files("t")) < before_files
-    # previous (uncompacted) snapshot still time-travelable
-    assert _rows(cat.read("t", snapshot=m["parent_snapshot_id"])) == before_rows
-
-
-def test_compact_partitioned_one_file_per_dir(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path))
-    df = spark.range(300).repartition(12).withColumn("k", (F.col("id") % 4).cast("int"))
-    cat.write("t", df, partition_by=["k"])
-    cat.compact("t")
-    files = cat.data_files("t")
-    import os
-    per_dir: dict[str, int] = {}
-    for f in files:
-        per_dir[os.path.dirname(f)] = per_dir.get(os.path.dirname(f), 0) + 1
-    assert per_dir and all(n == 1 for n in per_dir.values())
-    assert cat.read("t").count() == 300
-
-
 def test_append_then_write_preserves_history(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path))
     cat.append("log", spark.range(3))
@@ -239,9 +210,8 @@ def test_read_by_snapshot_id_is_not_held(spark, tmp_path):
     m = cat.write("t", _small_table(spark))
     df = cat.read("t", snapshot=m["snapshot_id"])
     assert not df.is_cached and df.count() == 40
-    # merge and compact read the current snapshot without holding it
+    # merge reads the current snapshot without holding it
     cat.merge("t", spark.range(40, 45).withColumn("k", F.lit(0)), key=["id"])
-    cat.compact("t")
     assert _cached_plans(spark) == before
 
 

@@ -139,7 +139,7 @@ def test_pagerank_sums_to_one(spark):
     assert abs(total - 1.0) < 1e-9
 
 
-def test_driver_union_find_matches_distributed_loop(spark):
+def test_driver_union_find_matches_distributed_loop(spark, monkeypatch):
     """The size-gated driver fast path (cc.DRIVER_CC_MAX_EDGES) must be
     row-for-row identical to the distributed label-propagation loop —
     including a long chain (pointer-jumping territory), a clique, bridges,
@@ -147,19 +147,19 @@ def test_driver_union_find_matches_distributed_loop(spark):
     semantics choice."""
     import random
 
+    import raptor_spark.cc as cc
+
+    def components(edges, cap):
+        monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", cap)
+        return {(r.name, r.component) for r in connected_components(edges).collect()}
+
     rng = random.Random(21)
     pairs = [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
     pairs += [(i, i + 1) for i in range(100, 140)]          # 41-node chain
     pairs += [(a, b) for a in range(200, 205) for b in range(a + 1, 205)]
     e = _edges(spark, [(a, b) for a, b in pairs if a != b])
-    fast = {
-        (r.name, r.component)
-        for r in connected_components(e, driver_cc_max_edges=10**6).collect()
-    }
-    loop = {
-        (r.name, r.component)
-        for r in connected_components(e, driver_cc_max_edges=0).collect()
-    }
+    fast = components(e, 10**6)
+    loop = components(e, 0)
     assert fast == loop and len(fast) > 0
 
     # the driver path reads raw edge rows: reversed and repeated pairs
@@ -168,20 +168,13 @@ def test_driver_union_find_matches_distributed_loop(spark):
     messy += [(b, a) for a, b in messy[::3]] + messy[::5] + [(300, 300)]
     me = _edges(spark, messy)
     for cap in (10**6, 0):
-        got = {
-            (r.name, r.component)
-            for r in connected_components(me, driver_cc_max_edges=cap).collect()
-        }
-        assert got == fast | {(300, 300)}
+        assert components(me, cap) == fast | {(300, 300)}
 
     # string labels (the near_dup_clusters / link_edges domain)
     se = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("x", "y")], ["a", "b"]
     )
-    fast_s = {
-        (r.name, r.component)
-        for r in connected_components(se, driver_cc_max_edges=10**6).collect()
-    }
+    fast_s = components(se, 10**6)
     assert fast_s == {
         ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")
     }
@@ -219,7 +212,7 @@ def test_driver_cc_edge_cap_scales_with_driver_memory(spark):
     assert _driver_cc_edge_cap(fake("not-a-size")) == DRIVER_CC_MAX_EDGES // 8
 
     # the real session resolves a positive cap and the default-gated path
-    # still matches the explicit-gate paths above
+    # still matches the pinned-gate paths above
     cap = _driver_cc_edge_cap(spark)
     assert 0 < cap <= DRIVER_CC_MAX_EDGES
     se = spark.createDataFrame([("b", "a"), ("c", "b")], ["a", "b"])

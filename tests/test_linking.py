@@ -129,6 +129,7 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
     """Below and above the name cap, link_edges, connected_components and
     canonical_mapping give identical rows — with and without the oversize
     bucket drop."""
+    import raptor_spark.cc as cc
     import raptor_spark.link as link
 
     heads = {r.name for r in parity_feats.filter("is_head").collect()}
@@ -151,8 +152,10 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
         edge_sets[max_bucket] = _pairs(driver)
         assert edge_sets[max_bucket] == _pairs(dist)
 
+        monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", 10**6)
         comps = connected_components(driver)
-        comps_dist = connected_components(dist, driver_cc_max_edges=0)
+        monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
+        comps_dist = connected_components(dist)
         assert _pairs(comps) == _pairs(comps_dist)
         assert _pairs(canonical_mapping(None, comps, parity_feats)) == _pairs(
             canonical_mapping(None, comps_dist, parity_feats)
@@ -182,3 +185,17 @@ def test_driver_linking_runs_few_jobs(spark, parity_feats, spark_jobs):
         canonical_mapping(None, comps, parity_feats)
 
     assert spark_jobs(chain) <= 4
+
+
+@pytest.mark.parametrize("max_names", [10**6, 0], ids=["driver", "distributed"])
+def test_link_edges_releases_its_own_features(spark, triples_df, monkeypatch, max_names):
+    """Called without ``feats``, link_edges releases the name features it
+    persisted, on either path, and the edges it returns stay readable."""
+    import raptor_spark.link as link
+
+    monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", max_names)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+    edges = link_edges(triples_df)
+    assert cache.cachedData().size() == before
+    assert edges.count() > 0

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import glob
 import os
+import uuid
 
 import pyspark.sql.functions as F
 import pytest
@@ -175,11 +177,47 @@ def test_run_leaves_only_extracted_cached(spark, corpus_rows, tmp_path_factory):
     out["extracted"].unpersist()
 
 
+def test_graph_writes_use_every_core_one_file_per_dir(
+    spark, corpus_rows, tmp_path_factory, monkeypatch
+):
+    """The last stage of the edges write runs one task per core, not one
+    task for the whole table, and every (lang, repo_bucket) directory of
+    the committed nodes and edges holds exactly one parquet file."""
+    sc = spark.sparkContext
+    out_dir = str(tmp_path_factory.mktemp("kg_layout"))
+    p = Pipeline(spark, out_dir)
+    write, group = p.catalog.write, f"edges-write-{uuid.uuid4().hex}"
+
+    def grouped_write(table, df, **kwargs):
+        if table != "edges":
+            return write(table, df, **kwargs)
+        sc.setJobGroup(group, group)
+        try:
+            return write(table, df, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(p.catalog, "write", grouped_write)
+    p.run(spark.createDataFrame(corpus_rows[:60], schema=FILES_SCHEMA))
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    tracker = sc.statusTracker()
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    last_stage = tracker.getStageInfo(max(write_job.stageIds))
+    assert last_stage.numTasks == sc.defaultParallelism > 1
+
+    for table in ("nodes", "edges"):
+        data = os.path.join(out_dir, table, p.catalog.manifest(table)["data_dir"])
+        dirs = glob.glob(os.path.join(data, "lang=*", "repo_bucket=*"))
+        assert len(dirs) > 1, table
+        for d in dirs:
+            assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+
+
 @pytest.mark.parametrize(
     "failing, completed",
     [
         ("link_edges", {"extracted"}),
-        # a graph stage fails in its worker thread while its sibling commits
+        # the edges stage fails after nodes committed
         ("build_edges", {"extracted", "components", "nodes"}),
     ],
     ids=["link_edges", "build_edges"],
