@@ -7,8 +7,14 @@ Runs one ``Pipeline.run`` in a fresh perfbench session over the corpus the
 tracer (which persists and counts inside every layer, so a traced build
 runs a longer plan). Then prints the build's wall time, its Spark job
 count, and one line per job and per stage read from Spark's status store:
-start offset and duration in ms, the call site, and the stage's task count
-and summed executor run time. Spark's stderr goes to stderr as usual.
+the pipeline stage the job ran in, start offset and duration in ms, the call
+site, and the stage's task count and summed executor run time. Last comes
+one line per pipeline stage: its wall time, its jobs and the summed
+executor run time of their stages. Jobs outside every ``Pipeline._stage``
+step (the input roll-up, the fingerprint, the canonical mapping) are
+labelled ``-``. The labels come from a job group this tool sets around each
+``Pipeline._stage`` call; the program sets none. Spark's stderr goes to
+stderr as usual.
 """
 
 from __future__ import annotations
@@ -31,6 +37,23 @@ def _seq(seq) -> list:
 
 def _ms(opt_date) -> int | None:
     return opt_date.get().getTime() if opt_date.isDefined() else None
+
+
+def _label_stages(pipeline_cls, sc, walls: dict[str, float]) -> None:
+    """Run each ``Pipeline._stage`` step under a job group named after its
+    stage, and record the step's wall seconds in ``walls``."""
+    step = pipeline_cls._stage
+
+    def grouped(self, stage, *args, **kwargs):
+        sc.setJobGroup(stage, f"pipeline stage {stage}")
+        start = time.perf_counter()
+        try:
+            return step(self, stage, *args, **kwargs)
+        finally:
+            walls[stage] = time.perf_counter() - start
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    pipeline_cls._stage = grouped
 
 
 def main() -> None:
@@ -60,6 +83,8 @@ def main() -> None:
         listener.waitUntilEmpty(60_000)
         store = sc._jsc.sc().statusStore()
         before = {j.jobId() for j in _seq(store.jobsList(None))}
+        walls: dict[str, float] = {}
+        _label_stages(Pipeline, sc, walls)
         t0_ms = int(time.time() * 1000)
         t0 = time.perf_counter()
         Pipeline(spark, str(workdir / "build")).run(files)
@@ -72,12 +97,16 @@ def main() -> None:
         )
         print(f"wall_s {wall:.3f}")
         print(f"spark_jobs {len(jobs)}")
-        print("job  start_ms    dur_ms  call site")
+        print("job  stage        start_ms    dur_ms  call site")
+        summary = {stage: [0, 0] for stage in (*walls, "-")}  # stage → [jobs, run ms]
         for j in jobs:
+            stage = j.jobGroup().get() if j.jobGroup().isDefined() else "-"
             start, end = _ms(j.submissionTime()), _ms(j.completionTime())
             print(
-                f"{j.jobId():>3} {start - t0_ms:>9} {end - start if end else -1:>9}  {j.name()}"
+                f"{j.jobId():>3}  {stage:<10} {start - t0_ms:>9} "
+                f"{end - start if end else -1:>9}  {j.name()}"
             )
+            summary[stage][0] += 1
             for sid in _seq(j.stageIds()):
                 try:
                     sd = store.lastStageAttempt(sid)
@@ -86,11 +115,17 @@ def main() -> None:
                 s_start, s_end = _ms(sd.submissionTime()), _ms(sd.completionTime())
                 if s_start is None:
                     continue
+                summary[stage][1] += sd.executorRunTime()
                 print(
                     f"      stage {sid:>4} {s_start - t0_ms:>9} "
                     f"{s_end - s_start if s_end else -1:>9}  tasks={sd.numTasks()} "
                     f"run_ms={sd.executorRunTime()}  {sd.name()}"
                 )
+        print("stage        wall_ms  jobs    run_ms")
+        outside = wall - sum(walls.values())
+        for stage, (n_jobs, run_ms) in summary.items():
+            stage_wall = walls.get(stage, outside)
+            print(f"{stage:<10} {stage_wall * 1000:>9.0f} {n_jobs:>5} {run_ms:>9}")
     finally:
         stop_session(spark)
         shutil.rmtree(workdir, ignore_errors=True)

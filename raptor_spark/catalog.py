@@ -25,7 +25,12 @@ import json
 import os
 import shutil
 import time
+import uuid
+from collections.abc import Callable, Iterator
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -40,11 +45,88 @@ HOLD_MAX_BYTES = 8 << 20  # ≤ this many committed parquet bytes → a current
 # MEMORY_AND_DISK level spills past it rather than failing.
 
 
+# the characters Spark's writer percent-escapes in a partition directory
+# name (ExternalCatalogUtils.escapePathName), and its name for a null or
+# empty value: a clustered write names its directories exactly as Spark's
+# writer would, so reads parse the same partition values back
+_PATH_ESCAPED = frozenset([chr(c) for c in range(1, 0x20)] + list("\"#%'*/:=?[\\]^{\x7f"))
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+_WRITTEN_SCHEMA = "path string, rows long, bytes long"
+
+
 def _parquet_files(path: str) -> list[str]:
     out = []
     for root, _dirs, names in os.walk(path):
         out.extend(os.path.join(root, n) for n in names if n.endswith(".parquet"))
     return sorted(out)
+
+
+def _escape_path_name(s: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in s)
+
+
+def _partition_segment(col: str, value: str | None) -> str:
+    """``col=value`` as Spark's writer names a partition directory."""
+    return f"{_escape_path_name(col)}={_escape_path_name(value) if value else _DEFAULT_PARTITION}"
+
+
+def _partition_dirs(batch: pa.RecordBatch, partition_by: list[str]) -> pa.DictionaryArray:
+    """The partition directory (``k1=v1/k2=v2``) of each row of ``batch``,
+    dictionary-encoded: each column is cast to string as Spark's writer
+    casts it, and only its distinct values are escaped in Python."""
+    segments = []
+    for col in partition_by:
+        values = pc.cast(batch.column(col), pa.string()).dictionary_encode()
+        names = pa.array(
+            [_partition_segment(col, v) for v in values.dictionary.to_pylist()], pa.string()
+        )
+        segments.append(
+            pc.fill_null(names.take(values.indices), _partition_segment(col, None))
+        )
+    return pc.binary_join_element_wise(*segments, "/").dictionary_encode()
+
+
+def _arrow_writer(
+    data_dir: str, partition_by: list[str]
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """The task function of a clustered write (``mapInArrow``): stream the
+    task's batches into hive-partitioned parquet under ``data_dir``, one
+    ``part-<task>-<uuid>.parquet`` file per partition value the task holds,
+    and return one ``(path relative to data_dir, rows, bytes)`` row per
+    file written (none for a task without rows)."""
+
+    def write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+
+        name = f"part-{TaskContext.get().partitionId():05d}-{uuid.uuid4().hex}.parquet"
+        writers: dict[str, pq.ParquetWriter] = {}
+        rows: dict[str, int] = {}
+        try:
+            for batch in batches:
+                dirs = _partition_dirs(batch, partition_by)
+                data = batch.drop_columns(partition_by)
+                for i, d in enumerate(dirs.dictionary.to_pylist()):
+                    part = data.filter(pc.equal(dirs.indices, i))
+                    if d not in writers:
+                        os.makedirs(os.path.join(data_dir, d), exist_ok=True)
+                        writers[d] = pq.ParquetWriter(os.path.join(data_dir, d, name), data.schema)
+                        rows[d] = 0
+                    writers[d].write_batch(part)
+                    rows[d] += part.num_rows
+        finally:
+            for w in writers.values():
+                w.close()
+        if writers:
+            paths = [os.path.join(d, name) for d in writers]
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "path": paths,
+                    "rows": [rows[d] for d in writers],
+                    "bytes": [os.path.getsize(os.path.join(data_dir, p)) for p in paths],
+                }
+            )
+
+    return write
 
 
 class Catalog:
@@ -54,6 +136,21 @@ class Catalog:
     snapshot, plus ``manifest.json`` — the current-snapshot pointer, replaced
     atomically LAST so a crashed write never becomes current. A table
     'exists' iff ``manifest.json`` does.
+
+    A clustered write (``write(..., clustered=True)``, the nodes/edges
+    layout) is written by the tasks, the way Iceberg's writers return
+    data-file descriptors to the driver: each task streams its Arrow batches
+    into one ``part-<task>-<uuid>.parquet`` file per partition value it
+    holds and returns ``(relative path, rows, bytes)`` per file. The driver
+    deletes every parquet file under the snapshot's data dir that no
+    successful task returned (a failed attempt's), records the list as the
+    manifest's ``files`` and their sum as ``bytes``, and then swaps the
+    manifest. Reads still open the data dir, not the list: a list of the
+    ~150 files of a nodes snapshot is more paths than the session's
+    parallel-discovery threshold (2 × N_REPO_BUCKETS), so Spark would list
+    them in a job. Caveat: a zombie task attempt that is still running after
+    the commit (speculation, a lost executor) could add a file to a
+    committed data dir, and a read would see it.
 
     Reads are pinned to the committed snapshot: ``read`` re-reads the
     manifest on every call but returns the DataFrame this instance resolved
@@ -121,10 +218,15 @@ class Catalog:
         df: DataFrame,
         partition_by: list[str] | None = None,
         meta: dict | None = None,
+        clustered: bool = False,
     ) -> dict:
         """Commit the DataFrame as a NEW snapshot of the table and make it
         current. Previous snapshots stay readable via ``read(table, n)``
-        until pruned by the retention policy."""
+        until pruned by the retention policy.
+
+        ``clustered`` (requires ``partition_by``): write through the tasks'
+        Arrow writers, one file per partition value, and list the files in
+        the manifest (see the class docstring); else Spark's writer."""
         d = self._dir(table)
         os.makedirs(d, exist_ok=True)
         prev = self.manifest(table) if self.exists(table) else None
@@ -132,10 +234,15 @@ class Catalog:
         data = os.path.join(d, f"data-{sid}")
         if os.path.exists(data):  # crashed uncommitted attempt
             shutil.rmtree(data)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data)
+        if clustered:
+            files = self._write_clustered(df, data, partition_by)
+            listed = {"bytes": sum(f["bytes"] for f in files), "files": files}
+        else:
+            w = df.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(data)
+            listed = {"bytes": sum(map(os.path.getsize, _parquet_files(data)))}
         manifest = {
             "table": table,
             "snapshot_id": sid,
@@ -144,12 +251,34 @@ class Catalog:
             "committed_at": time.time(),
             "partition_by": partition_by or [],
             "schema": df.schema.json(),
-            "bytes": sum(map(os.path.getsize, _parquet_files(data))),
+            **listed,
             **(meta or {}),
         }
         self._commit_manifest(table, manifest)
         self._prune(table, current=sid)
         return manifest
+
+    def _write_clustered(self, df: DataFrame, data: str, partition_by: list[str]) -> list[dict]:
+        """Write ``df`` under ``data`` from Arrow writers in the tasks and
+        return the files they wrote, sorted by path. The rows are
+        hash-clustered by the partition columns into the session's default
+        parallelism: by NUMBER, so AQE never coalesces the shuffle and the
+        write runs on every core, and each partition value lands in one
+        task, so each directory gets one file. Parquet files under ``data``
+        that no successful task returned (a failed attempt's) are deleted."""
+        os.makedirs(data)
+        n = self.spark.sparkContext.defaultParallelism
+        written = (
+            df.repartition(n, *partition_by)
+            .mapInArrow(_arrow_writer(os.path.abspath(data), partition_by), _WRITTEN_SCHEMA)
+            .collect()
+        )
+        files = sorted((r.asDict() for r in written), key=lambda f: f["path"])
+        keep = {f["path"] for f in files}
+        for path in _parquet_files(data):
+            if os.path.relpath(path, data) not in keep:
+                os.remove(path)
+        return files
 
     def _commit_manifest(self, table: str, manifest: dict) -> None:
         """Swap in the snapshot's manifest, then the current pointer, each

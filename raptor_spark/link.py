@@ -38,7 +38,8 @@ share every hash value:
   expression, then one distinct of the verified pairs and one of the
   union.
 
-``canonical_mapping`` is a join + groupBy + join over the names on both.
+``canonical_mapping`` takes the min ``norm`` per component in pandas over
+one collect below the same cap, and is a lazy join + groupBy + join above it.
 """
 
 from __future__ import annotations
@@ -107,6 +108,9 @@ _NAME_FEATURES_SCHEMA = StructType(
 )
 _EDGE_SCHEMA = StructType(
     [StructField("a", StringType(), False), StructField("b", StringType(), False)]
+)
+_MAPPING_SCHEMA = StructType(  # the distributed mapping's, nullability included
+    [StructField("name", StringType(), False), StructField("canonical", StringType(), True)]
 )
 
 
@@ -352,15 +356,26 @@ def canonical_mapping(
     """name → canonical, where canonical = min normalized name within the
     component (matches the oracle). ``components`` is (name, component) from
     raptor_spark.cc; names not in any component map to their own norm.
-    ``feats`` — optional shared ``name_features`` table (see link_edges)."""
+    ``feats`` — optional shared ``name_features`` table (see link_edges).
+
+    Up to the name cap ``link_edges`` uses, the (name, norm, component)
+    rows are collected once and the min per component is taken in
+    pandas, so the mapping is a small local frame; above it, the mapping is
+    a lazy join + groupBy + join."""
     if feats is None:
         feats = name_features(triples)
     feats = feats.select("name", "norm")
     with_comp = feats.join(components, on="name", how="left").withColumn(
         "component", F.coalesce(F.col("component"), F.col("name"))
     )
-    canon = with_comp.groupBy("component").agg(F.min("norm").alias("canonical"))
-    return with_comp.join(canon, on="component").select("name", "canonical")
+    spark = feats.sparkSession
+    cap = driver_memory_cap(spark, DRIVER_LINK_MAX_NAMES)
+    if capped_count(feats, cap) > cap:
+        canon = with_comp.groupBy("component").agg(F.min("norm").alias("canonical"))
+        return with_comp.join(canon, on="component").select("name", "canonical")
+    pdf = with_comp.toPandas()
+    pdf["canonical"] = pdf.groupby("component")["norm"].transform("min")
+    return spark.createDataFrame(pdf[["name", "canonical"]], _MAPPING_SCHEMA)
 
 
 def apply_linking(triples: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -53,18 +53,17 @@ from raptor_spark.schemas import FILES_SCHEMA
 
 STAGES = ("extracted", "components", "nodes", "edges")
 
-# stage → (partition columns, clustered) of its committed table. A clustered
-# stage's rows are first hash-clustered by its partition columns, so each
-# output directory is written by one task, as one file, instead of every
-# task writing every directory (64 tasks × 64 dirs of ~20-row files measured
-# 18s of commit churn on the edges stage). The clustering repartitions by
-# NUMBER, the session's default parallelism, so the write uses every core:
-# AQE coalesces a by-column repartition of a ~1 MB frame to one partition,
-# one task writing every file, and leaves a by-number one alone. No
-# within-file order is set: Spark's planned write sorts each task's rows by
-# the partition columns and drops any other sort beneath that. The big
-# pred-partitioned triple table is NOT clustered: there the extra full
-# shuffle costs more than the committer saves.
+# stage → (partition columns, clustered) of its committed table, passed to
+# ``Catalog.write``. A clustered table is hash-clustered by its partition
+# columns into the session's default parallelism and written by Arrow
+# writers in the tasks: each output directory is written by one task, as
+# one file, instead of every task writing every directory (64 tasks × 64
+# dirs of ~20-row files measured 18s of commit churn on the edges stage),
+# and the ~150 small files skip Spark's writer, which costs ~7 ms of task
+# time per file (see ``Catalog._write_clustered``). The big pred-partitioned
+# triple table is NOT clustered: there the extra full shuffle costs more
+# than the committer saves, and the unclustered tables stay on Spark's
+# writer, since handing their rows to Python measured slower.
 LAYOUT: dict[str, tuple[list[str] | None, bool]] = {
     "extracted": (["pred"], False),
     "components": (None, False),
@@ -110,11 +109,12 @@ class Pipeline:
                 return self.catalog.read(stage, snapshot=m["snapshot_id"]), None
         start = time.monotonic()
         partition_by, clustered = LAYOUT[stage]
-        df = build()
-        if clustered:
-            df = df.repartition(self.spark.sparkContext.defaultParallelism, *partition_by)
         m = self.catalog.write(
-            stage, df, partition_by=partition_by, meta={"input_fingerprint": fingerprint}
+            stage,
+            build(),
+            partition_by=partition_by,
+            clustered=clustered,
+            meta={"input_fingerprint": fingerprint},
         )
         return (
             self.catalog.read(stage, snapshot=m["snapshot_id"]),
@@ -208,9 +208,10 @@ class Pipeline:
             )
 
             # triples + canonical columns. `components` is the linking
-            # checkpoint: the name → canonical mapping is one names-sized
-            # groupBy over it, so the linked triples stay in memory instead of
-            # being committed as a second copy of the triple table
+            # checkpoint: the name → canonical mapping is a names-sized min
+            # per component over it (on the driver below the link name cap),
+            # so the linked triples stay in memory instead of being
+            # committed as a second copy of the triple table
             linked = apply_linking(
                 triples, canonical_mapping(triples, comps, feats=feats)
             ).persist()

@@ -319,3 +319,83 @@ def test_crash_writing_pointer_leaves_table_absent_or_readable(spark, tmp_path, 
     # the crashed first append never became visible, and does not leak in
     cat.append("log", spark.range(1))
     assert Catalog(spark, str(tmp_path)).read("log").count() == 1
+
+
+def _relative_parquet_files(cat, table):
+    data = os.path.join(cat.root, table, cat.manifest(table)["data_dir"])
+    return sorted(os.path.relpath(p, data) for p in catalog_mod._parquet_files(data))
+
+
+def _awkward_partitions(spark):
+    """Rows over partition values Spark's writer escapes (``#``, ``/``,
+    ``=``, ``%``), a space, non-ASCII and a null."""
+    langs = ["a#b", "x/y", "k=v", "50%", "two words", "naïve", "字", None]
+    return spark.createDataFrame(
+        [(i, langs[i % len(langs)], i % 3, f"v{i}") for i in range(48)],
+        "id long, lang string, bucket int, v string",
+    )
+
+
+@pytest.mark.parametrize("empty", [False, True], ids=["rows", "empty"])
+def test_clustered_write_round_trips_partition_values(spark, tmp_path, empty):
+    """The tasks' Arrow writers name directories as Spark's writer does, so
+    both read back the same rows, schema and partition values; each
+    directory holds one file, and the manifest lists the files on disk."""
+    cat = Catalog(spark, str(tmp_path))
+    df = _awkward_partitions(spark)
+    if empty:
+        df = df.limit(0)
+    part = ["lang", "bucket"]
+    m = cat.write("c", df, partition_by=part, clustered=True)
+    cat.write("u", df, partition_by=part)
+    clustered, spark_written = cat.read("c"), cat.read("u")
+    assert clustered.schema == spark_written.schema
+    assert _rows(clustered) == _rows(spark_written) == _rows(df.select(*clustered.columns))
+    assert {r.lang for r in clustered.select("lang").distinct().collect()} == (
+        set() if empty else {"a#b", "x/y", "k=v", "50%", "two words", "naïve", "字", None}
+    )
+
+    files = _relative_parquet_files(cat, "c")
+    assert [f["path"] for f in m["files"]] == files
+    assert sum(f["rows"] for f in m["files"]) == df.count()
+    assert m["bytes"] == sum(f["bytes"] for f in m["files"])
+    dirs = [os.path.dirname(f) for f in files]
+    assert len(dirs) == len(set(dirs))  # one file per directory
+    assert set(dirs) == {os.path.dirname(f) for f in _relative_parquet_files(cat, "u")}
+    assert len(dirs) == (0 if empty else 8 * 3)
+
+
+def test_clustered_write_deletes_leftover_files(spark, tmp_path, monkeypatch):
+    """A parquet file no task returned (a failed attempt's) is deleted
+    before the manifest swap and never read; a clustered write that raises
+    leaves the previous snapshot current."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cat = Catalog(spark, str(tmp_path))
+    df = _awkward_partitions(spark)
+    leftovers = []
+    arrow_writer = catalog_mod._arrow_writer
+
+    def plant_leftover(data_dir, partition_by):
+        d = os.path.join(data_dir, "lang=k%3Dv", "bucket=0")
+        os.makedirs(d, exist_ok=True)
+        leftovers.append(os.path.join(d, "part-00099-leftover.parquet"))
+        pq.write_table(pa.table({"id": [10**6], "v": ["stale"]}), leftovers[-1])
+        return arrow_writer(data_dir, partition_by)
+
+    monkeypatch.setattr(catalog_mod, "_arrow_writer", plant_leftover)
+    m = cat.write("c", df, partition_by=["lang", "bucket"], clustered=True)
+    monkeypatch.undo()
+    assert leftovers and not os.path.exists(leftovers[0])
+    assert [f["path"] for f in m["files"]] == _relative_parquet_files(cat, "c")
+    assert _rows(cat.read("c")) == _rows(df.select(*cat.read("c").columns))
+
+    failing = df.withColumn(
+        "v", F.when(F.col("id") == 7, F.raise_error(F.lit("boom"))).otherwise(F.col("v"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        cat.write("c", failing, partition_by=["lang", "bucket"], clustered=True)
+    assert cat.manifest("c") == m
+    assert _rows(Catalog(spark, str(tmp_path)).read("c")) == _rows(cat.read("c"))
+    assert Catalog(spark, str(tmp_path)).read("c").count() == 48

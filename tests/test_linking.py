@@ -125,6 +125,10 @@ def _pairs(df):
     return {tuple(r) for r in df.collect()}
 
 
+def _plan_has(df, node: str) -> bool:
+    return node in df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
     """Below and above the name cap, link_edges, connected_components and
     canonical_mapping give identical rows — with and without the oversize
@@ -157,9 +161,16 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
         monkeypatch.setattr(cc, "DRIVER_CC_MAX_EDGES", 0)
         comps_dist = connected_components(dist)
         assert _pairs(comps) == _pairs(comps_dist)
-        assert _pairs(canonical_mapping(None, comps, parity_feats)) == _pairs(
-            canonical_mapping(None, comps_dist, parity_feats)
-        )
+
+        monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", 10**6)
+        mapping = canonical_mapping(None, comps, parity_feats)
+        monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", 0)
+        mapping_dist = canonical_mapping(None, comps_dist, parity_feats)
+        # the driver mapping is a local frame, the distributed one a groupBy
+        assert _plan_has(mapping, "LocalRelation") and not _plan_has(mapping, "Aggregate")
+        assert _plan_has(mapping_dist, "Aggregate")
+        assert mapping.schema == mapping_dist.schema
+        assert _pairs(mapping) == _pairs(mapping_dist)
 
     capped, uncapped = edge_sets.values()
     # the exact block: same-nospace groups, a head included
@@ -177,14 +188,16 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
 def test_driver_linking_runs_few_jobs(spark, parity_feats, spark_jobs):
     """Below the cap, the linking chain over materialized name features
     runs a handful of Spark jobs: a capped count and a collect each for the
-    signatures and the edges; the mapping stays lazy."""
+    signatures, the edges and the mapping, plus the broadcast job of the
+    mapping's collect. The mapping is collected here so that its jobs count
+    on either path."""
     parity_feats.count()
 
     def chain():
         comps = connected_components(link_edges(None, parity_feats))
-        canonical_mapping(None, comps, parity_feats)
+        canonical_mapping(None, comps, parity_feats).collect()
 
-    assert spark_jobs(chain) <= 4
+    assert spark_jobs(chain) <= 7
 
 
 @pytest.mark.parametrize("max_names", [10**6, 0], ids=["driver", "distributed"])
