@@ -47,7 +47,7 @@ HOLD_MAX_BYTES = 8 << 20  # ≤ this many committed parquet bytes → a current
 
 # the characters Spark's writer percent-escapes in a partition directory
 # name (ExternalCatalogUtils.escapePathName), and its name for a null or
-# empty value: a clustered write names its directories exactly as Spark's
+# empty value: a partitioned write names its directories exactly as Spark's
 # writer would, so reads parse the same partition values back
 _PATH_ESCAPED = frozenset([chr(c) for c in range(1, 0x20)] + list("\"#%'*/:=?[\\]^{\x7f"))
 _DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
@@ -89,7 +89,7 @@ def _partition_dirs(batch: pa.RecordBatch, partition_by: list[str]) -> pa.Dictio
 def _arrow_writer(
     data_dir: str, partition_by: list[str]
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    """The task function of a clustered write (``mapInArrow``): stream the
+    """The task function of a partitioned write (``mapInArrow``): stream the
     task's batches into hive-partitioned parquet under ``data_dir``, one
     ``part-<task>-<uuid>.parquet`` file per partition value the task holds,
     and return one ``(path relative to data_dir, rows, bytes)`` row per
@@ -109,7 +109,9 @@ def _arrow_writer(
                     part = data.filter(pc.equal(dirs.indices, i))
                     if d not in writers:
                         os.makedirs(os.path.join(data_dir, d), exist_ok=True)
-                        writers[d] = pq.ParquetWriter(os.path.join(data_dir, d, name), data.schema)
+                        writers[d] = pq.ParquetWriter(
+                            os.path.join(data_dir, d, name), data.schema, store_schema=False
+                        )
                         rows[d] = 0
                     writers[d].write_batch(part)
                     rows[d] += part.num_rows
@@ -135,53 +137,52 @@ class Catalog:
     Layout: ``{root}/{table}/data-<n>/*.parquet`` + ``manifest-<n>.json`` per
     snapshot, plus ``manifest.json`` — the current-snapshot pointer, replaced
     atomically LAST so a crashed write never becomes current. A table
-    'exists' iff ``manifest.json`` does.
+    'exists' iff ``manifest.json`` does. Every change of a table (``write``,
+    ``merge``, ``append``) commits a new snapshot this way; none writes into
+    a committed data dir.
 
-    A clustered write (``write(..., clustered=True)``, the nodes/edges
-    layout) is written by the tasks, the way Iceberg's writers return
-    data-file descriptors to the driver: each task streams its Arrow batches
-    into one ``part-<task>-<uuid>.parquet`` file per partition value it
-    holds and returns ``(relative path, rows, bytes)`` per file. The driver
-    deletes every parquet file under the snapshot's data dir that no
+    A partitioned table is written by the tasks, the way Iceberg's writers
+    return data-file descriptors to the driver: each task streams its Arrow
+    batches into one ``part-<task>-<uuid>.parquet`` file per partition value
+    it holds and returns ``(relative path, rows, bytes)`` per file. The
+    driver deletes every parquet file under the snapshot's data dir that no
     successful task returned (a failed attempt's), records the list as the
     manifest's ``files`` and their sum as ``bytes``, and then swaps the
-    manifest. Reads still open the data dir, not the list: a list of the
-    ~150 files of a nodes snapshot is more paths than the session's
-    parallel-discovery threshold (2 × N_REPO_BUCKETS), so Spark would list
-    them in a job. Caveat: a zombie task attempt that is still running after
-    the commit (speculation, a lost executor) could add a file to a
-    committed data dir, and a read would see it.
+    manifest. An unpartitioned table is written by Spark's writer and
+    records only ``bytes``. Reads still open the data dir, not the list: a
+    list of the ~150 files of a nodes snapshot is more paths than the
+    session's parallel-discovery threshold (2 × N_REPO_BUCKETS), so Spark
+    would list them in a job. Caveat: a zombie task attempt that is still
+    running after the commit (speculation, a lost executor) could add a file
+    to a committed data dir, and a read would see it.
 
     Reads are pinned to the committed snapshot: ``read`` re-reads the
     manifest on every call but returns the DataFrame this instance resolved
     while the manifest names the same commit (``snapshot_id``,
-    ``append_seq``, ``committed_at``). The frame is built with the recorded
-    schema and keeps the file index it listed, so later reads infer no
-    schema and list nothing. ``append`` bumps ``append_seq``, so every
-    instance re-resolves an appended table.
+    ``committed_at``). The frame is built with the recorded schema and keeps
+    the file index it listed, so later reads infer no schema and list
+    nothing.
 
     A current read of a small table is also HELD: ``read(table)`` returns
     the pinned frame coalesced to ``ceil(bytes / maxPartitionBytes)``
     partitions and persisted in Spark's in-memory columnar cache, so once
     the first query fills it, each later query scans memory, not the
     snapshot's (often ~100, partition-split) parquet files. Held is a
-    snapshot committed by ``write``/``merge`` when it is read
-    as current, its ``append_seq`` is 0, and its manifest records
-    ``bytes`` ≤ ``HOLD_MAX_BYTES``. Never held: reads by snapshot id,
-    appended tables (lineage), manifests without ``bytes``. A held frame
+    snapshot read as current whose manifest records ``bytes`` ≤
+    ``HOLD_MAX_BYTES``; reads by snapshot id are never held. A held frame
     is released (unpersisted) when this instance resolves a newer commit
     of the table, when ``_prune`` deletes its snapshot, or when the table
     is dropped. Builds read by snapshot id (``Pipeline``), and ``merge``
-    reads the current snapshot unheld, so a build never fills the cache
-    with tables it is about to replace.
+    and ``append`` read the current snapshot unheld, so a build never fills
+    the cache with tables it is about to replace.
     """
 
     def __init__(self, spark: SparkSession, root: str, keep_snapshots: int = 3):
         self.spark = spark
         self.root = root
         self.keep_snapshots = max(1, keep_snapshots)
-        # (table, snapshot_id) → (commit stamp, DataFrame); see ``read``
-        self._pinned: dict[tuple[str, int], tuple[tuple, DataFrame]] = {}
+        # (table, snapshot_id) → (committed_at, DataFrame); see ``read``
+        self._pinned: dict[tuple[str, int], tuple[float, DataFrame]] = {}
         # table → (commit, persisted DataFrame) of its held current snapshot
         self._held: dict[str, tuple[tuple, DataFrame]] = {}
         os.makedirs(root, exist_ok=True)
@@ -218,15 +219,14 @@ class Catalog:
         df: DataFrame,
         partition_by: list[str] | None = None,
         meta: dict | None = None,
-        clustered: bool = False,
     ) -> dict:
         """Commit the DataFrame as a NEW snapshot of the table and make it
         current. Previous snapshots stay readable via ``read(table, n)``
         until pruned by the retention policy.
 
-        ``clustered`` (requires ``partition_by``): write through the tasks'
-        Arrow writers, one file per partition value, and list the files in
-        the manifest (see the class docstring); else Spark's writer."""
+        With ``partition_by`` the tasks' Arrow writers write one file per
+        partition value and the manifest lists the files (see the class
+        docstring); without it, Spark's writer writes the rows."""
         d = self._dir(table)
         os.makedirs(d, exist_ok=True)
         prev = self.manifest(table) if self.exists(table) else None
@@ -234,14 +234,11 @@ class Catalog:
         data = os.path.join(d, f"data-{sid}")
         if os.path.exists(data):  # crashed uncommitted attempt
             shutil.rmtree(data)
-        if clustered:
+        if partition_by:
             files = self._write_clustered(df, data, partition_by)
             listed = {"bytes": sum(f["bytes"] for f in files), "files": files}
         else:
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(data)
+            df.write.parquet(data)
             listed = {"bytes": sum(map(os.path.getsize, _parquet_files(data)))}
         manifest = {
             "table": table,
@@ -304,30 +301,23 @@ class Catalog:
                 if held is not None and held[0][0] == sid:  # commit[0] is the id
                     self._release(table)
 
-    def append(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
-        """Append into the CURRENT snapshot in place (event-log tables like
-        lineage — not a new commit; use ``write``/``merge`` for versioned
-        tables). The manifests are re-committed with ``append_seq`` bumped,
-        so readers pinned to the snapshot re-resolve it."""
-        if self.exists(table):
-            prev = self.manifest(table)
-            prev.pop("bytes", None)  # the appended files are not counted
-            manifest = {**prev, "append_seq": prev.get("append_seq", 0) + 1}
-        else:
-            manifest = {
-                "table": table,
-                "snapshot_id": 0,
-                "data_dir": "data-0",
-                "committed_at": time.time(),
-            }
-            # files of a crashed first append that never committed
-            shutil.rmtree(os.path.join(self._dir(table), "data-0"), ignore_errors=True)
-        data = os.path.join(self._dir(table), manifest["data_dir"])
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data)
-        self._commit_manifest(table, manifest)
+    def append(self, table: str, df: DataFrame) -> dict:
+        """Commit the current rows plus ``df`` as a new snapshot
+        (copy-on-write, like ``merge``), keeping the table's partitioning;
+        a missing table is created. A crash before the manifest swap leaves
+        the previous snapshot current, so a reader sees all of an append or
+        none of it. Each append rewrites the whole table: ``lineage`` holds
+        at most 4 stages × 64 buckets = 256 rows per run, so a pipeline run
+        rewrites up to 256 rows per earlier run in its output dir, and the
+        first run into an empty output dir writes only its own rows."""
+        if not self.exists(table):
+            return self.write(table, df)
+        m = self.manifest(table)
+        return self.write(
+            table,
+            self._frame(table, m).unionByName(df),
+            partition_by=m["partition_by"] or None,
+        )
 
     def merge(
         self,
@@ -352,11 +342,10 @@ class Catalog:
             return self.write(table, df, meta=meta)
         m = self.manifest(table)
         cur = self._frame(table, m)
-        partition_by = m.get("partition_by") or None
         merged = cur.join(df.select(*key).distinct(), on=key, how="left_anti").unionByName(
             df.select(*cur.columns)
         )
-        return self.write(table, merged, partition_by=partition_by, meta=meta)
+        return self.write(table, merged, partition_by=m["partition_by"] or None, meta=meta)
 
     def read(self, table: str, snapshot: int | None = None) -> DataFrame:
         """Current table, or a retained snapshot pinned by id (time travel).
@@ -373,29 +362,25 @@ class Catalog:
     def _frame(self, table: str, m: dict) -> DataFrame:
         """The pinned frame of the commit manifest ``m`` names."""
         key = (table, m["snapshot_id"])
-        stamp = (m.get("append_seq", 0), m["committed_at"])
         pinned = self._pinned.get(key)
-        if pinned is None or pinned[0] != stamp:
-            reader = self.spark.read
-            if "schema" in m:
-                reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
-            df = reader.parquet(os.path.join(self._dir(table), m["data_dir"]))
-            pinned = self._pinned[key] = (stamp, df)
+        if pinned is None or pinned[0] != m["committed_at"]:
+            schema = StructType.fromJson(json.loads(m["schema"]))
+            df = self.spark.read.schema(schema).parquet(os.path.join(self._dir(table), m["data_dir"]))
+            pinned = self._pinned[key] = (m["committed_at"], df)
         return pinned[1]
 
     def _hold(self, table: str, m: dict, df: DataFrame) -> DataFrame:
         """``df`` (the current commit ``m`` names) held in memory when the
         rules of the class docstring allow it, else ``df`` itself."""
-        commit = (m["snapshot_id"], m.get("append_seq", 0), m["committed_at"])
+        commit = (m["snapshot_id"], m["committed_at"])
         held = self._held.get(table)
         if held is not None and held[0] == commit:
             return held[1]
         self._release(table)
-        size = m.get("bytes")
-        if m.get("append_seq", 0) or size is None or size > HOLD_MAX_BYTES:
+        if m["bytes"] > HOLD_MAX_BYTES:
             return df
         split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        held_df = df.coalesce(max(1, -(-size // split))).persist()
+        held_df = df.coalesce(max(1, -(-m["bytes"] // split))).persist()
         self._held[table] = (commit, held_df)
         return held_df
 

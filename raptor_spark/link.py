@@ -387,46 +387,38 @@ def apply_linking(triples: DataFrame, mapping: DataFrame) -> DataFrame:
       else its own normalized spelling.
     * other predicates: nulls.
 
-    The mapping table is tiny relative to triples → broadcast joins, no
-    shuffle of the triple table.
+    One pass: each triple gets a subject key (the caller, for calls) and an
+    object key (the callee, or the defined name), and two left joins against
+    the one broadcast mapping look both up; a null key matches nothing. The
+    mapping table is tiny relative to triples → no shuffle of the triple
+    table.
     """
     m = F.broadcast(mapping)
-
-    defines = triples.filter(F.col("pred") == PRED_DEFINES).withColumn(
-        "def_name", F.split(F.col("obj"), "@").getItem(0)
+    is_call = F.col("pred") == PRED_CALLS
+    keyed = triples.select(
+        "*",
+        F.when(is_call, F.element_at(F.split(F.col("subj"), ":"), -1)).alias("_subj_key"),
+        F.when(is_call, F.col("obj"))
+        .when(F.col("pred") == PRED_DEFINES, F.split(F.col("obj"), "@").getItem(0))
+        .alias("_obj_key"),
     )
-    defines = (
-        defines.join(m.withColumnRenamed("name", "def_name"), on="def_name", how="left")
-        .withColumn("obj_canonical", F.col("canonical"))
-        .withColumn("subj_canonical", F.lit(None).cast("string"))
-        .drop("def_name", "canonical")
-    )
-
-    calls = triples.filter(F.col("pred") == PRED_CALLS).withColumn(
-        "caller", F.element_at(F.split(F.col("subj"), ":"), -1)
-    )
-    calls = (
-        calls.join(
-            m.select(F.col("name").alias("caller"), F.col("canonical").alias("subj_canonical")),
-            on="caller",
+    return (
+        keyed.join(
+            m.select(F.col("name").alias("_subj_key"), F.col("canonical").alias("subj_canonical")),
+            on="_subj_key",
             how="left",
         )
         .join(
-            m.select(F.col("name").alias("obj"), F.col("canonical").alias("obj_canonical")),
-            on="obj",
+            m.select(F.col("name").alias("_obj_key"), F.col("canonical").alias("_obj_canonical")),
+            on="_obj_key",
             how="left",
         )
-        .drop("caller")
+        .select(
+            *triples.columns,
+            # callee never defined anywhere → canonicalize by normalization alone
+            F.when(is_call, F.coalesce(F.col("_obj_canonical"), norm_identifier_col("obj")))
+            .otherwise(F.col("_obj_canonical"))
+            .alias("obj_canonical"),
+            "subj_canonical",
+        )
     )
-    # callee never defined anywhere → canonicalize by normalization alone
-    calls = calls.withColumn(
-        "obj_canonical",
-        F.coalesce(F.col("obj_canonical"), norm_identifier_col("obj")),
-    ).select(*[c for c in defines.columns])
-
-    others = (
-        triples.filter(~F.col("pred").isin(PRED_DEFINES, PRED_CALLS))
-        .withColumn("subj_canonical", F.lit(None).cast("string"))
-        .withColumn("obj_canonical", F.lit(None).cast("string"))
-    )
-    return defines.unionByName(calls).unionByName(others)

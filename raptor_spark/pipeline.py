@@ -10,7 +10,7 @@ whose output manifest is already committed AND whose recorded input roll-up
 still matches the current input (so a changed corpus invalidates downstream
 checkpoints instead of silently reusing them). The lineage rows of the stages
 a run committed are appended in one ``Catalog.append`` when the run ends,
-failed runs included.
+failed runs included: one new lineage snapshot per run.
 
 Stages:
   extracted  — triples (extract.extract_triples)
@@ -53,22 +53,22 @@ from raptor_spark.schemas import FILES_SCHEMA
 
 STAGES = ("extracted", "components", "nodes", "edges")
 
-# stage → (partition columns, clustered) of its committed table, passed to
-# ``Catalog.write``. A clustered table is hash-clustered by its partition
+# stage → partition columns of its committed table, passed to
+# ``Catalog.write``. A partitioned table is hash-clustered by its partition
 # columns into the session's default parallelism and written by Arrow
 # writers in the tasks: each output directory is written by one task, as
 # one file, instead of every task writing every directory (64 tasks × 64
 # dirs of ~20-row files measured 18s of commit churn on the edges stage),
 # and the ~150 small files skip Spark's writer, which costs ~7 ms of task
-# time per file (see ``Catalog._write_clustered``). The big pred-partitioned
-# triple table is NOT clustered: there the extra full shuffle costs more
-# than the committer saves, and the unclustered tables stay on Spark's
-# writer, since handing their rows to Python measured slower.
-LAYOUT: dict[str, tuple[list[str] | None, bool]] = {
-    "extracted": (["pred"], False),
-    "components": (None, False),
-    "nodes": (["lang", "repo_bucket"], True),
-    "edges": (["lang", "repo_bucket"], True),
+# time per file (see ``Catalog._write_clustered``). The triple table is
+# unpartitioned, on Spark's writer: no read prunes it by ``pred`` (the
+# build reads it persisted, an incremental run reads all of it), and
+# handing its rows to Python measured slower.
+LAYOUT: dict[str, list[str] | None] = {
+    "extracted": None,
+    "components": None,
+    "nodes": ["lang", "repo_bucket"],
+    "edges": ["lang", "repo_bucket"],
 }
 
 
@@ -108,13 +108,8 @@ class Pipeline:
             if m.get("input_fingerprint") == fingerprint:
                 return self.catalog.read(stage, snapshot=m["snapshot_id"]), None
         start = time.monotonic()
-        partition_by, clustered = LAYOUT[stage]
         m = self.catalog.write(
-            stage,
-            build(),
-            partition_by=partition_by,
-            clustered=clustered,
-            meta={"input_fingerprint": fingerprint},
+            stage, build(), partition_by=LAYOUT[stage], meta={"input_fingerprint": fingerprint}
         )
         return (
             self.catalog.read(stage, snapshot=m["snapshot_id"]),
@@ -218,7 +213,7 @@ class Pipeline:
             intermediates.append(linked)
 
             # -- stage 3: nodes / edges ---------------------------------------
-            # both derive from the in-memory linked triples; each clustered
+            # both derive from the in-memory linked triples; each partitioned
             # write runs on every core (see LAYOUT), so they commit in turn
             graph = {}
             for stage, build in (("nodes", build_nodes), ("edges", build_edges)):

@@ -72,10 +72,37 @@ def test_append_then_write_preserves_history(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path))
     cat.append("log", spark.range(3))
     cat.append("log", spark.range(2))
-    assert cat.read("log").count() == 5  # event-log append, same snapshot
+    # each append commits a snapshot of all the rows so far
+    assert [m["snapshot_id"] for m in cat.snapshots("log")] == [0, 1]
+    assert cat.read("log").count() == 5
     cat.write("log", spark.range(1))
     assert cat.read("log").count() == 1
-    assert cat.read("log", snapshot=0).count() == 5
+    assert cat.read("log", snapshot=1).count() == 5
+    assert cat.read("log", snapshot=0).count() == 3
+
+
+def test_crashed_append_leaves_previous_rows(spark, tmp_path, monkeypatch):
+    """An append that fails before its manifest swap, or in its data write,
+    leaves a fresh reader seeing only the rows committed before it."""
+    cat = Catalog(spark, str(tmp_path))
+    cat.append("log", spark.range(3))
+
+    def crash(self, table, manifest):
+        raise OSError("simulated crash before the manifest swap")
+
+    monkeypatch.setattr(Catalog, "_commit_manifest", crash)
+    with pytest.raises(OSError):
+        cat.append("log", spark.range(4))
+    monkeypatch.undo()
+    assert Catalog(spark, str(tmp_path)).read("log").count() == 3
+
+    failing = spark.range(4).withColumn(
+        "id", F.when(F.col("id") == 2, F.raise_error(F.lit("boom"))).otherwise(F.col("id"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        cat.append("log", failing)
+    assert Catalog(spark, str(tmp_path)).read("log").count() == 3
+    assert cat.read("log").count() == 3
 
 
 def test_diff_snapshots_reports_insert_delete_update(spark, tmp_path):
@@ -161,7 +188,7 @@ def test_other_instance_commits_are_visible(spark, tmp_path):
     assert a.read("t").count() == 5
     b.append("t", spark.range(2))
     assert a.read("t").count() == 7
-    # an append-created table (no recorded schema) re-resolves the same way
+    # an append-created table re-resolves the same way
     b.append("log", spark.range(4))
     assert a.read("log").count() == 4
     b.append("log", spark.range(1))
@@ -215,18 +242,19 @@ def test_read_by_snapshot_id_is_not_held(spark, tmp_path):
     assert _cached_plans(spark) == before
 
 
-def test_appended_table_is_not_held(spark, tmp_path):
+def test_appended_small_table_is_held(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path))
     before = _cached_plans(spark)
-    cat.append("log", spark.range(3))
-    assert "bytes" not in cat.manifest("log")
-    assert not cat.read("log").is_cached
-    cat.write("t", _small_table(spark))
-    assert cat.read("t").is_cached
-    cat.append("t", _small_table(spark, 4))
-    got = cat.read("t")
-    assert not got.is_cached and got.count() == 44
-    assert _cached_plans(spark) == before  # the held snapshot was released
+    cat.append("log", _small_table(spark))  # creates the table
+    old = cat.read("log")
+    assert old.is_cached
+    cat.append("log", _small_table(spark, 4))
+    got = cat.read("log")
+    assert got.is_cached and not old.is_cached
+    assert _cached_plans(spark) == before + 1  # the previous held frame was released
+    assert got.count() == 44
+    cat.drop("log")
+    assert _cached_plans(spark) == before
 
 
 def test_table_over_the_cap_is_not_held(spark, tmp_path, monkeypatch):
@@ -313,7 +341,7 @@ def test_crash_writing_pointer_leaves_table_absent_or_readable(spark, tmp_path, 
     with pytest.raises(OSError):
         cat.write("t", spark.range(9))
     with pytest.raises(OSError):
-        cat.append("t", spark.range(2))  # bumps append_seq
+        cat.append("t", spark.range(2))  # rewrites the uncommitted snapshot 1
     monkeypatch.undo()
     assert Catalog(spark, str(tmp_path)).read("t").count() in (3, 5)
     # the crashed first append never became visible, and does not leak in
@@ -341,14 +369,15 @@ def test_clustered_write_round_trips_partition_values(spark, tmp_path, empty):
     """The tasks' Arrow writers name directories as Spark's writer does, so
     both read back the same rows, schema and partition values; each
     directory holds one file, and the manifest lists the files on disk."""
-    cat = Catalog(spark, str(tmp_path))
+    cat = Catalog(spark, str(tmp_path / "cat"))
     df = _awkward_partitions(spark)
     if empty:
         df = df.limit(0)
     part = ["lang", "bucket"]
-    m = cat.write("c", df, partition_by=part, clustered=True)
-    cat.write("u", df, partition_by=part)
-    clustered, spark_written = cat.read("c"), cat.read("u")
+    m = cat.write("c", df, partition_by=part)
+    spark_dir = str(tmp_path / "spark")
+    df.write.partitionBy(*part).parquet(spark_dir)
+    clustered, spark_written = cat.read("c"), spark.read.schema(df.schema).parquet(spark_dir)
     assert clustered.schema == spark_written.schema
     assert _rows(clustered) == _rows(spark_written) == _rows(df.select(*clustered.columns))
     assert {r.lang for r in clustered.select("lang").distinct().collect()} == (
@@ -361,13 +390,15 @@ def test_clustered_write_round_trips_partition_values(spark, tmp_path, empty):
     assert m["bytes"] == sum(f["bytes"] for f in m["files"])
     dirs = [os.path.dirname(f) for f in files]
     assert len(dirs) == len(set(dirs))  # one file per directory
-    assert set(dirs) == {os.path.dirname(f) for f in _relative_parquet_files(cat, "u")}
+    assert set(dirs) == {
+        os.path.dirname(os.path.relpath(f, spark_dir)) for f in catalog_mod._parquet_files(spark_dir)
+    }
     assert len(dirs) == (0 if empty else 8 * 3)
 
 
 def test_clustered_write_deletes_leftover_files(spark, tmp_path, monkeypatch):
     """A parquet file no task returned (a failed attempt's) is deleted
-    before the manifest swap and never read; a clustered write that raises
+    before the manifest swap and never read; a partitioned write that raises
     leaves the previous snapshot current."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -385,7 +416,7 @@ def test_clustered_write_deletes_leftover_files(spark, tmp_path, monkeypatch):
         return arrow_writer(data_dir, partition_by)
 
     monkeypatch.setattr(catalog_mod, "_arrow_writer", plant_leftover)
-    m = cat.write("c", df, partition_by=["lang", "bucket"], clustered=True)
+    m = cat.write("c", df, partition_by=["lang", "bucket"])
     monkeypatch.undo()
     assert leftovers and not os.path.exists(leftovers[0])
     assert [f["path"] for f in m["files"]] == _relative_parquet_files(cat, "c")
@@ -395,7 +426,7 @@ def test_clustered_write_deletes_leftover_files(spark, tmp_path, monkeypatch):
         "v", F.when(F.col("id") == 7, F.raise_error(F.lit("boom"))).otherwise(F.col("v"))
     )
     with pytest.raises(Exception, match="boom"):
-        cat.write("c", failing, partition_by=["lang", "bucket"], clustered=True)
+        cat.write("c", failing, partition_by=["lang", "bucket"])
     assert cat.manifest("c") == m
     assert _rows(Catalog(spark, str(tmp_path)).read("c")) == _rows(cat.read("c"))
     assert Catalog(spark, str(tmp_path)).read("c").count() == 48

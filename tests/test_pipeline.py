@@ -213,6 +213,34 @@ def test_graph_writes_use_every_core_one_file_per_dir(
             assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
 
 
+def test_each_run_commits_lineage_as_a_new_snapshot(spark, corpus_rows, tmp_path_factory):
+    """A run commits its lineage rows with the earlier runs' rows as one new
+    snapshot, and the previous snapshot still reads only the earlier rows.
+    The triple table is unpartitioned; the graph tables list their files."""
+    files = spark.createDataFrame(corpus_rows[:60], schema=FILES_SCHEMA)
+    out_dir = str(tmp_path_factory.mktemp("kg_lineage"))
+    first = Pipeline(spark, out_dir)
+    first.run(files)["extracted"].unpersist()
+    cat = first.catalog
+    assert cat.manifest("extracted")["partition_by"] == []
+    for table in ("nodes", "edges"):
+        m = cat.manifest(table)
+        assert m["partition_by"] == ["lang", "repo_bucket"] and m["files"], table
+    before = cat.manifest("lineage")["snapshot_id"]
+
+    cat.drop("edges")
+    second = Pipeline(spark, out_dir)
+    second.run(files, resume=True)["extracted"].unpersist()  # rebuilds edges only
+
+    def runs(df):
+        return {tuple(r) for r in df.select("run_id", "stage").distinct().collect()}
+
+    assert cat.manifest("lineage")["snapshot_id"] == before + 1
+    old = runs(cat.read("lineage", snapshot=before))
+    assert old == {(first.run_id, s) for s in STAGES}
+    assert runs(cat.read("lineage")) == old | {(second.run_id, "edges")}
+
+
 @pytest.mark.parametrize(
     "failing, completed",
     [
