@@ -8,13 +8,13 @@ tracer (which persists and counts inside every layer, so a traced build
 runs a longer plan). Then prints the build's wall time, its Spark job
 count, and one line per job and per stage read from Spark's status store:
 the pipeline stage the job ran in, start offset and duration in ms, the call
-site, and the stage's task count and summed executor run time. Last comes
-one line per pipeline stage: its wall time, its jobs and the summed
-executor run time of their stages. Jobs outside every ``Pipeline._stage``
-step (the input roll-up, the fingerprint, the canonical mapping) are
-labelled ``-``. The labels come from a job group this tool sets around each
-``Pipeline._stage`` call; the program sets none. Spark's stderr goes to
-stderr as usual.
+site, and the stage's task count and summed executor run, CPU and JVM GC
+time. Last comes one line per pipeline stage: its wall time, its jobs and
+the summed executor run, CPU and GC time of their stages. Jobs outside
+every ``Pipeline._stage`` step (the input roll-up, the fingerprint, the
+canonical mapping) are labelled ``-``. The labels come from a job group
+this tool sets around each ``Pipeline._stage`` call; the program sets
+none. Spark's stderr goes to stderr as usual.
 """
 
 from __future__ import annotations
@@ -98,7 +98,8 @@ def main() -> None:
         print(f"wall_s {wall:.3f}")
         print(f"spark_jobs {len(jobs)}")
         print("job  stage        start_ms    dur_ms  call site")
-        summary = {stage: [0, 0] for stage in (*walls, "-")}  # stage → [jobs, run ms]
+        # stage → [jobs, run ms, cpu ms, gc ms]
+        summary = {stage: [0, 0, 0, 0] for stage in (*walls, "-")}
         for j in jobs:
             stage = j.jobGroup().get() if j.jobGroup().isDefined() else "-"
             start, end = _ms(j.submissionTime()), _ms(j.completionTime())
@@ -115,17 +116,22 @@ def main() -> None:
                 s_start, s_end = _ms(sd.submissionTime()), _ms(sd.completionTime())
                 if s_start is None:
                     continue
-                summary[stage][1] += sd.executorRunTime()
+                times = (sd.executorRunTime(), sd.executorCpuTime() // 10**6, sd.jvmGcTime())
+                for i, t in enumerate(times, 1):
+                    summary[stage][i] += t
                 print(
                     f"      stage {sid:>4} {s_start - t0_ms:>9} "
                     f"{s_end - s_start if s_end else -1:>9}  tasks={sd.numTasks()} "
-                    f"run_ms={sd.executorRunTime()}  {sd.name()}"
+                    f"run_ms={times[0]} cpu_ms={times[1]} gc_ms={times[2]}  {sd.name()}"
                 )
-        print("stage        wall_ms  jobs    run_ms")
+        print("stage        wall_ms  jobs    run_ms    cpu_ms     gc_ms")
         outside = wall - sum(walls.values())
-        for stage, (n_jobs, run_ms) in summary.items():
+        for stage, (n_jobs, run_ms, cpu_ms, gc_ms) in summary.items():
             stage_wall = walls.get(stage, outside)
-            print(f"{stage:<10} {stage_wall * 1000:>9.0f} {n_jobs:>5} {run_ms:>9}")
+            print(
+                f"{stage:<10} {stage_wall * 1000:>9.0f} {n_jobs:>5} {run_ms:>9} "
+                f"{cpu_ms:>9} {gc_ms:>9}"
+            )
     finally:
         stop_session(spark)
         shutil.rmtree(workdir, ignore_errors=True)

@@ -5,12 +5,13 @@ The manifests emulate the parts of a versioned table store (≙ the
 reference's lakeFS versioned asset store,
 raptor/asset_management/object_store.py:208-269) the pipeline needs:
 
-* atomic "commit" via a manifest JSON written last (write-then-commit, the
-  lakeFS upload+commit returning (key, version_id, checksum));
+* atomic "commit": a snapshot is its manifest JSON, renamed into place last
+  (write-then-commit, the lakeFS upload+commit returning (key, version_id,
+  checksum));
 * snapshot history + time travel: every ``write`` creates ``data-<n>`` +
-  ``manifest-<n>.json`` and swaps the ``manifest.json`` pointer, so
-  ``read(table, snapshot=n-1)`` still sees the previous commit (≙ lakeFS
-  version_id pinning, object_store.py:208-269, database.py:146-182);
+  ``manifest-<n>.json``, the newest manifest is current, and ``read(table,
+  snapshot=n-1)`` still sees the previous commit (≙ lakeFS version_id
+  pinning, object_store.py:208-269, database.py:146-182);
 * keyed ``merge`` — idempotent upsert-by-key as copy-on-write into a new
   snapshot (≙ the reference's Qdrant insert keyed by id,
   qdrant_search_docker/api_insert.py:88-171).
@@ -23,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -135,11 +137,16 @@ class Catalog:
     """Parquet-backed catalog with manifest 'commits' and snapshot history.
 
     Layout: ``{root}/{table}/data-<n>/*.parquet`` + ``manifest-<n>.json`` per
-    snapshot, plus ``manifest.json`` — the current-snapshot pointer, replaced
-    atomically LAST so a crashed write never becomes current. A table
-    'exists' iff ``manifest.json`` does. Every change of a table (``write``,
-    ``merge``, ``append``) commits a new snapshot this way; none writes into
-    a committed data dir.
+    snapshot. A snapshot exists iff its ``manifest-<n>.json`` does, and the
+    newest one is current; a table 'exists' iff it has one. A commit writes
+    the data dir, then ``manifest-<n>.json.tmp``, and renames that into
+    place: the one rename commits, so a crash before it leaves the previous
+    snapshot current and lists no new one (Iceberg's file-system tables
+    commit a ``v<N>.metadata.json`` the same way). Every change of a table
+    (``write``, ``merge``, ``append``) commits a new snapshot this way; none
+    writes into a committed data dir. Pruning deletes an old snapshot's
+    manifest before its data dir, so no listed snapshot lacks its files (a
+    crash between the two leaves only an unlisted data dir behind).
 
     A partitioned table is written by the tasks, the way Iceberg's writers
     return data-file descriptors to the driver: each task streams its Arrow
@@ -147,7 +154,7 @@ class Catalog:
     it holds and returns ``(relative path, rows, bytes)`` per file. The
     driver deletes every parquet file under the snapshot's data dir that no
     successful task returned (a failed attempt's), records the list as the
-    manifest's ``files`` and their sum as ``bytes``, and then swaps the
+    manifest's ``files`` and their sum as ``bytes``, and then commits the
     manifest. An unpartitioned table is written by Spark's writer and
     records only ``bytes``. Reads still open the data dir, not the list: a
     list of the ~150 files of a nodes snapshot is more paths than the
@@ -190,28 +197,32 @@ class Catalog:
     def _dir(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def _manifest_path(self, table: str, snapshot: int | None = None) -> str:
-        name = "manifest.json" if snapshot is None else f"manifest-{snapshot}.json"
-        return os.path.join(self._dir(table), name)
+    def _manifest_path(self, table: str, snapshot: int) -> str:
+        return os.path.join(self._dir(table), f"manifest-{snapshot}.json")
+
+    def _snapshot_ids(self, table: str) -> list[int]:
+        """Ids of the table's committed snapshots, ascending: one per
+        ``manifest-<n>.json`` (an uncommitted ``.tmp`` is not one)."""
+        d = self._dir(table)
+        names = os.listdir(d) if os.path.isdir(d) else []
+        return sorted(int(m[1]) for n in names if (m := re.fullmatch(r"manifest-(\d+)\.json", n)))
 
     def exists(self, table: str) -> bool:
-        return os.path.exists(self._manifest_path(table))
+        return bool(self._snapshot_ids(table))
 
     def manifest(self, table: str, snapshot: int | None = None) -> dict:
+        """The manifest of ``snapshot``, by default of the newest one."""
+        if snapshot is None:
+            ids = self._snapshot_ids(table)
+            if not ids:
+                raise FileNotFoundError(f"table not committed: {table}")
+            snapshot = ids[-1]
         with open(self._manifest_path(table, snapshot)) as f:
             return json.load(f)
 
     def snapshots(self, table: str) -> list[dict]:
         """All retained snapshot manifests, oldest first."""
-        d = self._dir(table)
-        if not os.path.isdir(d):
-            return []
-        out = []
-        for name in os.listdir(d):
-            if name.startswith("manifest-") and name.endswith(".json"):
-                with open(os.path.join(d, name)) as f:
-                    out.append(json.load(f))
-        return sorted(out, key=lambda m: m["snapshot_id"])
+        return [self.manifest(table, sid) for sid in self._snapshot_ids(table)]
 
     def write(
         self,
@@ -227,13 +238,10 @@ class Catalog:
         With ``partition_by`` the tasks' Arrow writers write one file per
         partition value and the manifest lists the files (see the class
         docstring); without it, Spark's writer writes the rows."""
-        d = self._dir(table)
-        os.makedirs(d, exist_ok=True)
-        prev = self.manifest(table) if self.exists(table) else None
-        sid = prev["snapshot_id"] + 1 if prev else 0
-        data = os.path.join(d, f"data-{sid}")
-        if os.path.exists(data):  # crashed uncommitted attempt
-            shutil.rmtree(data)
+        ids = self._snapshot_ids(table)
+        sid = ids[-1] + 1 if ids else 0
+        data = os.path.join(self._dir(table), f"data-{sid}")
+        shutil.rmtree(data, ignore_errors=True)  # a crashed uncommitted attempt's
         if partition_by:
             files = self._write_clustered(df, data, partition_by)
             listed = {"bytes": sum(f["bytes"] for f in files), "files": files}
@@ -244,7 +252,7 @@ class Catalog:
             "table": table,
             "snapshot_id": sid,
             "data_dir": f"data-{sid}",
-            "parent_snapshot_id": prev["snapshot_id"] if prev else None,
+            "parent_snapshot_id": ids[-1] if ids else None,
             "committed_at": time.time(),
             "partition_by": partition_by or [],
             "schema": df.schema.json(),
@@ -252,7 +260,7 @@ class Catalog:
             **(meta or {}),
         }
         self._commit_manifest(table, manifest)
-        self._prune(table, current=sid)
+        self._prune(table)
         return manifest
 
     def _write_clustered(self, df: DataFrame, data: str, partition_by: list[str]) -> list[dict]:
@@ -278,33 +286,30 @@ class Catalog:
         return files
 
     def _commit_manifest(self, table: str, manifest: dict) -> None:
-        """Swap in the snapshot's manifest, then the current pointer, each
-        by tmp + rename: a crash leaves the old file or the new, never a
-        torn one."""
-        for path in (self._manifest_path(table, manifest["snapshot_id"]), self._manifest_path(table)):
-            with open(path + ".tmp", "w") as f:
-                json.dump(manifest, f)
-            os.replace(path + ".tmp", path)
+        """Commit the snapshot: write its manifest to a tmp file and rename
+        it to ``manifest-<n>.json``. The rename is the commit, so a crash
+        leaves the snapshot committed whole or not at all."""
+        path = self._manifest_path(table, manifest["snapshot_id"])
+        with open(path + ".tmp", "w") as f:
+            json.dump(manifest, f)
+        os.replace(path + ".tmp", path)
 
-    def _prune(self, table: str, current: int) -> None:
-        keep = {
-            m["snapshot_id"]
-            for m in self.snapshots(table)[-self.keep_snapshots:]
-        } | {current}
-        for m in self.snapshots(table):
-            sid = m["snapshot_id"]
-            if sid not in keep:
-                shutil.rmtree(os.path.join(self._dir(table), m["data_dir"]), ignore_errors=True)
-                os.remove(self._manifest_path(table, sid))
-                self._pinned.pop((table, sid), None)
-                held = self._held.get(table)
-                if held is not None and held[0][0] == sid:  # commit[0] is the id
-                    self._release(table)
+    def _prune(self, table: str) -> None:
+        """Delete all but the newest ``keep_snapshots`` snapshots, each
+        manifest before its data dir."""
+        for sid in self._snapshot_ids(table)[: -self.keep_snapshots]:
+            data = os.path.join(self._dir(table), self.manifest(table, sid)["data_dir"])
+            os.remove(self._manifest_path(table, sid))
+            shutil.rmtree(data, ignore_errors=True)
+            self._pinned.pop((table, sid), None)
+            held = self._held.get(table)
+            if held is not None and held[0][0] == sid:  # commit[0] is the id
+                self._release(table)
 
     def append(self, table: str, df: DataFrame) -> dict:
         """Commit the current rows plus ``df`` as a new snapshot
         (copy-on-write, like ``merge``), keeping the table's partitioning;
-        a missing table is created. A crash before the manifest swap leaves
+        a missing table is created. A crash before the manifest commit leaves
         the previous snapshot current, so a reader sees all of an append or
         none of it. Each append rewrites the whole table: ``lineage`` holds
         at most 4 stages × 64 buckets = 256 rows per run, so a pipeline run
@@ -353,8 +358,6 @@ class Catalog:
         names, resolving it on first use; a current read of a small
         committed snapshot returns it held in memory, and releases the
         table's previously held commit (see the class docstring)."""
-        if not self.exists(table):
-            raise FileNotFoundError(f"table not committed: {table}")
         m = self.manifest(table, snapshot)
         df = self._frame(table, m)
         return df if snapshot is not None else self._hold(table, m, df)
@@ -397,47 +400,3 @@ class Catalog:
         if os.path.exists(d):
             shutil.rmtree(d)
 
-
-def diff_snapshots(
-    catalog: Catalog,
-    table: str,
-    key_cols: list[str],
-    old_snapshot: int | None,
-    new_snapshot: int | None = None,
-) -> DataFrame:
-    """Change-data-capture between two retained snapshots of a table: one
-    row per changed key with op in {insert, delete, update} — the
-    read-side completion of the keyed ``Catalog.merge`` upsert (what
-    changed between the commit I processed last and now), the lakeFS
-    two-commit diff analog.
-
-    update detection hashes ALL non-key columns (sha2 of a null-tagged
-    concat) on each side, so the diff needs only (key, row_hash) from both
-    snapshots — a full outer join on key-sized rows, never a wide-payload
-    shuffle; payloads stay in the parquet files they live in."""
-    from pyspark.sql import functions as F
-
-    def keyed(df: DataFrame) -> DataFrame:
-        payload = [c for c in df.columns if c not in key_cols]
-        tagged = [
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
-            for c in sorted(payload)
-        ]
-        return df.select(
-            *key_cols,
-            F.sha2(F.concat_ws("\x01", *tagged), 256).alias("_row_hash"),
-        )
-
-    old = keyed(catalog.read(table, old_snapshot)).alias("o")
-    new = keyed(catalog.read(table, new_snapshot)).alias("n")
-    cond = [F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}")) for k in key_cols]
-    j = old.join(new, cond, "full_outer")
-    op = (
-        F.when(F.col("o._row_hash").isNull(), F.lit("insert"))
-        .when(F.col("n._row_hash").isNull(), F.lit("delete"))
-        .when(F.col("o._row_hash") != F.col("n._row_hash"), F.lit("update"))
-    )
-    keys = [
-        F.coalesce(F.col(f"n.{k}"), F.col(f"o.{k}")).alias(k) for k in key_cols
-    ]
-    return j.select(*keys, op.alias("op")).filter(F.col("op").isNotNull())

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import uuid
 
 import pytest
@@ -34,6 +35,30 @@ def spark_jobs(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture
+def renames(monkeypatch):
+    """``renames(prefix, fail_at=None)`` → the list that collects every
+    ``os.replace`` destination under ``prefix`` from then on; with
+    ``fail_at``, the fail_at-th of them raises ``OSError`` instead, as a
+    crash at that rename would. ``monkeypatch.undo()`` ends the patch."""
+    replace = os.replace
+
+    def patch(prefix: str, fail_at: int | None = None) -> list[str]:
+        seen: list[str] = []
+
+        def counted(src, dst, *args, **kwargs):
+            if os.path.abspath(dst).startswith(os.path.abspath(prefix) + os.sep):
+                seen.append(dst)
+                if len(seen) == fail_at:
+                    raise OSError(f"simulated crash at rename {fail_at}")
+            return replace(src, dst, *args, **kwargs)
+
+        monkeypatch.setattr(os, "replace", counted)
+        return seen
+
+    return patch
 
 
 @pytest.fixture(scope="session")

@@ -105,36 +105,31 @@ def test_crashed_append_leaves_previous_rows(spark, tmp_path, monkeypatch):
     assert cat.read("log").count() == 3
 
 
-def test_diff_snapshots_reports_insert_delete_update(spark, tmp_path):
-    from raptor_spark.catalog import Catalog, diff_snapshots
-
-    cat = Catalog(spark, str(tmp_path), keep_snapshots=3)
-    v1 = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], ["k", "s", "v"]
-    )
-    cat.write("t", v1)
-    s1 = cat.manifest("t")["snapshot_id"]
-    v2 = spark.createDataFrame(
-        [(2, "b", 20), (3, "c", 99), (4, "d", 40)], ["k", "s", "v"]
-    )
-    cat.write("t", v2)
-
-    got = {
-        r["k"]: r["op"]
-        for r in diff_snapshots(cat, "t", ["k"], old_snapshot=s1).collect()
-    }
-    assert got == {1: "delete", 3: "update", 4: "insert"}
-
-
-def test_diff_snapshots_identical_is_empty(spark, tmp_path):
-    from raptor_spark.catalog import Catalog, diff_snapshots
-
-    cat = Catalog(spark, str(tmp_path), keep_snapshots=3)
-    df = spark.createDataFrame([(1, "a"), (2, None)], ["k", "s"])
-    cat.write("t", df)
-    s1 = cat.manifest("t")["snapshot_id"]
-    cat.write("t", spark.createDataFrame([(2, None), (1, "a")], ["k", "s"]))
-    assert diff_snapshots(cat, "t", ["k"], old_snapshot=s1).count() == 0
+def test_crash_at_any_commit_rename_leaves_previous_snapshot(spark, tmp_path, monkeypatch, renames):
+    """A write that crashes at any of the renames a clean write makes lists
+    no new snapshot and leaves the previous one current; a retried write
+    then commits."""
+    clean = str(tmp_path / "clean")
+    Catalog(spark, clean).write("t", spark.range(3))
+    made = renames(clean)
+    Catalog(spark, clean).write("t", spark.range(9))
+    monkeypatch.undo()
+    assert made
+    for k in range(1, len(made) + 1):
+        root = str(tmp_path / f"crash-at-{k}")
+        cat = Catalog(spark, root)
+        cat.write("t", spark.range(3))
+        renames(root, fail_at=k)
+        with pytest.raises(OSError, match="simulated crash"):
+            cat.write("t", spark.range(9))
+        monkeypatch.undo()
+        fresh = Catalog(spark, root)
+        assert [m["snapshot_id"] for m in fresh.snapshots("t")] == [0], k
+        assert fresh.read("t").count() == 3
+        cat.write("t", spark.range(9))
+        fresh = Catalog(spark, root)
+        assert [m["snapshot_id"] for m in fresh.snapshots("t")] == [0, 1]
+        assert fresh.read("t").count() == 9
 
 
 def test_pinned_read_of_unchanged_snapshot_runs_one_job(spark, tmp_path, spark_jobs):
@@ -316,14 +311,14 @@ def test_fresh_instance_sees_other_instance_commits(spark, tmp_path):
         cat.drop("t")
 
 
-def _torn_pointer_json(monkeypatch):
-    """Make every dump of the ``manifest.json`` pointer write half a
-    document and then fail, as a crash mid-write would."""
+def _torn_manifest_json(monkeypatch):
+    """Make every dump of a ``manifest-<n>.json`` write half a document and
+    then fail, as a crash mid-write would."""
 
     def dump(obj, f, **kwargs):
-        if os.path.basename(f.name).startswith("manifest.json"):
+        if os.path.basename(f.name).startswith("manifest-"):
             f.write(json.dumps(obj)[:10])
-            raise OSError("simulated crash while writing the pointer")
+            raise OSError("simulated crash while writing the manifest")
         return json.dump(obj, f, **kwargs)
 
     monkeypatch.setattr(
@@ -331,10 +326,10 @@ def _torn_pointer_json(monkeypatch):
     )
 
 
-def test_crash_writing_pointer_leaves_table_absent_or_readable(spark, tmp_path, monkeypatch):
+def test_crash_writing_manifest_leaves_table_absent_or_readable(spark, tmp_path, monkeypatch):
     cat = Catalog(spark, str(tmp_path))
     cat.write("t", spark.range(3))
-    _torn_pointer_json(monkeypatch)
+    _torn_manifest_json(monkeypatch)
     with pytest.raises(OSError):
         cat.append("log", spark.range(4))  # creates the table
     assert not cat.exists("log") or cat.read("log").count() == 4

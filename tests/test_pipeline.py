@@ -269,3 +269,31 @@ def test_failed_stage_preserves_completed_lineage(
     lineage = p.catalog.read("lineage")
     stages = {r.stage for r in lineage.select("stage").distinct().collect()}
     assert stages == completed
+
+
+def test_crash_at_the_nodes_commit_lists_no_new_snapshot(
+    spark, corpus_rows, tmp_path_factory, monkeypatch, renames
+):
+    """A second run into the same output dir that crashes at the last rename
+    of its nodes commit leaves only the first run's nodes snapshot listed,
+    and a resumed run then gives the first run's nodes and edges."""
+    files = spark.createDataFrame(corpus_rows[:60], schema=FILES_SCHEMA)
+    out_dir = str(tmp_path_factory.mktemp("kg_crash"))
+    nodes_dir = os.path.join(out_dir, "nodes")
+
+    def rows(out):
+        out["extracted"].unpersist()
+        return {t: sorted(map(tuple, out[t].collect())) for t in ("nodes", "edges")}
+
+    made = renames(nodes_dir)
+    first = rows(Pipeline(spark, out_dir).run(files))
+    monkeypatch.undo()
+    assert made
+
+    renames(nodes_dir, fail_at=len(made))
+    with pytest.raises(OSError, match="simulated crash"):
+        Pipeline(spark, out_dir).run(files)
+    monkeypatch.undo()
+    nodes = Pipeline(spark, out_dir).catalog.snapshots("nodes")
+    assert [m["snapshot_id"] for m in nodes] == [0]
+    assert rows(Pipeline(spark, out_dir).run(files, resume=True)) == first
