@@ -165,9 +165,13 @@ def main() -> None:
             return pagerank(graph_edges, n_iter=5).count()
         if args.mode == "linkskew":
             from raptor_spark.cc import connected_components
-            from raptor_spark.link import link_edges
+            from raptor_spark.link import link_edges, name_features
 
-            return connected_components(link_edges(link_triples)).count()
+            feats = name_features(link_triples).persist()
+            try:
+                return connected_components(link_edges(feats)).count()
+            finally:
+                feats.unpersist()
         if args.mode == "mask":
             # T5 span-corruption training-pair emission over the corpus
             # content — the pretraining-data face of the same gate: one

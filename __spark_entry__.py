@@ -721,15 +721,21 @@ def q_kg_graph_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full pipeline (extract→link→cc→materialize) node output."""
     from raptor_spark.cc import connected_components
     from raptor_spark.extract import extract_triples
-    from raptor_spark.link import apply_linking, canonical_mapping, link_edges
+    from raptor_spark.link import (
+        apply_linking,
+        canonical_mapping,
+        link_edges,
+        name_features,
+    )
     from raptor_spark.materialize import build_nodes
     from raptor_spark.schemas import FILES_SCHEMA
     from raptor_spark.synth import generate_corpus
 
     files = spark.createDataFrame(generate_corpus(300), schema=FILES_SCHEMA).repartition(16)
     triples = extract_triples(files).persist()
-    comps = connected_components(link_edges(triples))
-    linked = apply_linking(triples, canonical_mapping(triples, comps))
+    feats = name_features(triples).localCheckpoint()
+    comps = connected_components(link_edges(feats))
+    linked = apply_linking(triples, canonical_mapping(feats, comps))
     return build_nodes(linked)
 
 
@@ -869,7 +875,7 @@ def q_kg_code_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.name").alias("a"), F.col("b.name").alias("b"))
     )
     comps = connected_components(exact)
-    return canonical_mapping(triples, comps, feats).orderBy("name")
+    return canonical_mapping(feats, comps).select("name", "canonical").orderBy("name")
 
 
 def q_kg_code_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -898,7 +904,7 @@ def q_kg_code_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.name").alias("a"), F.col("b.name").alias("b"))
     )
     comps = connected_components(exact)
-    linked = apply_linking(triples, canonical_mapping(triples, comps, feats))
+    linked = apply_linking(triples, canonical_mapping(feats, comps))
     return (
         build_nodes(linked)
         .select("id", "kind", "canonical", "lang", "n_mentions")
@@ -930,7 +936,7 @@ def q_kg_code_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.name").alias("a"), F.col("b.name").alias("b"))
     )
     comps = connected_components(exact)
-    linked = apply_linking(triples, canonical_mapping(triples, comps, feats))
+    linked = apply_linking(triples, canonical_mapping(feats, comps))
     return (
         build_edges(linked)
         .select("src", "dst", "pred", "lang", "weight")

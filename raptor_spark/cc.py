@@ -64,7 +64,7 @@ DRIVER_CC_MAX_EDGES = 4_000_000  # ≤ this many distinct directed edges →
 # ~1-2 GB — fits the default 8g driver with headroom; the loop remains
 # the correct path for truly graph-shaped inputs beyond it). Parity
 # between the two paths is pinned in tests/test_graph_ops.py.
-# The 4M constant assumes that 8g driver: _driver_cc_edge_cap scales it
+# The 4M constant assumes that 8g driver: driver_memory_cap scales it
 # linearly down (500k edges/GiB) when spark.driver.memory is configured
 # smaller, so a 2g driver never collects an edge set sized for 8g.
 
@@ -99,11 +99,6 @@ def capped_count(df: DataFrame, cap: int) -> int:
     constant column, so sizing an input ships at most cap + 1 ints to the
     driver and none of its rows (a plain count runs 2-3 jobs under AQE)."""
     return len(df.limit(cap + 1).select(F.lit(1)).toPandas())
-
-
-def _driver_cc_edge_cap(spark) -> int:
-    """DRIVER_CC_MAX_EDGES scaled by the session's driver memory."""
-    return driver_memory_cap(spark, DRIVER_CC_MAX_EDGES)
 
 
 def _driver_union_find(edges: pd.DataFrame, dt: DataType, spark) -> DataFrame:
@@ -156,7 +151,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
     member name of the component. Vertices = all endpoint names.
 
     The driver fast path's gate is DRIVER_CC_MAX_EDGES scaled by the
-    session's spark.driver.memory (_driver_cc_edge_cap). It sizes the raw
+    session's spark.driver.memory (driver_memory_cap). It sizes the raw
     edge rows with one capped count. Each row makes at most two directed
     edges, so ≤ half the cap in rows keeps the distinct directed edge set
     within the measured cap. For distinct ``a < b`` rows — link_edges
@@ -166,7 +161,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
     (merge_components' star carries one self-loop row per component root)
     can go to the loop below the distinct-edge cap, by at most a factor of
     two in rows."""
-    max_rows = _driver_cc_edge_cap(edges.sparkSession) // 2
+    max_rows = driver_memory_cap(edges.sparkSession, DRIVER_CC_MAX_EDGES) // 2
     # persist BEFORE sizing: over the cap, the count otherwise computes the
     # full (typically expensive, unpersisted) edge lineage once, and the
     # loop a second time — measured 2× the whole linking stage at 100k files

@@ -38,8 +38,9 @@ share every hash value:
   expression, then one distinct of the verified pairs and one of the
   union.
 
-``canonical_mapping`` takes the min ``norm`` per component in pandas over
-one collect below the same cap, and is a lazy join + groupBy + join above it.
+The caller persists ``name_features`` and hands it to ``link_edges`` and
+to ``canonical_mapping``, whose ``(name, component, canonical)`` rows over
+every featurized name are the pipeline's committed ``components`` table.
 """
 
 from __future__ import annotations
@@ -110,7 +111,11 @@ _EDGE_SCHEMA = StructType(
     [StructField("a", StringType(), False), StructField("b", StringType(), False)]
 )
 _MAPPING_SCHEMA = StructType(  # the distributed mapping's, nullability included
-    [StructField("name", StringType(), False), StructField("canonical", StringType(), True)]
+    [
+        StructField("name", StringType(), False),
+        StructField("component", StringType(), False),
+        StructField("canonical", StringType(), True),
+    ]
 )
 
 
@@ -132,16 +137,15 @@ def _featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def name_features(triples: DataFrame) -> DataFrame:
     """Distinct defined names, featurized, with the head-symbol flag — the
-    shared name-dimension table for ``link_edges`` AND ``canonical_mapping``.
+    name-dimension table ``link_edges`` AND ``canonical_mapping`` read.
 
     One groupBy shuffle on the name dimension replaces the old
     distinct → groupBy → distinct chain (three shuffles), and the
     head-threshold denominator (count of distinct repos with ≥1 defined
     name) is a one-row aggregate broadcast back in — lazy, instead of an
     eager driver ``count()`` before any linking work could start. The
-    pipeline computes this once, persists it, and threads it through both
-    consumers; previously each recomputed the name distinct and the
-    featurize pass from the triple table.
+    caller persists it and hands it to both consumers, so the name
+    distinct and the featurize pass run once.
     """
     names_repo = triples.filter(F.col("pred") == PRED_DEFINES).select(
         F.split(F.col("obj"), "@").getItem(0).alias("name"),
@@ -237,39 +241,28 @@ def _driver_link_pairs(sig: pd.DataFrame) -> list[tuple[str, str]]:
     return sorted(pairs)
 
 
-def link_edges(triples: DataFrame, feats: DataFrame | None = None) -> DataFrame:
-    """(a, b) undirected link edges between defined names, a < b.
+def link_edges(feats: DataFrame) -> DataFrame:
+    """(a, b) undirected link edges between the names of ``feats``, a < b.
 
-    ``feats`` — a precomputed (ideally persisted) ``name_features`` table;
-    pass it when another consumer (``canonical_mapping``) shares the same
-    name dimension so the distinct+featurize pass runs once per pipeline.
-    Without it, the features are built, persisted and released here.
+    ``feats`` is a ``name_features`` table, persisted by the caller, which
+    hands the same table to ``canonical_mapping``.
 
     Up to the name cap (DRIVER_LINK_MAX_NAMES, scaled by spark.driver.memory)
     the signature rows are collected in one job and blocked, bucketed and
     verified on the driver; above it the distributed path runs. Both give
     the same edge set (parity-pinned in tests/test_linking.py).
     """
-    owned = feats is None
-    if owned:
-        feats = name_features(triples).persist()
-    try:
-        spark = feats.sparkSession
-        sig = _signatures(feats)
-        # size the name set with a capped count: above the cap no signature
-        # is computed or collected on the way to the distributed path
-        cap = driver_memory_cap(spark, DRIVER_LINK_MAX_NAMES)
-        if capped_count(feats, cap) > cap:
-            edges = _distributed_link_edges(feats, sig)
-            # computed before the features it reads are released below
-            return edges.localCheckpoint() if owned else edges
-        return spark.createDataFrame(
-            pd.DataFrame(_driver_link_pairs(sig.toPandas()), columns=["a", "b"], dtype=object),
-            _EDGE_SCHEMA,
-        )
-    finally:
-        if owned:
-            feats.unpersist()
+    spark = feats.sparkSession
+    sig = _signatures(feats)
+    # size the name set with a capped count: above the cap no signature
+    # is computed or collected on the way to the distributed path
+    cap = driver_memory_cap(spark, DRIVER_LINK_MAX_NAMES)
+    if capped_count(feats, cap) > cap:
+        return _distributed_link_edges(feats, sig)
+    return spark.createDataFrame(
+        pd.DataFrame(_driver_link_pairs(sig.toPandas()), columns=["a", "b"], dtype=object),
+        _EDGE_SCHEMA,
+    )
 
 
 def _distributed_link_edges(feats: DataFrame, sig: DataFrame) -> DataFrame:
@@ -350,20 +343,17 @@ def _distributed_link_edges(feats: DataFrame, sig: DataFrame) -> DataFrame:
     return exact.unionByName(verified).distinct()
 
 
-def canonical_mapping(
-    triples: DataFrame, components: DataFrame, feats: DataFrame | None = None
-) -> DataFrame:
-    """name → canonical, where canonical = min normalized name within the
-    component (matches the oracle). ``components`` is (name, component) from
-    raptor_spark.cc; names not in any component map to their own norm.
-    ``feats`` — optional shared ``name_features`` table (see link_edges).
+def canonical_mapping(feats: DataFrame, components: DataFrame) -> DataFrame:
+    """(name, component, canonical) for every name of ``feats``, where
+    canonical = min normalized name within the component (matches the
+    oracle). ``components`` is (name, component) from raptor_spark.cc; a
+    name in none is its own component, so its canonical is its own norm.
+    ``feats`` is the ``name_features`` table ``link_edges`` read.
 
     Up to the name cap ``link_edges`` uses, the (name, norm, component)
     rows are collected once and the min per component is taken in
     pandas, so the mapping is a small local frame; above it, the mapping is
     a lazy join + groupBy + join."""
-    if feats is None:
-        feats = name_features(triples)
     feats = feats.select("name", "norm")
     with_comp = feats.join(components, on="name", how="left").withColumn(
         "component", F.coalesce(F.col("component"), F.col("name"))
@@ -372,14 +362,15 @@ def canonical_mapping(
     cap = driver_memory_cap(spark, DRIVER_LINK_MAX_NAMES)
     if capped_count(feats, cap) > cap:
         canon = with_comp.groupBy("component").agg(F.min("norm").alias("canonical"))
-        return with_comp.join(canon, on="component").select("name", "canonical")
+        return with_comp.join(canon, on="component").select("name", "component", "canonical")
     pdf = with_comp.toPandas()
     pdf["canonical"] = pdf.groupby("component")["norm"].transform("min")
-    return spark.createDataFrame(pdf[["name", "canonical"]], _MAPPING_SCHEMA)
+    return spark.createDataFrame(pdf[["name", "component", "canonical"]], _MAPPING_SCHEMA)
 
 
 def apply_linking(triples: DataFrame, mapping: DataFrame) -> DataFrame:
-    """Stage-2 output: triples + subj_canonical/obj_canonical columns.
+    """Stage-2 output: triples + subj_canonical/obj_canonical columns, looked
+    up by name in ``mapping`` (the ``canonical_mapping`` rows).
 
     * file-defines-symbol: obj_canonical = canonical of the defined name.
     * symbol-calls-symbol: subj_canonical = canonical of the enclosing def;

@@ -14,9 +14,11 @@ failed runs included: one new lineage snapshot per run.
 
 Stages:
   extracted  — triples (extract.extract_triples)
-  components — (name, component) from LSH link + connected components; the
-               linking checkpoint: the triples' canonical columns are added
-               in memory from a mapping rebuilt from it, never committed
+  components — (name, component, canonical) for every featurized name: LSH
+               link + connected components + the min norm per component.
+               The linking checkpoint: a resume past it computes no name
+               features, and the linked triples are built from it in memory,
+               never committed
   nodes / edges — final graph, partitioned (lang, repo_bucket), built and
                committed one after the other, each write using every core
 
@@ -189,27 +191,22 @@ class Pipeline:
             # per-bucket counts of the committed triple table: the lineage
             # triple_count of extracted, nodes and edges
             tc = triple_rollup(triples).persist()
-            # one featurized name-dimension table shared by linking and the
-            # canonical mapping — lazy, so resume-skipped stages never compute it
+            # the featurized name dimension linking and the mapping share —
+            # lazy, so a resume past `components` never computes it
             feats = name_features(triples).persist()
             intermediates += [tc, feats]
 
             # -- stage 2: components ------------------------------------------
             comps, wall_ms["components"] = self._stage(
                 "components",
-                lambda: connected_components(link_edges(triples, feats=feats)),
+                lambda: canonical_mapping(feats, connected_components(link_edges(feats))),
                 fingerprint,
                 resume,
             )
 
-            # triples + canonical columns. `components` is the linking
-            # checkpoint: the name → canonical mapping is a names-sized min
-            # per component over it (on the driver below the link name cap),
-            # so the linked triples stay in memory instead of being
-            # committed as a second copy of the triple table
-            linked = apply_linking(
-                triples, canonical_mapping(triples, comps, feats=feats)
-            ).persist()
+            # triples + canonical columns from the committed mapping, kept in
+            # memory instead of committed as a second copy of the triple table
+            linked = apply_linking(triples, comps).persist()
             intermediates.append(linked)
 
             # -- stage 3: nodes / edges ---------------------------------------

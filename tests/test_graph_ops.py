@@ -188,8 +188,8 @@ def test_driver_cc_edge_cap_scales_with_driver_memory(spark):
 
     from raptor_spark.cc import (
         DRIVER_CC_MAX_EDGES,
-        _driver_cc_edge_cap,
         _parse_memory_gib,
+        driver_memory_cap,
     )
 
     assert _parse_memory_gib("8g") == 8.0
@@ -205,15 +205,15 @@ def test_driver_cc_edge_cap_scales_with_driver_memory(spark):
             conf=SimpleNamespace(get=lambda key, default=None: mem)
         )
 
-    assert _driver_cc_edge_cap(fake("8g")) == DRIVER_CC_MAX_EDGES
-    assert _driver_cc_edge_cap(fake("16g")) == DRIVER_CC_MAX_EDGES  # capped
-    assert _driver_cc_edge_cap(fake("2g")) == DRIVER_CC_MAX_EDGES // 4
-    assert _driver_cc_edge_cap(fake("1g")) == DRIVER_CC_MAX_EDGES // 8
-    assert _driver_cc_edge_cap(fake("not-a-size")) == DRIVER_CC_MAX_EDGES // 8
+    assert driver_memory_cap(fake("8g"), DRIVER_CC_MAX_EDGES) == DRIVER_CC_MAX_EDGES
+    assert driver_memory_cap(fake("16g"), DRIVER_CC_MAX_EDGES) == DRIVER_CC_MAX_EDGES  # capped
+    assert driver_memory_cap(fake("2g"), DRIVER_CC_MAX_EDGES) == DRIVER_CC_MAX_EDGES // 4
+    assert driver_memory_cap(fake("1g"), DRIVER_CC_MAX_EDGES) == DRIVER_CC_MAX_EDGES // 8
+    assert driver_memory_cap(fake("not-a-size"), DRIVER_CC_MAX_EDGES) == DRIVER_CC_MAX_EDGES // 8
 
     # the real session resolves a positive cap and the default-gated path
     # still matches the pinned-gate paths above
-    cap = _driver_cc_edge_cap(spark)
+    cap = driver_memory_cap(spark, DRIVER_CC_MAX_EDGES)
     assert 0 < cap <= DRIVER_CC_MAX_EDGES
     se = spark.createDataFrame([("b", "a"), ("c", "b")], ["a", "b"])
     auto = {(r.name, r.component) for r in connected_components(se).collect()}

@@ -21,10 +21,12 @@ from raptor_spark.tokenize import PRED_DEFINES
 
 @pytest.fixture(scope="module")
 def mapping(triples_df):
-    comps = connected_components(link_edges(triples_df))
-    return {
-        r.name: r.canonical for r in canonical_mapping(triples_df, comps).collect()
-    }
+    feats = name_features(triples_df).persist()
+    try:
+        comps = connected_components(link_edges(feats))
+        return {r.name: r.canonical for r in canonical_mapping(feats, comps).collect()}
+    finally:
+        feats.unpersist()
 
 
 def test_alias_clusters_merge(mapping):
@@ -150,9 +152,9 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
     for max_bucket in (link.MAX_BAND_BUCKET, 10**6):
         monkeypatch.setattr(link, "MAX_BAND_BUCKET", max_bucket)
         monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", 10**6)
-        driver = link_edges(None, parity_feats)
+        driver = link_edges(parity_feats)
         monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", 0)
-        dist = link_edges(None, parity_feats)
+        dist = link_edges(parity_feats)
         edge_sets[max_bucket] = _pairs(driver)
         assert edge_sets[max_bucket] == _pairs(dist)
 
@@ -163,9 +165,9 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
         assert _pairs(comps) == _pairs(comps_dist)
 
         monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", 10**6)
-        mapping = canonical_mapping(None, comps, parity_feats)
+        mapping = canonical_mapping(parity_feats, comps)
         monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", 0)
-        mapping_dist = canonical_mapping(None, comps_dist, parity_feats)
+        mapping_dist = canonical_mapping(parity_feats, comps_dist)
         # the driver mapping is a local frame, the distributed one a groupBy
         assert _plan_has(mapping, "LocalRelation") and not _plan_has(mapping, "Aggregate")
         assert _plan_has(mapping_dist, "Aggregate")
@@ -194,21 +196,7 @@ def test_driver_linking_runs_few_jobs(spark, parity_feats, spark_jobs):
     parity_feats.count()
 
     def chain():
-        comps = connected_components(link_edges(None, parity_feats))
-        canonical_mapping(None, comps, parity_feats).collect()
+        comps = connected_components(link_edges(parity_feats))
+        canonical_mapping(parity_feats, comps).collect()
 
     assert spark_jobs(chain) <= 7
-
-
-@pytest.mark.parametrize("max_names", [10**6, 0], ids=["driver", "distributed"])
-def test_link_edges_releases_its_own_features(spark, triples_df, monkeypatch, max_names):
-    """Called without ``feats``, link_edges releases the name features it
-    persisted, on either path, and the edges it returns stay readable."""
-    import raptor_spark.link as link
-
-    monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", max_names)
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    before = cache.cachedData().size()
-    edges = link_edges(triples_df)
-    assert cache.cachedData().size() == before
-    assert edges.count() > 0

@@ -26,6 +26,7 @@ def first_run(spark, files_df, run_dir):
         "run_id": p.run_id,
         "tables": {t for t in os.listdir(run_dir) if p.catalog.exists(t)},
         "extracted": out["extracted"].count(),
+        "components": out["components"].toPandas(),
         "nodes": sorted(map(tuple, out["nodes"].collect())),
         "edges": sorted(map(tuple, out["edges"].collect())),
     }
@@ -38,6 +39,45 @@ def test_resume_after_stage_kill_is_equivalent(
     p = Pipeline(spark, run_dir)
     idx = STAGES.index(kill_after)
     for stage in STAGES[idx + 1 :]:
+        p.catalog.drop(stage)
+    out = p.run(files_df, resume=True)
+    assert sorted(map(tuple, out["nodes"].collect())) == first_run["nodes"]
+    assert sorted(map(tuple, out["edges"].collect())) == first_run["edges"]
+
+
+def test_components_is_the_canonical_mapping(corpus_rows, first_run):
+    """The committed linking checkpoint is the name → canonical mapping over
+    every featurized name, as close to the exhaustive oracle's as the
+    linking gate asks (tests/test_linking.py::test_matches_exhaustive_oracle)."""
+    from raptor_spark.oracle import oracle_components, oracle_triples
+
+    comps = first_run["components"]
+    assert list(comps.columns) == ["name", "component", "canonical"]
+    golden = oracle_components(oracle_triples(corpus_rows))
+    assert sorted(comps["name"]) == sorted(golden)
+    got = dict(zip(comps["name"], comps["canonical"]))
+    agree = sum(1 for k in golden if got[k] == golden[k])
+    assert agree / len(golden) >= 0.98, f"agreement {agree / len(golden):.3f}"
+
+
+def test_resume_past_components_computes_no_name_features(
+    spark, files_df, run_dir, first_run, monkeypatch
+):
+    """A resume that reuses the committed ``components`` links the triples
+    from it alone: the name features it is handed raise on any computed row."""
+    import raptor_spark.pipeline as pl
+
+    features = pl.name_features
+
+    def unreadable(triples):
+        # a filter, not a column: column pruning would drop an unread column
+        return features(triples).filter(
+            F.raise_error(F.concat(F.lit("name features computed: "), F.col("name"))).isNull()
+        )
+
+    monkeypatch.setattr(pl, "name_features", unreadable)
+    p = Pipeline(spark, run_dir)
+    for stage in ("nodes", "edges"):
         p.catalog.drop(stage)
     out = p.run(files_df, resume=True)
     assert sorted(map(tuple, out["nodes"].collect())) == first_run["nodes"]
