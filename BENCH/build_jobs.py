@@ -11,8 +11,8 @@ the pipeline stage the job ran in, start offset and duration in ms, the call
 site, and the stage's task count and summed executor run, CPU and JVM GC
 time. Last comes one line per pipeline stage: its wall time, its jobs and
 the summed executor run, CPU and GC time of their stages. Jobs outside
-every ``Pipeline._stage`` step (the input roll-up, the fingerprint, the
-lineage append) are labelled ``-``. The labels come from a job group
+every ``Pipeline._stage`` step (the input roll-up the fingerprint is taken
+from, the triple counts and the lineage append) are labelled ``-``. The labels come from a job group
 this tool sets around each ``Pipeline._stage`` call; the program sets
 none. Spark's stderr goes to stderr as usual.
 """

@@ -36,8 +36,7 @@ def main() -> None:
 
     from raptor_spark.session import build_session
 
-    spark = build_session("raptor_spark.bench", master=f"local[{cpus}]",
-                          shuffle_partitions=2 * cpus)
+    spark = build_session("raptor_spark.bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry_mod

@@ -15,12 +15,14 @@ with different parallelism (SURVEY.md §7.4 risk 3).
 from __future__ import annotations
 
 import uuid
-from collections.abc import Iterable
+from collections.abc import Collection
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from raptor_spark.functions import repo_bucket_col, sha256_col
+from raptor_spark.schemas import LINEAGE_SCHEMA
 
 STATUS_COMPLETE = "complete"
 
@@ -56,8 +58,8 @@ def triple_rollup(triples: DataFrame) -> DataFrame:
     """(partition_id, triple_count) per repo bucket — the output-side half of
     a stage's lineage row. Every stage of one run that records the triple
     table shares these counts (extracted commits it; nodes/edges are built
-    from it plus canonical columns, one row per triple), so compute this
-    once, persist it, and pass it to ``stage_lineage``."""
+    from it plus canonical columns, one row per triple), so collect this
+    once and pass the counts to ``stage_lineage``."""
     return (
         triples.select(repo_bucket_col("repo").alias("partition_id"))
         .groupBy("partition_id")
@@ -66,37 +68,27 @@ def triple_rollup(triples: DataFrame) -> DataFrame:
 
 
 def stage_lineage(
+    spark: SparkSession,
     run_id: str,
     wall_ms_by_stage: dict[str, int],
-    rollup: DataFrame,
-    triple_counts: DataFrame,
-    no_triples: Iterable[str],
+    rollup: list[Row],
+    triple_counts: dict[int, int],
+    no_triples: Collection[str],
 ) -> DataFrame:
-    """Build the lineage rows of every stage a run completed, one per
-    (stage, partition), from the run's persisted ``input_rollup`` (it
-    re-hashes every input row, so one per run) joined once to its persisted
-    ``triple_rollup``. Stages in ``no_triples`` do not record the triple
+    """The lineage rows of every stage a run completed, one per (stage,
+    partition), built on the driver from the run's collected
+    ``input_rollup`` rows and ``triple_rollup`` counts (partition_id →
+    count), each at most N_REPO_BUCKETS long, and handed to Spark as one
+    pandas (Arrow) frame. Stages in ``no_triples`` do not record the triple
     table: their ``triple_count`` is 0."""
-    stages = F.array(
-        *[
-            F.struct(F.lit(s).alias("stage"), F.lit(ms).cast("long").alias("wall_ms"))
-            for s, ms in wall_ms_by_stage.items()
-        ]
+    pdf = pd.DataFrame(
+        [
+            (run_id, stage, r.partition_id, r.input_sha256_rollup, r.row_count,
+             0 if stage in no_triples else triple_counts.get(r.partition_id, 0),
+             ms, STATUS_COMPLETE)
+            for stage, ms in wall_ms_by_stage.items()
+            for r in rollup
+        ],
+        columns=LINEAGE_SCHEMA.fieldNames(),
     )
-    triple_count = F.when(F.col("s.stage").isin(*no_triples), F.lit(0)).otherwise(
-        F.coalesce(F.col("triple_count"), F.lit(0))
-    )
-    return (
-        rollup.join(triple_counts, on="partition_id", how="left")
-        .withColumn("s", F.explode(stages))
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("s.stage").alias("stage"),
-            F.col("partition_id"),
-            F.col("input_sha256_rollup"),
-            F.col("row_count").cast("long"),
-            triple_count.cast("long").alias("triple_count"),
-            F.col("s.wall_ms").alias("wall_ms"),
-            F.lit(STATUS_COMPLETE).alias("status"),
-        )
-    )
+    return spark.createDataFrame(pdf, LINEAGE_SCHEMA)

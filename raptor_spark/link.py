@@ -41,6 +41,8 @@ share every hash value:
 The caller persists ``name_features`` and hands it to ``link_edges`` and
 to ``canonical_mapping``, whose ``(name, component, canonical)`` rows over
 every featurized name are the pipeline's committed ``components`` table.
+The mapping is one lazy expression at every size (a join and a window
+min), so only ``link_edges`` and ``cc.connected_components`` pick a path.
 """
 
 from __future__ import annotations
@@ -50,7 +52,7 @@ from collections.abc import Iterator
 from itertools import combinations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -110,13 +112,6 @@ _NAME_FEATURES_SCHEMA = StructType(
 _EDGE_SCHEMA = StructType(
     [StructField("a", StringType(), False), StructField("b", StringType(), False)]
 )
-_MAPPING_SCHEMA = StructType(  # the distributed mapping's, nullability included
-    [
-        StructField("name", StringType(), False),
-        StructField("component", StringType(), False),
-        StructField("canonical", StringType(), True),
-    ]
-)
 
 
 def _featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -141,11 +136,12 @@ def name_features(triples: DataFrame) -> DataFrame:
 
     One groupBy shuffle on the name dimension replaces the old
     distinct → groupBy → distinct chain (three shuffles), and the
-    head-threshold denominator (count of distinct repos with ≥1 defined
-    name) is a one-row aggregate broadcast back in — lazy, instead of an
-    eager driver ``count()`` before any linking work could start. The
-    caller persists it and hands it to both consumers, so the name
-    distinct and the featurize pass run once.
+    head-threshold denominator (count of distinct repos in ``triples``,
+    defining a name or not, as ``oracle._head_names`` counts them) is a
+    one-row aggregate broadcast back in — lazy, instead of an eager driver
+    ``count()`` before any linking work could start. The caller persists
+    it and hands it to both consumers, so the name distinct and the
+    featurize pass run once.
     """
     names_repo = triples.filter(F.col("pred") == PRED_DEFINES).select(
         F.split(F.col("obj"), "@").getItem(0).alias("name"),
@@ -154,7 +150,7 @@ def name_features(triples: DataFrame) -> DataFrame:
     per_name = names_repo.groupBy("name").agg(
         F.countDistinct("repo").alias("df_repos")
     )
-    total = names_repo.agg(F.countDistinct("repo").alias("total_repos"))
+    total = triples.agg(F.countDistinct("repo").alias("total_repos"))
     flagged = per_name.join(F.broadcast(total), how="cross").select(
         "name",
         (
@@ -350,22 +346,16 @@ def canonical_mapping(feats: DataFrame, components: DataFrame) -> DataFrame:
     name in none is its own component, so its canonical is its own norm.
     ``feats`` is the ``name_features`` table ``link_edges`` read.
 
-    Up to the name cap ``link_edges`` uses, the (name, norm, component)
-    rows are collected once and the min per component is taken in
-    pandas, so the mapping is a small local frame; above it, the mapping is
-    a lazy join + groupBy + join."""
-    feats = feats.select("name", "norm")
-    with_comp = feats.join(components, on="name", how="left").withColumn(
-        "component", F.coalesce(F.col("component"), F.col("name"))
+    One lazy expression at every size: a left join of the names to their
+    components, then the min ``norm`` over a window per component."""
+    with_comp = feats.join(components, on="name", how="left").select(
+        "name", F.coalesce(F.col("component"), F.col("name")).alias("component"), "norm"
     )
-    spark = feats.sparkSession
-    cap = driver_memory_cap(spark, DRIVER_LINK_MAX_NAMES)
-    if capped_count(feats, cap) > cap:
-        canon = with_comp.groupBy("component").agg(F.min("norm").alias("canonical"))
-        return with_comp.join(canon, on="component").select("name", "component", "canonical")
-    pdf = with_comp.toPandas()
-    pdf["canonical"] = pdf.groupby("component")["norm"].transform("min")
-    return spark.createDataFrame(pdf[["name", "component", "canonical"]], _MAPPING_SCHEMA)
+    return with_comp.select(
+        "name",
+        "component",
+        F.min("norm").over(Window.partitionBy("component")).alias("canonical"),
+    )
 
 
 def apply_linking(triples: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -29,11 +29,12 @@ Run:  python -m raptor_spark.pipeline --input <files.parquet> --output <dir>
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 from raptor_spark.catalog import Catalog
 from raptor_spark.cc import connected_components
@@ -74,14 +75,12 @@ LAYOUT: dict[str, list[str] | None] = {
 }
 
 
-def _corpus_fingerprint(rollup: DataFrame) -> str:
+def _corpus_fingerprint(rollup: list[Row]) -> str:
     """Global order-insensitive fingerprint of the input corpus (sha256 of
-    sorted per-bucket roll-ups) — the cross-stage validity key."""
-    rows = rollup.select("input_sha256_rollup").collect()
-    import hashlib
-
+    the sorted per-bucket roll-ups of the collected ``input_rollup`` rows)
+    — the cross-stage validity key."""
     h = hashlib.sha256()
-    for r in sorted(x.input_sha256_rollup for x in rows):
+    for r in sorted(x.input_sha256_rollup for x in rollup):
         h.update(r.encode())
     return h.hexdigest()
 
@@ -168,12 +167,12 @@ class Pipeline:
         incremental_from: str | None = None,
     ) -> dict[str, DataFrame]:
         files = files.persist()
-        # one content pass feeds the fingerprint AND every stage's lineage
-        rollup = input_rollup(files).persist()
-        intermediates = [files, rollup]
+        intermediates = [files]
         wall_ms: dict[str, int | None] = {}  # stage → commit ms, None if reused
-        tc = None
         try:
+            # one content pass, collected (≤ N_REPO_BUCKETS rows), feeds the
+            # fingerprint AND every stage's lineage
+            rollup = input_rollup(files).collect()
             fingerprint = _corpus_fingerprint(rollup)
 
             # -- stage 1: extract ---------------------------------------------
@@ -188,13 +187,10 @@ class Pipeline:
                 resume,
             )
             triples = triples.persist()
-            # per-bucket counts of the committed triple table: the lineage
-            # triple_count of extracted, nodes and edges
-            tc = triple_rollup(triples).persist()
             # the featurized name dimension linking and the mapping share —
             # lazy, so a resume past `components` never computes it
             feats = name_features(triples).persist()
-            intermediates += [tc, feats]
+            intermediates.append(feats)
 
             # -- stage 2: components ------------------------------------------
             comps, wall_ms["components"] = self._stage(
@@ -219,13 +215,16 @@ class Pipeline:
                 )
         finally:
             # the audit rows of every stage this run committed, failed runs
-            # included, in one append — before the roll-ups they read go
+            # included, in one append. A committed stage means the triples
+            # exist; a run that reuses every stage counts none of them
             committed = {s: ms for s, ms in wall_ms.items() if ms is not None}
             if committed:
                 self.catalog.append(
                     "lineage",
                     stage_lineage(
-                        self.run_id, committed, rollup, tc, no_triples=("components",)
+                        self.spark, self.run_id, committed, rollup,
+                        dict(triple_rollup(triples).collect()),
+                        no_triples=("components",),
                     ),
                 )
             for df in intermediates:

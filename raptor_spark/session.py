@@ -16,20 +16,17 @@ from raptor_spark.schemas import N_REPO_BUCKETS
 def build_session(
     app_name: str = "raptor_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     """AQE on (coalesce + skew-join), Arrow on for pandas UDFs, sane batch
     sizes for multi-MB ``content`` rows (SURVEY.md §7.4 risk 5)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        n = int(master[master.index("[") + 1 : -1]) if "[" in master and "*" not in master else (os.cpu_count() or 8)
-        shuffle_partitions = max(8, 2 * n)
+    n = int(master[master.index("[") + 1 : -1]) if "[" in master and "*" not in master else (os.cpu_count() or 8)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(8, 2 * n)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -12,7 +12,7 @@ from raptor_spark.synth import generate_corpus
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session("raptor_spark.tests", master="local[8]", shuffle_partitions=16)
+    s = build_session("raptor_spark.tests", master="local[8]")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

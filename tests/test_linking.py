@@ -6,6 +6,7 @@ from collections import Counter
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import StringType
 
 from raptor_spark.cc import connected_components
 from raptor_spark.link import canonical_mapping, link_edges, name_features
@@ -16,7 +17,7 @@ from raptor_spark.oracle import (
     oracle_triples,
 )
 from raptor_spark.synth import ALIAS_CLUSTERS, HEAD_SYMBOLS
-from raptor_spark.tokenize import PRED_DEFINES
+from raptor_spark.tokenize import PRED_CONTAINS, PRED_DEFINES
 
 
 @pytest.fixture(scope="module")
@@ -95,6 +96,19 @@ def test_name_features_matches_oracle(feats, corpus_rows):
     assert {r.name for r in feats if r.is_head} == _head_names(triples)
 
 
+def test_head_share_counts_every_repo(spark):
+    """The head threshold divides by every repo in the triples, as the
+    oracle does, not only by the repos that define a name: ``foo`` is
+    defined in 2 of 6 repos, so it is not a head."""
+    triples = [
+        (f"{repo}:m.py", PRED_DEFINES, f"{name}@{repo}/m.py", repo)
+        for name, repo in (("foo", "r1"), ("foo", "r2"), ("bar", "r3"))
+    ] + [(repo, PRED_CONTAINS, f"{repo}/m.py", repo) for repo in ("r4", "r5", "r6")]
+    df = spark.createDataFrame(triples, "subj string, pred string, obj string, repo string")
+    got = {r.name for r in name_features(df).filter("is_head").collect()}
+    assert got == _head_names(triples) == set()
+
+
 # -- driver path vs distributed path ------------------------------------------
 
 
@@ -127,14 +141,10 @@ def _pairs(df):
     return {tuple(r) for r in df.collect()}
 
 
-def _plan_has(df, node: str) -> bool:
-    return node in df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
-    """Below and above the name cap, link_edges, connected_components and
-    canonical_mapping give identical rows — with and without the oversize
-    bucket drop."""
+    """Below and above the name cap, link_edges and connected_components
+    give identical rows, and so does canonical_mapping over either's
+    components — with and without the oversize bucket drop."""
     import raptor_spark.cc as cc
     import raptor_spark.link as link
 
@@ -164,13 +174,13 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
         comps_dist = connected_components(dist)
         assert _pairs(comps) == _pairs(comps_dist)
 
-        monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", 10**6)
         mapping = canonical_mapping(parity_feats, comps)
-        monkeypatch.setattr(link, "DRIVER_LINK_MAX_NAMES", 0)
         mapping_dist = canonical_mapping(parity_feats, comps_dist)
-        # the driver mapping is a local frame, the distributed one a groupBy
-        assert _plan_has(mapping, "LocalRelation") and not _plan_has(mapping, "Aggregate")
-        assert _plan_has(mapping_dist, "Aggregate")
+        assert [(f.name, f.dataType, f.nullable) for f in mapping.schema] == [
+            ("name", StringType(), False),
+            ("component", StringType(), False),
+            ("canonical", StringType(), True),
+        ]
         assert mapping.schema == mapping_dist.schema
         assert _pairs(mapping) == _pairs(mapping_dist)
 
@@ -190,9 +200,9 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
 def test_driver_linking_runs_few_jobs(spark, parity_feats, spark_jobs):
     """Below the cap, the linking chain over materialized name features
     runs a handful of Spark jobs: a capped count and a collect each for the
-    signatures, the edges and the mapping, plus the broadcast job of the
-    mapping's collect. The mapping is collected here so that its jobs count
-    on either path."""
+    signatures and the edges, then the mapping's own collect (a join and a
+    window, with no count and no driver round trip of its own). The mapping
+    is collected here so that its jobs count."""
     parity_feats.count()
 
     def chain():

@@ -3,11 +3,13 @@
 from __future__ import annotations
 
 import glob
+import json
 import os
 import uuid
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import StructType
 
 from raptor_spark.pipeline import STAGES, Pipeline
 from raptor_spark.schemas import FILES_SCHEMA, LINEAGE_SCHEMA
@@ -27,6 +29,7 @@ def first_run(spark, files_df, run_dir):
         "tables": {t for t in os.listdir(run_dir) if p.catalog.exists(t)},
         "extracted": out["extracted"].count(),
         "components": out["components"].toPandas(),
+        "lineage_schema": StructType.fromJson(json.loads(p.catalog.manifest("lineage")["schema"])),
         "nodes": sorted(map(tuple, out["nodes"].collect())),
         "edges": sorted(map(tuple, out["edges"].collect())),
     }
@@ -91,6 +94,11 @@ def test_lineage_rows_written(spark, files_df, run_dir, first_run):
     lineage = Pipeline(spark, run_dir).catalog.read("lineage")
     assert [(f.name, f.dataType) for f in lineage.schema] == [
         (f.name, f.dataType) for f in LINEAGE_SCHEMA
+    ]
+    # a parquet read makes every column nullable: the schema the first run
+    # committed its rows with is LINEAGE_SCHEMA, nullability included
+    assert [(f.name, f.dataType, f.nullable) for f in first_run["lineage_schema"]] == [
+        (f.name, f.dataType, f.nullable) for f in LINEAGE_SCHEMA
     ]
     first = lineage.filter(F.col("run_id") == first_run["run_id"])
     triple_counts = {
