@@ -6,7 +6,9 @@ Runs one ``Pipeline.run`` in a fresh perfbench session over the corpus the
 ``build_bulk`` workload generates for ``seed``, without the perfbench
 tracer (which persists and counts inside every layer, so a traced build
 runs a longer plan). Then prints the build's wall time, its Spark job
-count, and one line per job and per stage read from Spark's status store:
+count, the build's milliseconds with no Spark job running (``no_job_ms``:
+the wall minus the union of the jobs' submission-to-completion intervals),
+and one line per job and per stage read from Spark's status store:
 the pipeline stage the job ran in, start offset and duration in ms, the call
 site, and the stage's task count and summed executor run, CPU and JVM GC
 time. Last comes one line per pipeline stage: its wall time, its jobs and
@@ -37,6 +39,18 @@ def _seq(seq) -> list:
 
 def _ms(opt_date) -> int | None:
     return opt_date.get().getTime() if opt_date.isDefined() else None
+
+
+def _uncovered_ms(intervals: list[tuple[int, int]], wall_ms: int) -> int:
+    """The milliseconds of ``[0, wall_ms]`` that no ``(start, end)`` interval
+    covers."""
+    covered = reach = 0
+    for start, end in sorted(intervals):
+        start, end = max(start, reach), min(end, wall_ms)
+        if end > start:
+            covered += end - start
+            reach = end
+    return wall_ms - covered
 
 
 def _label_stages(pipeline_cls, sc, walls: dict[str, float]) -> None:
@@ -97,6 +111,8 @@ def main() -> None:
         )
         print(f"wall_s {wall:.3f}")
         print(f"spark_jobs {len(jobs)}")
+        spans = [(_ms(j.submissionTime()) - t0_ms, _ms(j.completionTime()) - t0_ms) for j in jobs]
+        print(f"no_job_ms {_uncovered_ms(spans, round(wall * 1000))}")
         print("job  stage        start_ms    dur_ms  call site")
         # stage → [jobs, run ms, cpu ms, gc ms]
         summary = {stage: [0, 0, 0, 0] for stage in (*walls, "-")}

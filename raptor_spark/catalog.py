@@ -34,7 +34,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 HOLD_MAX_BYTES = 8 << 20  # ≤ this many committed parquet bytes → a current
 # read holds the snapshot in Spark's in-memory columnar cache (see
@@ -163,35 +163,30 @@ class Catalog:
     running after the commit (speculation, a lost executor) could add a file
     to a committed data dir, and a read would see it.
 
-    Reads are pinned to the committed snapshot: ``read`` re-reads the
-    manifest on every call but returns the DataFrame this instance resolved
-    while the manifest names the same commit (``snapshot_id``,
-    ``committed_at``). The frame is built with the recorded schema and keeps
-    the file index it listed, so later reads infer no schema and list
-    nothing.
-
-    A current read of a small table is also HELD: ``read(table)`` returns
-    the pinned frame coalesced to ``ceil(bytes / maxPartitionBytes)``
-    partitions and persisted in Spark's in-memory columnar cache, so once
-    the first query fills it, each later query scans memory, not the
-    snapshot's (often ~100, partition-split) parquet files. Held is a
-    snapshot read as current whose manifest records ``bytes`` ≤
-    ``HOLD_MAX_BYTES``; reads by snapshot id are never held. A held frame
-    is released (unpersisted) when this instance resolves a newer commit
-    of the table, when ``_prune`` deletes its snapshot, or when the table
-    is dropped. Builds read by snapshot id (``Pipeline``), and ``merge``
-    and ``append`` read the current snapshot unheld, so a build never fills
-    the cache with tables it is about to replace.
+    A current read keeps one frame per table: ``read(table)`` builds the
+    frame with the recorded schema on the first read of a commit and returns
+    that same frame while the manifest names the same commit
+    (``snapshot_id``, ``committed_at``), so later reads infer no schema and
+    list nothing. When the manifest records ``bytes`` ≤ ``HOLD_MAX_BYTES``
+    the frame is HELD: coalesced to one partition (the cap is far below a
+    128 MB file split) and persisted in Spark's in-memory columnar cache,
+    so once the first query fills it, each later query scans memory, not
+    the snapshot's (often ~100, partition-split) parquet files. The hold is
+    decided once per commit and instance. A table's frame is released
+    (unpersisted if held) when this instance reads a newer commit of it,
+    when ``_prune`` deletes its snapshot, or when the table is dropped. A
+    read by snapshot id builds a fresh frame each time and is never held,
+    and so do ``merge`` and ``append`` for the current rows they rewrite:
+    builds read by snapshot id (``Pipeline``), so a build never fills the
+    cache with tables it is about to replace.
     """
 
     def __init__(self, spark: SparkSession, root: str, keep_snapshots: int = 3):
         self.spark = spark
         self.root = root
         self.keep_snapshots = max(1, keep_snapshots)
-        # (table, snapshot_id) → (committed_at, DataFrame); see ``read``
-        self._pinned: dict[tuple[str, int], tuple[float, DataFrame]] = {}
-        # table → (commit, persisted DataFrame) of its held current snapshot
-        self._held: dict[str, tuple[tuple, DataFrame]] = {}
+        # table → (commit, DataFrame) of its last current read; see ``read``
+        self._frames: dict[str, tuple[tuple, DataFrame]] = {}
         os.makedirs(root, exist_ok=True)
 
     def _dir(self, table: str) -> str:
@@ -301,28 +296,21 @@ class Catalog:
             data = os.path.join(self._dir(table), self.manifest(table, sid)["data_dir"])
             os.remove(self._manifest_path(table, sid))
             shutil.rmtree(data, ignore_errors=True)
-            self._pinned.pop((table, sid), None)
-            held = self._held.get(table)
-            if held is not None and held[0][0] == sid:  # commit[0] is the id
+            cached = self._frames.get(table)
+            if cached is not None and cached[0][0] == sid:  # commit[0] is the id
                 self._release(table)
 
     def append(self, table: str, df: DataFrame) -> dict:
         """Commit the current rows plus ``df`` as a new snapshot
-        (copy-on-write, like ``merge``), keeping the table's partitioning;
-        a missing table is created. A crash before the manifest commit leaves
-        the previous snapshot current, so a reader sees all of an append or
-        none of it. Each append rewrites the whole table: ``lineage`` holds
-        at most 4 stages × 64 buckets = 256 rows per run, so a pipeline run
-        rewrites up to 256 rows per earlier run in its output dir, and the
-        first run into an empty output dir writes only its own rows."""
-        if not self.exists(table):
-            return self.write(table, df)
-        m = self.manifest(table)
-        return self.write(
-            table,
-            self._frame(table, m).unionByName(df),
-            partition_by=m["partition_by"] or None,
-        )
+        (copy-on-write, keeping the table's partitioning and recorded
+        nullability); a missing table is created. A crash before the
+        manifest commit leaves the previous snapshot current, so a reader
+        sees all of an append or none of it. Each append rewrites the whole
+        table: ``lineage`` holds at most 4 stages × 64 buckets = 256 rows per
+        run, so a pipeline run rewrites up to 256 rows per earlier run in its
+        output dir, and the first run into an empty output dir writes only
+        its own rows."""
+        return self._rewrite(table, df, lambda cur: cur.unionByName(df))
 
     def merge(
         self,
@@ -333,8 +321,8 @@ class Catalog:
     ) -> dict:
         """Idempotent upsert-by-key: rows of ``df`` replace current rows with
         the same key; unmatched current rows are carried over. Copy-on-write
-        into a new snapshot — re-running the same merge yields the same
-        logical table (the reference's keyed Qdrant upsert,
+        into a new snapshot, like ``append`` — re-running the same merge
+        yields the same logical table (the reference's keyed Qdrant upsert,
         api_insert.py:88-171). The anti-join side is the incoming batch,
         typically small → Spark broadcasts it; the full-table rewrite is the
         same cost Iceberg/Delta copy-on-write MERGE pays.
@@ -343,60 +331,70 @@ class Catalog:
         batch rows all land in the table (same as Iceberg MERGE, which
         errors on multiple matches; dedupe with a window argmax first if
         the source can repeat keys)."""
+
+        def upsert(cur: DataFrame) -> DataFrame:
+            kept = cur.join(df.select(*key).distinct(), on=key, how="left_anti")
+            return kept.unionByName(df.select(*cur.columns))
+
+        return self._rewrite(table, df, upsert, meta)
+
+    def _rewrite(
+        self,
+        table: str,
+        df: DataFrame,
+        combine: Callable[[DataFrame], DataFrame],
+        meta: dict | None = None,
+    ) -> dict:
+        """The copy-on-write step of ``append`` and ``merge``: ``write(df)``
+        for a missing table, else commit ``combine(current rows)`` as a new
+        snapshot with the table's partitioning. A parquet read makes every
+        column nullable, so the snapshot records a field as nullable only
+        where the table's recorded schema or ``df`` has it nullable."""
         if not self.exists(table):
             return self.write(table, df, meta=meta)
         m = self.manifest(table)
-        cur = self._frame(table, m)
-        merged = cur.join(df.select(*key).distinct(), on=key, how="left_anti").unionByName(
-            df.select(*cur.columns)
-        )
-        return self.write(table, merged, partition_by=m["partition_by"] or None, meta=meta)
+        rows = combine(self._frame(table, m))
+        recorded = StructType.fromJson(json.loads(m["schema"]))
+        nullable = {f.name for f in (*recorded, *df.schema) if f.nullable}
+        fields = [
+            StructField(f.name, f.dataType, f.name in nullable, f.metadata) for f in rows.schema
+        ]
+        meta = {**(meta or {}), "schema": StructType(fields).json()}
+        return self.write(table, rows, partition_by=m["partition_by"] or None, meta=meta)
 
     def read(self, table: str, snapshot: int | None = None) -> DataFrame:
-        """Current table, or a retained snapshot pinned by id (time travel).
-        Returns the frame this instance resolved for the commit the manifest
-        names, resolving it on first use; a current read of a small
-        committed snapshot returns it held in memory, and releases the
-        table's previously held commit (see the class docstring)."""
+        """Current table, or a retained snapshot by id (time travel). A
+        current read returns the frame this instance keeps for the commit
+        the manifest names, held in memory when small, and releases the
+        table's previous frame; a read by id builds a fresh frame (see the
+        class docstring)."""
         m = self.manifest(table, snapshot)
+        if snapshot is not None:
+            return self._frame(table, m)
+        commit = (m["snapshot_id"], m["committed_at"])
+        cached = self._frames.get(table)
+        if cached is not None and cached[0] == commit:
+            return cached[1]
+        self._release(table)
         df = self._frame(table, m)
-        return df if snapshot is not None else self._hold(table, m, df)
+        if m["bytes"] <= HOLD_MAX_BYTES:
+            df = df.coalesce(1).persist()
+        self._frames[table] = (commit, df)
+        return df
 
     def _frame(self, table: str, m: dict) -> DataFrame:
-        """The pinned frame of the commit manifest ``m`` names."""
-        key = (table, m["snapshot_id"])
-        pinned = self._pinned.get(key)
-        if pinned is None or pinned[0] != m["committed_at"]:
-            schema = StructType.fromJson(json.loads(m["schema"]))
-            df = self.spark.read.schema(schema).parquet(os.path.join(self._dir(table), m["data_dir"]))
-            pinned = self._pinned[key] = (m["committed_at"], df)
-        return pinned[1]
-
-    def _hold(self, table: str, m: dict, df: DataFrame) -> DataFrame:
-        """``df`` (the current commit ``m`` names) held in memory when the
-        rules of the class docstring allow it, else ``df`` itself."""
-        commit = (m["snapshot_id"], m["committed_at"])
-        held = self._held.get(table)
-        if held is not None and held[0] == commit:
-            return held[1]
-        self._release(table)
-        if m["bytes"] > HOLD_MAX_BYTES:
-            return df
-        split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        held_df = df.coalesce(max(1, -(-m["bytes"] // split))).persist()
-        self._held[table] = (commit, held_df)
-        return held_df
+        """A frame over the snapshot manifest ``m`` names, read with its
+        recorded schema."""
+        schema = StructType.fromJson(json.loads(m["schema"]))
+        return self.spark.read.schema(schema).parquet(os.path.join(self._dir(table), m["data_dir"]))
 
     def _release(self, table: str) -> None:
-        held = self._held.pop(table, None)
-        if held is not None:
-            held[1].unpersist()
+        cached = self._frames.pop(table, None)
+        if cached is not None and cached[1].is_cached:
+            cached[1].unpersist()
 
     def drop(self, table: str) -> None:
         self._release(table)
-        for key in [k for k in self._pinned if k[0] == table]:
-            del self._pinned[key]
         d = self._dir(table)
         if os.path.exists(d):
             shutil.rmtree(d)
-

@@ -151,21 +151,20 @@ def _py_def_spans(lines: list[str]) -> list[tuple[str, int, int]]:
     return spans
 
 
-def _extract_python(lines: list[str]) -> Iterator[tuple[str, str, int, float]]:
-    """Yield (pred, obj, line, score) for a python file."""
+def _extract_python(file_id: str, lines: list[str]) -> Iterator[tuple[str, str, str, int, float]]:
+    """Yield (subj, pred, obj, line, score) for a python file."""
     for i, line in enumerate(lines, start=1):
         m = _RE_PY_FROM.match(line)
         if m:
-            yield (PRED_IMPORTS, m.group(1), i, 1.0)
+            yield (file_id, PRED_IMPORTS, m.group(1), i, 1.0)
             continue
         m = _RE_PY_IMPORT.match(line)
         if m:
             for mod in re.split(r"\s*,\s*", m.group(1)):
-                yield (PRED_IMPORTS, mod.split(" as ")[0].strip(), i, 1.0)
+                yield (file_id, PRED_IMPORTS, mod.split(" as ")[0].strip(), i, 1.0)
 
-    spans = _py_def_spans(lines)
-    for name, start, end in spans:
-        yield (PRED_DEFINES, f"{name}@{start}", start, 1.0)
+    for name, start, end in _py_def_spans(lines):
+        yield (file_id, PRED_DEFINES, f"{name}@{start}", start, 1.0)
         # calls: span-containment (call line within enclosing def's span) —
         # the interval-join semantics of SURVEY.md §2.3 row 1.
         seen: set[tuple[str, int]] = set()
@@ -177,21 +176,21 @@ def _extract_python(lines: list[str]) -> Iterator[tuple[str, str, int, float]]:
                 key = (callee, j + 1)
                 if key not in seen:
                     seen.add(key)
-                    yield (PRED_CALLS, callee, j + 1, 1.0)
+                    yield (f"{file_id}:{name}", PRED_CALLS, callee, j + 1, 1.0)
 
 
-def _extract_js(lines: list[str]) -> Iterator[tuple[str, str, int, float]]:
+def _extract_js(file_id: str, lines: list[str]) -> Iterator[tuple[str, str, str, int, float]]:
     for i, line in enumerate(lines, start=1):
         for m in _RE_JS_IMPORT_FROM.finditer(line):
-            yield (PRED_IMPORTS, m.group(1), i, 1.0)
+            yield (file_id, PRED_IMPORTS, m.group(1), i, 1.0)
         for m in _RE_JS_REQUIRE.finditer(line):
-            yield (PRED_IMPORTS, m.group(1), i, 1.0)
+            yield (file_id, PRED_IMPORTS, m.group(1), i, 1.0)
         m = _RE_JS_FUNC.match(line) or _RE_JS_CONST_FN.match(line)
         if m:
-            yield (PRED_DEFINES, f"{m.group(1)}@{i}", i, 1.0)
+            yield (file_id, PRED_DEFINES, f"{m.group(1)}@{i}", i, 1.0)
 
 
-def _extract_go(lines: list[str]) -> Iterator[tuple[str, str, int, float]]:
+def _extract_go(file_id: str, lines: list[str]) -> Iterator[tuple[str, str, str, int, float]]:
     in_import_block = False
     for i, line in enumerate(lines, start=1):
         stripped = line.strip()
@@ -204,14 +203,14 @@ def _extract_go(lines: list[str]) -> Iterator[tuple[str, str, int, float]]:
                 continue
             m = _RE_GO_IMPORT.match(line)
             if m:
-                yield (PRED_IMPORTS, m.group(1), i, 1.0)
+                yield (file_id, PRED_IMPORTS, m.group(1), i, 1.0)
             continue
         m = _RE_GO_IMPORT_LINE.match(line)
         if m:
-            yield (PRED_IMPORTS, m.group(1), i, 1.0)
+            yield (file_id, PRED_IMPORTS, m.group(1), i, 1.0)
         m = _RE_GO_FUNC.match(line)
         if m:
-            yield (PRED_DEFINES, f"{m.group(1)}@{i}", i, 1.0)
+            yield (file_id, PRED_DEFINES, f"{m.group(1)}@{i}", i, 1.0)
 
 
 _LANG_EXTRACTORS = {
@@ -265,21 +264,10 @@ def extract_file(
     ]
     if content is None:
         return rows
-    lines = content.split("\n")
     extractor = _LANG_EXTRACTORS.get(lang)
     if extractor is not None:
-        spans = _py_def_spans(lines) if lang == "python" else []
-        for pred, obj, line, score in extractor(lines):
-            if pred == PRED_CALLS:
-                # find enclosing def (span containment)
-                subj = file_id
-                for name, start, end in spans:
-                    if start < line <= end:
-                        subj = f"{file_id}:{name}"
-                        break
-                rows.append((subj, pred, obj, repo, path, line, score))
-            else:
-                rows.append((file_id, pred, obj, repo, path, line, score))
+        for subj, pred, obj, line, score in extractor(file_id, content.split("\n")):
+            rows.append((subj, pred, obj, repo, path, line, score))
     for pred, obj, line, score in _concept_tags(content):
         rows.append((file_id, pred, obj, repo, path, line, score))
     return rows

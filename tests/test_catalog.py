@@ -11,6 +11,7 @@ import types
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import StructType
 
 import raptor_spark.catalog as catalog_mod
 from raptor_spark.catalog import Catalog
@@ -201,10 +202,14 @@ def test_pinned_snapshot_read_survives_new_commit(spark, tmp_path):
 
 def test_prune_drops_pinned_frames(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path), keep_snapshots=2)
+    before = _cached_plans(spark)
     for i in range(4):
         cat.write("t", spark.range(i + 1))
         assert cat.read("t").count() == i + 1
-    assert sorted(sid for _table, sid in cat._pinned) == [2, 3]
+    # one frame, of the current commit; the pruned commits' frames are gone
+    assert [(table, commit[0]) for table, (commit, _df) in cat._frames.items()] == [("t", 3)]
+    assert _cached_plans(spark) == before + 1
+    cat.drop("t")
 
 
 def _cached_plans(spark) -> int:
@@ -256,10 +261,13 @@ def test_table_over_the_cap_is_not_held(spark, tmp_path, monkeypatch):
     cat = Catalog(spark, str(tmp_path))
     m = cat.write("t", _small_table(spark))
     monkeypatch.setattr(catalog_mod, "HOLD_MAX_BYTES", m["bytes"] - 1)
-    assert not cat.read("t").is_cached
+    over = cat.read("t")
+    assert not over.is_cached and cat.read("t") is over
+    # the hold is decided once per commit and instance
     monkeypatch.setattr(catalog_mod, "HOLD_MAX_BYTES", m["bytes"])
-    assert cat.read("t").is_cached
-    cat.drop("t")
+    at_cap = Catalog(spark, str(tmp_path))
+    assert at_cap.read("t").is_cached
+    at_cap.drop("t")
 
 
 def test_new_commit_releases_held_frame(spark, tmp_path):
@@ -294,7 +302,35 @@ def test_drop_releases_held_and_pinned_frames(spark, tmp_path):
     assert _cached_plans(spark) == before + 1
     cat.drop("t")
     assert _cached_plans(spark) == before
-    assert not cat._pinned and not cat.exists("t")
+    assert not cat._frames and not cat.exists("t")
+
+
+def test_rewrites_keep_the_committed_nullability(spark, tmp_path):
+    """``append`` and ``merge`` rewrite the current rows read back from
+    parquet, which makes every column nullable; the snapshots they commit
+    keep the table's recorded nullability, widened only by ``df``'s."""
+    cat = Catalog(spark, str(tmp_path))
+    schema = "id long not null, v string not null, note string"
+
+    def committed():
+        recorded = StructType.fromJson(json.loads(cat.manifest("t")["schema"]))
+        return [(f.name, f.dataType, f.nullable) for f in recorded]
+
+    cat.append("t", spark.createDataFrame([(1, "a", None)], schema))
+    want = committed()
+    assert [f[2] for f in want] == [False, False, True]
+    cat.append("t", spark.createDataFrame([(2, "b", "x")], schema))
+    assert committed() == want
+    cat.append("t", spark.createDataFrame([(3, "c", None)], schema))
+    assert committed() == want
+    cat.merge("t", spark.createDataFrame([(2, "B", None), (4, "d", None)], schema), key=["id"])
+    assert committed() == want
+    assert _rows(cat.read("t")) == [(1, "a", None), (2, "B", None), (3, "c", None), (4, "d", None)]
+    # a nullable incoming column makes the committed one nullable
+    nullable_v = "id long not null, v string, note string"
+    cat.append("t", spark.createDataFrame([(5, None, None)], nullable_v))
+    assert [f[2] for f in committed()] == [False, True, True]
+    cat.drop("t")
 
 
 def test_fresh_instance_sees_other_instance_commits(spark, tmp_path):

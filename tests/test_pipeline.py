@@ -97,9 +97,8 @@ def test_lineage_rows_written(spark, files_df, run_dir, first_run):
     ]
     # a parquet read makes every column nullable: the schema the first run
     # committed its rows with is LINEAGE_SCHEMA, nullability included
-    assert [(f.name, f.dataType, f.nullable) for f in first_run["lineage_schema"]] == [
-        (f.name, f.dataType, f.nullable) for f in LINEAGE_SCHEMA
-    ]
+    want = [(f.name, f.dataType, f.nullable) for f in LINEAGE_SCHEMA]
+    assert [(f.name, f.dataType, f.nullable) for f in first_run["lineage_schema"]] == want
     first = lineage.filter(F.col("run_id") == first_run["run_id"])
     triple_counts = {
         r.stage: r.n
@@ -118,6 +117,16 @@ def test_lineage_rows_written(spark, files_df, run_dir, first_run):
         .filter(F.col("n") > 1)
     )
     assert per_stage.count() == 0
+    # a later run commits its rows with the earlier runs' rows, read back
+    # from parquet, under the same schema
+    later = Pipeline(spark, run_dir)
+    before = later.catalog.manifest("lineage")["snapshot_id"]
+    later.catalog.drop("edges")
+    later.run(files_df, resume=True)["extracted"].unpersist()
+    m = later.catalog.manifest("lineage")
+    assert m["snapshot_id"] == before + 1
+    schema = StructType.fromJson(json.loads(m["schema"]))
+    assert [(f.name, f.dataType, f.nullable) for f in schema] == want
 
 
 def test_incremental_run_equals_full_run(
