@@ -16,18 +16,20 @@ raptor/asset_management/object_store.py:208-269) the pipeline needs:
   snapshot (≙ the reference's Qdrant insert keyed by id,
   qdrant_search_docker/api_insert.py:88-171).
 
-Retention is bounded (``keep_snapshots``) so re-running a pipeline does not
+Retention is bounded (``KEEP_SNAPSHOTS``) so re-running a pipeline does not
 grow the output dir without limit.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import shutil
 import time
 import uuid
+import weakref
 from collections.abc import Callable, Iterator
 
 import pyarrow as pa
@@ -45,6 +47,7 @@ HOLD_MAX_BYTES = 8 << 20  # ≤ this many committed parquet bytes → a current
 # in four files caches at up to 7.8×. So 8 MB holds at most ~64 MB per
 # table, a sixteenth of a 2g driver's ~1 GB unified memory, and the
 # MEMORY_AND_DISK level spills past it rather than failing.
+KEEP_SNAPSHOTS = 3  # snapshots a table retains; older ones are pruned
 
 
 # the characters Spark's writer percent-escapes in a partition directory
@@ -133,6 +136,16 @@ def _arrow_writer(
     return write
 
 
+def _unpersist_held(frames: dict[str, tuple[tuple, DataFrame]]) -> None:
+    """Unpersist the held frames of ``frames`` (a collected ``Catalog``'s).
+    Once the session has stopped, unpersist raises and nothing is left to
+    release, so the error is dropped: a finalizer has no caller to tell."""
+    for _commit, df in frames.values():
+        if df.is_cached:
+            with contextlib.suppress(Exception):
+                df.unpersist()
+
+
 class Catalog:
     """Parquet-backed catalog with manifest 'commits' and snapshot history.
 
@@ -174,19 +187,22 @@ class Catalog:
     the snapshot's (often ~100, partition-split) parquet files. The hold is
     decided once per commit and instance. A table's frame is released
     (unpersisted if held) when this instance reads a newer commit of it,
-    when ``_prune`` deletes its snapshot, or when the table is dropped. A
-    read by snapshot id builds a fresh frame each time and is never held,
-    and so do ``merge`` and ``append`` for the current rows they rewrite:
-    builds read by snapshot id (``Pipeline``), so a build never fills the
-    cache with tables it is about to replace.
+    when ``_prune`` deletes its snapshot, when the table is dropped, or when
+    the instance is garbage-collected. A read by snapshot id builds a fresh
+    frame each time and is never held, and so do ``merge`` and ``append``
+    for the current rows they rewrite: builds read by snapshot id
+    (``Pipeline``), so a build never fills the cache with tables it is
+    about to replace.
     """
 
-    def __init__(self, spark: SparkSession, root: str, keep_snapshots: int = 3):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.keep_snapshots = max(1, keep_snapshots)
         # table → (commit, DataFrame) of its last current read; see ``read``
         self._frames: dict[str, tuple[tuple, DataFrame]] = {}
+        # a collected instance releases what it held; the finalizer holds
+        # the dict, not the instance, so it does not keep the instance alive
+        weakref.finalize(self, _unpersist_held, self._frames).atexit = False
         os.makedirs(root, exist_ok=True)
 
     def _dir(self, table: str) -> str:
@@ -290,9 +306,9 @@ class Catalog:
         os.replace(path + ".tmp", path)
 
     def _prune(self, table: str) -> None:
-        """Delete all but the newest ``keep_snapshots`` snapshots, each
+        """Delete all but the newest ``KEEP_SNAPSHOTS`` snapshots, each
         manifest before its data dir."""
-        for sid in self._snapshot_ids(table)[: -self.keep_snapshots]:
+        for sid in self._snapshot_ids(table)[:-KEEP_SNAPSHOTS]:
             data = os.path.join(self._dir(table), self.manifest(table, sid)["data_dir"])
             os.remove(self._manifest_path(table, sid))
             shutil.rmtree(data, ignore_errors=True)

@@ -50,7 +50,7 @@ DRIVER_CC_MAX_EDGES = 4_000_000  # ≤ this many distinct directed edges →
 # dimension is orders of magnitude smaller than the corpus, so small-to-mid
 # corpora produce edge sets where every distributed round (2 jobs each,
 # ~8-14 rounds) is pure fixed overhead — the same size-gated reasoning as
-# broadcast-join selection (the gate is one capped count of the raw edge
+# broadcast-join selection (the gate is one capped collect of the raw edge
 # rows, see connected_components). Measured THREE times on REAL alias
 # graphs, interleaved A/B in one session each time: 541k directed edges
 # (1M-file corpus) driver 9.2 s vs loop 35.4 s; 1.11M (2M files) driver
@@ -94,11 +94,13 @@ def driver_memory_cap(spark, cap_at_8g: int) -> int:
     return min(cap_at_8g, max(0, int(gib * (cap_at_8g // 8))))
 
 
-def capped_count(df: DataFrame, cap: int) -> int:
-    """min(row count, cap + 1) in one Spark job: a capped collect of a
-    constant column, so sizing an input ships at most cap + 1 ints to the
-    driver and none of its rows (a plain count runs 2-3 jobs under AQE)."""
-    return len(df.limit(cap + 1).select(F.lit(1)).toPandas())
+def driver_collect(df: DataFrame, cap_at_8g: int) -> pd.DataFrame | None:
+    """``df``'s rows as pandas if it holds ≤ driver_memory_cap(cap_at_8g)
+    rows, else None: one capped collect sizes and ships the input in one
+    job (above the cap it ships cap + 1 rows and drops them)."""
+    cap = driver_memory_cap(df.sparkSession, cap_at_8g)
+    rows = df.limit(cap + 1).toPandas()
+    return rows if len(rows) <= cap else None
 
 
 def _driver_union_find(edges: pd.DataFrame, dt: DataType, spark) -> DataFrame:
@@ -151,27 +153,25 @@ def connected_components(edges: DataFrame) -> DataFrame:
     member name of the component. Vertices = all endpoint names.
 
     The driver fast path's gate is DRIVER_CC_MAX_EDGES scaled by the
-    session's spark.driver.memory (driver_memory_cap). It sizes the raw
-    edge rows with one capped count. Each row makes at most two directed
-    edges, so ≤ half the cap in rows keeps the distinct directed edge set
-    within the measured cap. For distinct ``a < b`` rows — link_edges
-    output, the alias graphs the cap was measured on, and the dedup and
-    graph-operator pair sets — that is the old distinct-edge gate exactly.
-    Reversed, duplicate and self-loop rows count in full, so such an input
+    session's spark.driver.memory: one capped collect of the raw edge rows
+    (driver_collect). Each row makes at most two directed edges, so ≤ half
+    the cap in rows keeps the distinct directed edge set within the
+    measured cap. For distinct ``a < b`` rows — link_edges output, the
+    alias graphs the cap was measured on, and the dedup and graph-operator
+    pair sets — that is the old distinct-edge gate exactly. Reversed,
+    duplicate and self-loop rows count in full, so such an input
     (merge_components' star carries one self-loop row per component root)
     can go to the loop below the distinct-edge cap, by at most a factor of
     two in rows."""
-    max_rows = driver_memory_cap(edges.sparkSession, DRIVER_CC_MAX_EDGES) // 2
-    # persist BEFORE sizing: over the cap, the count otherwise computes the
-    # full (typically expensive, unpersisted) edge lineage once, and the
-    # loop a second time — measured 2× the whole linking stage at 100k files
+    # persist BEFORE the capped collect: above the cap the loop reads the
+    # edges again, and an unpersisted (typically expensive) lineage would
+    # run twice — measured 2× the whole linking stage at 100k files
     edges = edges.select("a", "b").persist()
     try:
-        if capped_count(edges, max_rows) <= max_rows:
-            return _driver_union_find(
-                edges.toPandas(), edges.schema["a"].dataType, edges.sparkSession
-            )
-        return _label_propagation(edges)
+        rows = driver_collect(edges, DRIVER_CC_MAX_EDGES // 2)
+        if rows is None:
+            return _label_propagation(edges)
+        return _driver_union_find(rows, edges.schema["a"].dataType, edges.sparkSession)
     finally:
         edges.unpersist()
 

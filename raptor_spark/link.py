@@ -29,9 +29,9 @@ for a 400-file build). Both paths read one JVM projection of the name
 features, ``_signatures`` (hashed shingles + band hashes per name), so they
 share every hash value:
 
-* driver path (names ≤ the driver-memory-scaled DRIVER_LINK_MAX_NAMES,
-  sized by one capped count): one collect of the signature rows, then the
-  exact block, band buckets and Jaccard verify in driver dicts. No shuffle.
+* driver path (names ≤ the driver-memory-scaled DRIVER_LINK_MAX_NAMES):
+  one capped collect of the signature rows, then the exact block, band
+  buckets and Jaccard verify in driver dicts. No shuffle.
 * distributed path (above the cap): the exact block is a self-join on
   ``nospace``; the fuzzy block is one bucket groupBy of (name, hsh, band)
   rows with the pair expansion and Jaccard verify fused into the bucket
@@ -62,7 +62,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from raptor_spark.cc import capped_count, driver_memory_cap
+from raptor_spark.cc import driver_collect
 from raptor_spark.functions import norm_identifier_col
 from raptor_spark.oracle import HEAD_SYMBOL_MAX_DF, JACCARD_THRESHOLD
 from raptor_spark.tokenize import PRED_CALLS, PRED_DEFINES, char_shingles, normalize_identifier
@@ -244,19 +244,16 @@ def link_edges(feats: DataFrame) -> DataFrame:
     hands the same table to ``canonical_mapping``.
 
     Up to the name cap (DRIVER_LINK_MAX_NAMES, scaled by spark.driver.memory)
-    the signature rows are collected in one job and blocked, bucketed and
-    verified on the driver; above it the distributed path runs. Both give
-    the same edge set (parity-pinned in tests/test_linking.py).
+    one capped collect ships the signature rows, which are blocked,
+    bucketed and verified on the driver; above it the distributed path
+    runs. Both give the same edge set (parity-pinned in tests/test_linking.py).
     """
-    spark = feats.sparkSession
     sig = _signatures(feats)
-    # size the name set with a capped count: above the cap no signature
-    # is computed or collected on the way to the distributed path
-    cap = driver_memory_cap(spark, DRIVER_LINK_MAX_NAMES)
-    if capped_count(feats, cap) > cap:
+    rows = driver_collect(sig, DRIVER_LINK_MAX_NAMES)
+    if rows is None:
         return _distributed_link_edges(feats, sig)
-    return spark.createDataFrame(
-        pd.DataFrame(_driver_link_pairs(sig.toPandas()), columns=["a", "b"], dtype=object),
+    return feats.sparkSession.createDataFrame(
+        pd.DataFrame(_driver_link_pairs(rows), columns=["a", "b"], dtype=object),
         _EDGE_SCHEMA,
     )
 

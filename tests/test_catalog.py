@@ -5,6 +5,7 @@ api_insert.py:88-171)."""
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import types
@@ -60,12 +61,12 @@ def test_snapshot_time_travel(spark, tmp_path):
 
 
 def test_retention_prunes_old_snapshots(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), keep_snapshots=2)
-    for i in range(4):
+    cat = Catalog(spark, str(tmp_path))
+    for i in range(5):  # three are kept
         cat.write("t", spark.range(i + 1))
     ids = [m["snapshot_id"] for m in cat.snapshots("t")]
-    assert ids == [2, 3]
-    assert cat.read("t").count() == 4
+    assert ids == [2, 3, 4]
+    assert cat.read("t").count() == 5
     assert cat.read("t", snapshot=2).count() == 3
 
 
@@ -201,13 +202,13 @@ def test_pinned_snapshot_read_survives_new_commit(spark, tmp_path):
 
 
 def test_prune_drops_pinned_frames(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), keep_snapshots=2)
+    cat = Catalog(spark, str(tmp_path))
     before = _cached_plans(spark)
-    for i in range(4):
+    for i in range(5):  # three are kept
         cat.write("t", spark.range(i + 1))
         assert cat.read("t").count() == i + 1
     # one frame, of the current commit; the pruned commits' frames are gone
-    assert [(table, commit[0]) for table, (commit, _df) in cat._frames.items()] == [("t", 3)]
+    assert [(table, commit[0]) for table, (commit, _df) in cat._frames.items()] == [("t", 4)]
     assert _cached_plans(spark) == before + 1
     cat.drop("t")
 
@@ -285,13 +286,23 @@ def test_new_commit_releases_held_frame(spark, tmp_path):
 
 
 def test_prune_releases_held_frame(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path), keep_snapshots=1)
+    cat = Catalog(spark, str(tmp_path))
     before = _cached_plans(spark)
     cat.write("t", _small_table(spark))
     assert cat.read("t").is_cached
-    cat.write("t", _small_table(spark, 8))  # prunes snapshot 0
+    for n in (8, 9, 10):
+        cat.write("t", _small_table(spark, n))  # the last write prunes snapshot 0
     assert _cached_plans(spark) == before
-    assert [m["snapshot_id"] for m in cat.snapshots("t")] == [1]
+    assert [m["snapshot_id"] for m in cat.snapshots("t")] == [1, 2, 3]
+
+
+def test_collected_catalog_releases_held_frames(spark, tmp_path):
+    Catalog(spark, str(tmp_path)).write("t", _small_table(spark))
+    before = _cached_plans(spark)
+    for _ in range(3):
+        assert Catalog(spark, str(tmp_path)).read("t").is_cached
+    gc.collect()
+    assert _cached_plans(spark) == before
 
 
 def test_drop_releases_held_and_pinned_frames(spark, tmp_path):

@@ -180,12 +180,17 @@ def test_driver_union_find_matches_distributed_loop(spark, monkeypatch):
     }
 
 
+def _driver_with(mem):
+    """A stand-in session whose spark.driver.memory is ``mem``."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(conf=SimpleNamespace(get=lambda key, default=None: mem))
+
+
 def test_driver_cc_edge_cap_scales_with_driver_memory(spark):
     """VERDICT r3 #4: the 4M-edge driver-collect gate was sized against the
     8g default driver; a smaller configured driver must get a
     proportionally smaller cap so it never collects an 8g-sized edge set."""
-    from types import SimpleNamespace
-
     from raptor_spark.cc import (
         DRIVER_CC_MAX_EDGES,
         _parse_memory_gib,
@@ -200,11 +205,7 @@ def test_driver_cc_edge_cap_scales_with_driver_memory(spark):
     assert _parse_memory_gib("4096") == 4.0
     assert _parse_memory_gib("1024") == 1.0
 
-    def fake(mem):
-        return SimpleNamespace(
-            conf=SimpleNamespace(get=lambda key, default=None: mem)
-        )
-
+    fake = _driver_with
     assert driver_memory_cap(fake("8g"), DRIVER_CC_MAX_EDGES) == DRIVER_CC_MAX_EDGES
     assert driver_memory_cap(fake("16g"), DRIVER_CC_MAX_EDGES) == DRIVER_CC_MAX_EDGES  # capped
     assert driver_memory_cap(fake("2g"), DRIVER_CC_MAX_EDGES) == DRIVER_CC_MAX_EDGES // 4
@@ -218,6 +219,28 @@ def test_driver_cc_edge_cap_scales_with_driver_memory(spark):
     se = spark.createDataFrame([("b", "a"), ("c", "b")], ["a", "b"])
     auto = {(r.name, r.component) for r in connected_components(se).collect()}
     assert auto == {("a", "a"), ("b", "a"), ("c", "a")}
+
+
+def test_driver_collect_returns_rows_up_to_the_scaled_cap(spark):
+    """One capped collect is the gate: all n rows at a cap of n, None at
+    n - 1, and an empty frame at any cap; the cap scales with the driver
+    memory as driver_memory_cap scales it."""
+    from types import SimpleNamespace
+
+    from raptor_spark.cc import driver_collect
+
+    def on_driver(df, mem):
+        return SimpleNamespace(sparkSession=_driver_with(mem), limit=df.limit)
+
+    df = spark.range(16).selectExpr("cast(id as string) as a")
+    rows = driver_collect(on_driver(df, "8g"), 16)
+    assert sorted(rows["a"]) == sorted(str(i) for i in range(16))
+    assert driver_collect(on_driver(df, "8g"), 15) is None
+    # at 2g the cap is a quarter of the 8g one
+    assert len(driver_collect(on_driver(df, "2g"), 64)) == 16
+    assert driver_collect(on_driver(df, "2g"), 63) is None
+    empty = driver_collect(on_driver(df.limit(0), "8g"), 16)
+    assert list(empty.columns) == ["a"] and len(empty) == 0
 
 
 def test_merge_components_equals_full_recompute(spark):

@@ -199,14 +199,14 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
 
 def test_driver_linking_runs_few_jobs(spark, parity_feats, spark_jobs):
     """Below the cap, the linking chain over materialized name features
-    runs a handful of Spark jobs: a capped count and a collect each for the
-    signatures and the edges, then the mapping's own collect (a join and a
-    window, with no count and no driver round trip of its own). The mapping
-    is collected here so that its jobs count."""
+    runs a handful of Spark jobs: one capped collect each of the signatures
+    and of the edges, which sizes and ships them, then the mapping's own
+    collect (a join and a window, with no count and no driver round trip of
+    its own). The mapping is collected here so that its jobs count."""
     parity_feats.count()
 
     def chain():
         comps = connected_components(link_edges(parity_feats))
         canonical_mapping(parity_feats, comps).collect()
 
-    assert spark_jobs(chain) <= 7
+    assert spark_jobs(chain) <= 5

@@ -21,11 +21,14 @@ def run_dir(tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def first_run(spark, files_df, run_dir):
+def first_run(spark, files_df, run_dir, spark_jobs):
     p = Pipeline(spark, run_dir)
-    out = p.run(files_df)
+    files_df.count()  # fill the input's cache outside the counted build
+    out = {}
+    jobs = spark_jobs(lambda: out.update(p.run(files_df)))
     return {
         "run_id": p.run_id,
+        "jobs": jobs,
         "tables": {t for t in os.listdir(run_dir) if p.catalog.exists(t)},
         "extracted": out["extracted"].count(),
         "components": out["components"].toPandas(),
@@ -46,6 +49,13 @@ def test_resume_after_stage_kill_is_equivalent(
     out = p.run(files_df, resume=True)
     assert sorted(map(tuple, out["nodes"].collect())) == first_run["nodes"]
     assert sorted(map(tuple, out["edges"].collect())) == first_run["edges"]
+
+
+def test_first_run_job_count(first_run):
+    """A from-scratch build of the 300-file corpus runs at most the 27 Spark
+    jobs measured, so a build that adds a job fails here, not only in a
+    ``BENCH/build_jobs.py`` probe."""
+    assert first_run["jobs"] <= 27
 
 
 def test_components_is_the_canonical_mapping(corpus_rows, first_run):
