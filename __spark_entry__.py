@@ -848,7 +848,7 @@ def q_kg_code_fanin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_code_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-backed canonicalization face over the synthesized corpus:
-    the PRODUCTION name dimension (link.name_features — Arrow-vectorized
+    the PRODUCTION name dimension (link.name_features — JVM-side
     normalize/shingle), the exact same-nospace link block,
     cc.connected_components, and link.canonical_mapping, end to end. The
     template plants a within-doc alias pair ({w1}_run vs {w1}_Run — both

@@ -171,6 +171,17 @@ class QueryCache:
         )
         return (time.time() - meta["committed_at"]) <= effective
 
+    def _fresh_hit(self, key: str, df: DataFrame) -> DataFrame | None:
+        """The entry's rows, read with ``df``'s schema, after counting the
+        hit in its marker; None when the entry is not fresh. The caller
+        holds the key's lock and counts the hit its own way."""
+        meta = self._meta(key)
+        if not self._fresh(meta):
+            return None
+        meta["hits"] = meta.get("hits", 0) + 1
+        self._write_meta(key, meta)
+        return self.spark.read.schema(df.schema).parquet(self._data(key))
+
     def get_or_compute(self, df: DataFrame, extra: str | None = None) -> DataFrame:
         """Return a DataFrame equivalent to ``df``, reading the materialized
         result when a fresh cache entry exists, computing and committing it
@@ -178,12 +189,10 @@ class QueryCache:
         the key for plans with driver-local data (see ``plan_key``)."""
         key = plan_key(df, extra=extra)
         with self._lock_for(key):
-            meta = self._meta(key)
-            if self._fresh(meta):
+            hit = self._fresh_hit(key, df)
+            if hit is not None:
                 self.hits += 1
-                meta["hits"] = meta.get("hits", 0) + 1
-                self._write_meta(key, meta)
-                return self.spark.read.schema(df.schema).parquet(self._data(key))
+                return hit
             self.misses += 1
             df.write.mode("overwrite").parquet(self._data(key))
             self._write_meta(
@@ -313,25 +322,17 @@ class SemanticQueryCache:
         extra = json.dumps([float(x) for x in query_vec])
         key = plan_key(df, extra=extra)
         with self.base._lock_for(key):
-            meta = self.base._meta(key)
-            if self.base._fresh(meta):
+            hit = self.base._fresh_hit(key, df)
+            if hit is not None:
                 self.base.hits += 1
-                meta["hits"] = meta.get("hits", 0) + 1
-                self.base._write_meta(key, meta)
-                return self.base.spark.read.schema(df.schema).parquet(
-                    self.base._data(key)
-                )
+                return hit
         match_key, cos = self._best_match(query_vec)
         if match_key is not None and cos >= self.similarity_threshold:
             with self.base._lock_for(match_key):
-                meta = self.base._meta(match_key)
-                if self.base._fresh(meta):
+                hit = self.base._fresh_hit(match_key, df)
+                if hit is not None:
                     self.semantic_hits += 1
-                    meta["hits"] = meta.get("hits", 0) + 1
-                    self.base._write_meta(match_key, meta)
-                    return self.base.spark.read.parquet(
-                        self.base._data(match_key)
-                    )
+                    return hit
         out = self.base.get_or_compute(df, extra=extra)
         tmp = self._vec_path(key) + ".tmp"
         with open(tmp, "w") as f:

@@ -1,7 +1,9 @@
 """Reusable column-expression helpers (JVM-side, codegen-friendly).
 
 These mirror pure-Python functions in ``raptor_spark.tokenize`` where both
-sides must agree bit-for-bit (tested in tests/test_functions.py).
+sides must agree bit-for-bit: ``norm_identifier_col`` and ``shingles_col``
+build link's name table, and tests/test_functions.py pins them against
+``normalize_identifier`` and ``char_shingles`` over Unicode identifiers.
 """
 
 from __future__ import annotations
@@ -27,6 +29,21 @@ def norm_identifier_col(c: Column | str) -> Column:
     s = F.regexp_replace(s, r"[_\-]+", " ")
     s = F.lower(F.trim(s))
     return F.regexp_replace(s, r"\s+", " ")
+
+
+def shingles_col(c: Column | str, k: int = 3) -> Column:
+    """JVM-side replica of tokenize.char_shingles, as a sorted distinct
+    array<string>. Lengths and substrings count code points on both sides."""
+    c = F.col(c) if isinstance(c, str) else c
+
+    def grams(p: Column) -> Column:
+        n = F.length(p)
+        return F.when(n <= k, F.array(p)).otherwise(
+            F.transform(F.sequence(F.lit(1), n - (k - 1)), lambda i: F.substring(p, i, k))
+        )
+
+    padded = F.concat(F.lit("^"), c, F.lit("$"))
+    return F.array_sort(F.array_distinct(bind_col(padded, grams)))
 
 
 def repo_bucket_col(c: Column | str, n: int = N_REPO_BUCKETS) -> Column:

@@ -11,7 +11,7 @@ vectors, link iff cosine ≥ 0.9 — raptor/qdrant_search_docker/api_insert.py:1
    unconditionally (covers camel/snake/Pascal aliases AND head symbols like
    ``main`` — heads only ever link exactly; skew guard per SURVEY.md §7.4).
 2. fuzzy block: non-head names → char-3-gram shingles → 32 MinHash values
-   (xxhash64, JVM-side) → 8 bands × 4 rows → candidates from per-bucket
+   (xxhash64) → 8 bands × 4 rows → candidates from per-bucket
    ``collect_list`` pair expansion keyed on (first_token, band_id,
    band_hash), with oversize buckets dropped (MAX_BAND_BUCKET skew guard)
    → verify with exact Jaccard via ``array_intersect``/``array_union``
@@ -25,12 +25,12 @@ bounds every candidate expansion at C(64,2) pairs.
 
 Scale notes: everything is per-distinct-NAME, not per-mention — the name
 dimension is orders of magnitude smaller than the triple table (719 names
-for a 400-file build). Both paths read one JVM projection of the name
-features, ``_signatures`` (hashed shingles + band hashes per name), so they
-share every hash value:
+for a 400-file build). ``name_features`` builds the name table, normalized
+names, hashed shingles and band hashes, in JVM expressions (this stage runs
+no Python UDF), and both paths read it, so they share every hash value:
 
 * driver path (names ≤ the driver-memory-scaled DRIVER_LINK_MAX_NAMES):
-  one capped collect of the signature rows, then the exact block, band
+  one capped collect of the name table, then the exact block, band
   buckets and Jaccard verify in driver dicts. No shuffle.
 * distributed path (above the cap): the exact block is a self-join on
   ``nospace``; the fuzzy block is one bucket groupBy of (name, hsh, band)
@@ -48,24 +48,17 @@ min), so only ``link_edges`` and ``cc.connected_components`` pick a path.
 from __future__ import annotations
 
 from collections import defaultdict
-from collections.abc import Iterator
 from itertools import combinations
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 from raptor_spark.cc import driver_collect
-from raptor_spark.functions import norm_identifier_col
+from raptor_spark.functions import norm_identifier_col, shingles_col
 from raptor_spark.oracle import HEAD_SYMBOL_MAX_DF, JACCARD_THRESHOLD
-from raptor_spark.tokenize import PRED_CALLS, PRED_DEFINES, char_shingles, normalize_identifier
+from raptor_spark.tokenize import PRED_CALLS, PRED_DEFINES
 
 N_MINHASH = 32
 N_BANDS = 8  # 4 rows per band: P(candidate) = 1-(1-j^4)^8 ≈ .95 at j=.75 and
@@ -99,40 +92,15 @@ DRIVER_LINK_MAX_NAMES = 160_000  # ≤ this many featurized names → link on
 # path. BENCH/run_scaling.sh over 30k files (47.6k names) takes the driver
 # path at its 8g default and the distributed path with SCALING_DRIVER_MEM=2g.
 
-_NAME_FEATURES_SCHEMA = StructType(
-    [
-        StructField("name", StringType(), False),
-        StructField("is_head", BooleanType(), False),
-        StructField("norm", StringType(), False),
-        StructField("nospace", StringType(), False),
-        StructField("first_token", StringType(), False),
-        StructField("shingles", ArrayType(StringType()), False),
-    ]
-)
 _EDGE_SCHEMA = StructType(
     [StructField("a", StringType(), False), StructField("b", StringType(), False)]
 )
 
 
-def _featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Vectorized normalization + shingling (the only Python in this stage)."""
-    for pdf in batches:
-        norms = pdf["name"].map(normalize_identifier)
-        yield pd.DataFrame(
-            {
-                "name": pdf["name"],
-                "is_head": pdf["is_head"],
-                "norm": norms,
-                "nospace": norms.str.replace(" ", "", regex=False),
-                "first_token": norms.str.split(" ").str[0],
-                "shingles": norms.map(lambda s: sorted(char_shingles(s))),
-            }
-        )
-
-
 def name_features(triples: DataFrame) -> DataFrame:
-    """Distinct defined names, featurized, with the head-symbol flag — the
-    name-dimension table ``link_edges`` AND ``canonical_mapping`` read.
+    """The name table ``link_edges`` AND ``canonical_mapping`` read: one row
+    per distinct defined name, ``(name, is_head, norm, nospace,
+    first_token, hsh, band_hashes)``, all JVM expressions.
 
     One groupBy shuffle on the name dimension replaces the old
     distinct → groupBy → distinct chain (three shuffles), and the
@@ -140,11 +108,23 @@ def name_features(triples: DataFrame) -> DataFrame:
     defining a name or not, as ``oracle._head_names`` counts them) is a
     one-row aggregate broadcast back in — lazy, instead of an eager driver
     ``count()`` before any linking work could start. The caller persists
-    it and hands it to both consumers, so the name distinct and the
-    featurize pass run once.
+    it and hands it to both consumers, so the name distinct, the
+    normalization and the signatures run once.
+
+    ``norm`` and the shingles are the JVM replicas of
+    ``tokenize.normalize_identifier``/``char_shingles``. ``hsh`` is the
+    hashed shingle set (array<long>): Jaccard over 64-bit shingle hashes
+    equals Jaccard over the strings up to ~2^-64 collisions, and longs
+    shuffle + intersect several times cheaper than strings.
+    ``band_hashes[b]`` hashes MinHash rows ``b*4 .. b*4+3``. Each step is
+    its own projection: a column referenced many times above it is not
+    inlined there (CollapseProject keeps it), so ``norm`` and the shingle
+    array are computed once per name, not once per MinHash.
     """
     names_repo = triples.filter(F.col("pred") == PRED_DEFINES).select(
-        F.split(F.col("obj"), "@").getItem(0).alias("name"),
+        # coalesce keeps the name column non-null, as the committed
+        # components schema records it; a defined obj is never null
+        F.coalesce(F.substring_index("obj", "@", 1), F.lit("")).alias("name"),
         F.col("repo"),
     )
     per_name = names_repo.groupBy("name").agg(
@@ -156,35 +136,25 @@ def name_features(triples: DataFrame) -> DataFrame:
         (
             F.col("df_repos") > F.lit(HEAD_SYMBOL_MAX_DF) * F.col("total_repos")
         ).alias("is_head"),
+        norm_identifier_col("name").alias("norm"),
     )
-    return flagged.mapInPandas(_featurize, schema=_NAME_FEATURES_SCHEMA)
-
-
-def _minhash(seed: int):
-    # NB: a two-arg transform lambda would receive (element, array_index)
-    # and silently shadow the seed — keep this a one-arg closure
-    return lambda s: F.xxhash64(s, F.lit(seed))
-
-
-def _signatures(feats: DataFrame) -> DataFrame:
-    """One row per name: ``(name, is_head, nospace, first_token, hsh,
-    band_hashes)`` — the one JVM projection both linking paths read, so
-    their signatures are the same xxhash64 values.
-
-    ``hsh`` is the hashed shingle set (array<long>): Jaccard over 64-bit
-    shingle hashes equals Jaccard over the strings up to ~2^-64 collisions,
-    and longs shuffle + intersect several times cheaper than strings.
-    ``band_hashes[b]`` hashes MinHash rows ``b*4 .. b*4+3``. Signatures are
-    a pure projection over the per-name shingle ARRAY — no explode/groupBy
-    shuffle (an earlier explode+32-agg formulation shuffled every shingle
-    row and compiled a 32-column aggregate for nothing)."""
+    norm = F.col("norm")
+    shingled = flagged.select(
+        "name",
+        "is_head",
+        "norm",
+        F.replace(norm, F.lit(" "), F.lit("")).alias("nospace"),
+        F.split(norm, " ").getItem(0).alias("first_token"),
+        shingles_col(norm).alias("shingles"),
+    )
     rows_per_band = N_MINHASH // N_BANDS
     mins = [
         F.array_min(F.transform("shingles", _minhash(i))) for i in range(N_MINHASH)
     ]
-    return feats.select(
+    return shingled.select(
         "name",
         "is_head",
+        "norm",
         "nospace",
         "first_token",
         F.transform("shingles", lambda s: F.xxhash64(s)).alias("hsh"),
@@ -197,19 +167,25 @@ def _signatures(feats: DataFrame) -> DataFrame:
     )
 
 
-def _driver_link_pairs(sig: pd.DataFrame) -> list[tuple[str, str]]:
-    """The (a, b) edges of ``_distributed_link_edges`` over collected
-    ``_signatures`` rows: the same blocks, bucket cap and verify, in
+def _minhash(seed: int):
+    # NB: a two-arg transform lambda would receive (element, array_index)
+    # and silently shadow the seed — keep this a one-arg closure
+    return lambda s: F.xxhash64(s, F.lit(seed))
+
+
+def _driver_link_pairs(feats: pd.DataFrame) -> list[tuple[str, str]]:
+    """The (a, b) edges of ``_distributed_link_edges`` over the collected
+    ``name_features`` rows: the same blocks, bucket cap and verify, in
     driver dicts. Names compare in code-point order, which is Spark's
     UTF-8 byte order."""
     by_nospace: dict[str, list[str]] = defaultdict(list)
-    for name, nospace in zip(sig["name"], sig["nospace"]):
+    for name, nospace in zip(feats["name"], feats["nospace"]):
         by_nospace[nospace].append(name)
     pairs = {p for names in by_nospace.values() for p in combinations(sorted(names), 2)}
 
     # in name order, so a bucket's member indices (appended in index order)
     # are its array_sort order and x < y means names[x] < names[y]
-    fuzzy = sig[~sig["is_head"].to_numpy(dtype=bool)].sort_values("name")
+    fuzzy = feats[~feats["is_head"].to_numpy(dtype=bool)].sort_values("name")
     names = fuzzy["name"].tolist()
     nospace = fuzzy["nospace"].tolist()
     hsh = [set(h.tolist()) for h in fuzzy["hsh"]]
@@ -244,21 +220,21 @@ def link_edges(feats: DataFrame) -> DataFrame:
     hands the same table to ``canonical_mapping``.
 
     Up to the name cap (DRIVER_LINK_MAX_NAMES, scaled by spark.driver.memory)
-    one capped collect ships the signature rows, which are blocked,
+    one capped collect ships the name table, whose rows are blocked,
     bucketed and verified on the driver; above it the distributed path
-    runs. Both give the same edge set (parity-pinned in tests/test_linking.py).
+    runs over the same table, so no signature is computed twice. Both give
+    the same edge set (parity-pinned in tests/test_linking.py).
     """
-    sig = _signatures(feats)
-    rows = driver_collect(sig, DRIVER_LINK_MAX_NAMES)
+    rows = driver_collect(feats, DRIVER_LINK_MAX_NAMES)
     if rows is None:
-        return _distributed_link_edges(feats, sig)
+        return _distributed_link_edges(feats)
     return feats.sparkSession.createDataFrame(
         pd.DataFrame(_driver_link_pairs(rows), columns=["a", "b"], dtype=object),
         _EDGE_SCHEMA,
     )
 
 
-def _distributed_link_edges(feats: DataFrame, sig: DataFrame) -> DataFrame:
+def _distributed_link_edges(feats: DataFrame) -> DataFrame:
     # -- 1. exact block: same space-stripped normalized identifier ----------
     exact = (
         feats.alias("a")
@@ -272,7 +248,7 @@ def _distributed_link_edges(feats: DataFrame, sig: DataFrame) -> DataFrame:
     # but a plain posexplode makes the optimizer infer a size(band_hashes) > 0
     # filter and push it below the projection, which then computes all 32
     # MinHashes twice (1.7× the signature stage, measured at local[1])
-    bands = sig.filter(~F.col("is_head")).select(
+    bands = feats.filter(~F.col("is_head")).select(
         "name",
         "first_token",
         "nospace",

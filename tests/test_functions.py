@@ -2,12 +2,17 @@
 
 from __future__ import annotations
 
+import random
+import re
+
 import pyspark.sql.functions as F
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from raptor_spark.functions import norm_identifier_col, sha256_col
+from raptor_spark.functions import norm_identifier_col, sha256_col, shingles_col
+from raptor_spark.link import name_features
 from raptor_spark.tokenize import (
+    PRED_DEFINES,
     char_shingles,
     jaccard,
     normalize_identifier,
@@ -26,6 +31,48 @@ def test_norm_identifier_col_matches_python(spark):
     got = {r.s: r.n for r in df.select("s", norm_identifier_col("s").alias("n")).collect()}
     for s in IDENTIFIERS:
         assert got[s] == normalize_identifier(s), s
+
+
+def _unicode_identifiers(n: int, seed: int) -> list[str]:
+    """``n`` identifiers of one to four parts: ASCII words in camel, Pascal
+    and upper case, and runs of ``\\w`` code points up to U+2FFFF, joined
+    by ``_``, ``__`` or nothing."""
+    rng = random.Random(seed)
+    word_chars = [chr(c) for c in range(0x80, 0x30000) if re.fullmatch(r"\w", chr(c))]
+    ascii_words = ["get", "Data", "HTTP", "x2", "Parse", "url", "ID"]
+
+    def part() -> str:
+        if rng.random() < 0.5:
+            return rng.choice(ascii_words)
+        return "".join(rng.choice(word_chars) for _ in range(rng.randint(1, 6)))
+
+    return [
+        rng.choice(["", "_", "__"]).join(part() for _ in range(rng.randint(1, 4)))
+        for _ in range(n)
+    ]
+
+
+def test_name_table_columns_match_python_on_unicode(spark):
+    """The name table's JVM replicas (``norm_identifier_col``, ``nospace``,
+    ``first_token`` and ``shingles_col``) equal ``normalize_identifier`` and
+    ``char_shingles`` over Unicode identifiers: Python and the JVM must
+    agree on case mapping and on counting code points, supplementary
+    planes included."""
+    idents = IDENTIFIERS + ["_", "__", "a", "ab", "abc", "\U0001d518nicode\U00010400x"]
+    idents += _unicode_identifiers(3000, seed=1515)
+    triples = spark.createDataFrame(
+        [(PRED_DEFINES, f"{s}@r/m.py", "r") for s in idents],
+        "pred string, obj string, repo string",
+    )
+    got = name_features(triples).select(
+        "name", "norm", "nospace", "first_token", shingles_col("norm").alias("shingles")
+    ).collect()
+    assert {r.name for r in got} == set(idents)
+    for r in got:
+        norm = normalize_identifier(r.name)
+        assert (r.norm, r.nospace, r.first_token, r.shingles) == (
+            norm, norm.replace(" ", ""), norm.split(" ")[0], sorted(char_shingles(norm))
+        ), r.name
 
 
 def test_sha256_col_matches_python(spark):

@@ -137,6 +137,23 @@ def parity_feats(spark):
     feats.unpersist()
 
 
+def test_name_features_is_one_jvm_table(spark):
+    """The name table carries the signatures both linking paths read, and
+    JVM expressions build all of it: its plan holds no Python UDF node."""
+    triples = spark.createDataFrame(
+        [(PRED_DEFINES, "fetchData@r0/m.py", "r0"), (PRED_DEFINES, "fetch_data@r1/m.py", "r1")],
+        "pred string, obj string, repo string",
+    )
+    feats = name_features(triples)
+    assert feats.columns == [
+        "name", "is_head", "norm", "nospace", "first_token", "hsh", "band_hashes",
+    ]
+    assert feats.schema["name"].nullable is False
+    plan = feats._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
+
+
 def _pairs(df):
     return {tuple(r) for r in df.collect()}
 
@@ -150,7 +167,7 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
 
     heads = {r.name for r in parity_feats.filter("is_head").collect()}
     assert heads == {"main", "init", "initialize_app"}
-    sig = link._signatures(parity_feats).filter(~F.col("is_head")).toPandas()
+    sig = parity_feats.filter(~F.col("is_head")).toPandas()
     buckets = Counter(
         (ft, b, h)
         for ft, bands in zip(sig["first_token"], sig["band_hashes"])
