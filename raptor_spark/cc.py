@@ -97,9 +97,10 @@ def driver_memory_cap(spark, cap_at_8g: int) -> int:
 def driver_collect(df: DataFrame, cap_at_8g: int) -> pd.DataFrame | None:
     """``df``'s rows as pandas if it holds ≤ driver_memory_cap(cap_at_8g)
     rows, else None: one capped collect sizes and ships the input in one
-    job (above the cap it ships cap + 1 rows and drops them)."""
+    job (above the cap it ships cap + 1 rows and drops them), through
+    ``toArrow``: array cells are numpy arrays whatever the Arrow conf."""
     cap = driver_memory_cap(df.sparkSession, cap_at_8g)
-    rows = df.limit(cap + 1).toPandas()
+    rows = df.limit(cap + 1).toArrow().to_pandas()
     return rows if len(rows) <= cap else None
 
 
@@ -110,7 +111,7 @@ def _driver_union_find(edges: pd.DataFrame, dt: DataType, spark) -> DataFrame:
     as the loop. The rows need not be symmetric or distinct: union is
     undirected and idempotent.
 
-    Edge transfer rides Arrow BOTH ways (toPandas in, a pandas frame out
+    Edge transfer rides Arrow BOTH ways (toArrow in, a pandas frame out
     through createDataFrame's Arrow path) instead of row-object
     collect/createDataFrame — serial driver time the r5 linkskew N→4N
     gate surfaced as an Amdahl constant. A/B at a 1.1M-directed-edge

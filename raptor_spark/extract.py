@@ -2,8 +2,9 @@
 
 Spark-first analog of the reference's per-filetype processor dispatch
 (svc/document_analysis_service/document_analysis.py:51-78) + chunk enrichment
-(:171-184): content is touched ONLY here, inside a vectorized pandas UDF; all
-downstream stages are pure DataFrame ops.
+(:171-184): content is parsed ONLY here, inside a vectorized pandas UDF, which
+takes each file's ``sha256`` from the JVM (``functions.sha256_col``, the build's
+one content hash); all downstream stages are pure DataFrame ops.
 
 Error semantics follow the reference's skip-and-log convention
 (``{"error": ...}`` return, processors/csv_xlsx_processor.py:189-203): a file
@@ -19,21 +20,19 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from raptor_spark.functions import sha256_col
 from raptor_spark.schemas import TRIPLES_SCHEMA
-from raptor_spark.tokenize import extract_file, sha256_hex
+from raptor_spark.tokenize import extract_file
 
 PRED_ERROR = "extract-error"
-
-_COLS = ["subj", "pred", "obj", "repo", "path", "line", "score", "lang", "sha256"]
 
 
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         out: list[tuple] = []
-        for repo, path, lang, content in zip(
-            pdf["repo"], pdf["path"], pdf["lang"], pdf["content"]
+        for repo, path, lang, content, sha in zip(
+            pdf["repo"], pdf["path"], pdf["lang"], pdf["content"], pdf["sha256"]
         ):
-            sha = sha256_hex(content if content is not None else "")
             try:
                 for subj, pred, obj, r, p, line, score in extract_file(
                     repo, path, lang, content
@@ -43,7 +42,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 out.append(
                     (f"{repo}:{path}", PRED_ERROR, str(e)[:200], repo, path, 0, 0.0, lang, sha)
                 )
-        yield pd.DataFrame(out, columns=_COLS)
+        yield pd.DataFrame(out, columns=TRIPLES_SCHEMA.fieldNames())
 
 
 def extract_triples(files: DataFrame) -> DataFrame:
@@ -54,6 +53,6 @@ def extract_triples(files: DataFrame) -> DataFrame:
     (``spark.sql.execution.arrow.maxRecordsPerBatch``) to bound memory on
     multi-MB content rows.
     """
-    return files.select("repo", "path", "lang", "content").mapInPandas(
-        _extract_batches, schema=TRIPLES_SCHEMA
-    )
+    return files.select(
+        "repo", "path", "lang", "content", sha256_col("content").alias("sha256")
+    ).mapInPandas(_extract_batches, schema=TRIPLES_SCHEMA)

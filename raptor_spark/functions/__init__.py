@@ -15,7 +15,8 @@ from raptor_spark.schemas import N_REPO_BUCKETS
 
 
 def sha256_col(c: Column | str) -> Column:
-    """Per-row content invariant — identical to tokenize.sha256_hex."""
+    """sha256 of the utf-8 content, null as "": the build's one content hash,
+    which the tests pin against its Python reference in ``tokenize``."""
     c = F.col(c) if isinstance(c, str) else c
     return F.sha2(F.coalesce(c, F.lit("")), 256)
 

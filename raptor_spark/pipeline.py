@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from raptor_spark.catalog import Catalog
 from raptor_spark.cc import connected_components
 from raptor_spark.extract import extract_triples
+from raptor_spark.functions import sha256_col
 from raptor_spark.lineage import (
     input_rollup,
     new_run_id,
@@ -52,7 +53,7 @@ from raptor_spark.link import (
     name_features,
 )
 from raptor_spark.materialize import build_edges, build_nodes
-from raptor_spark.schemas import FILES_SCHEMA
+from raptor_spark.schemas import FILES_SCHEMA, TRIPLES_SCHEMA
 
 STAGES = ("extracted", "components", "nodes", "edges")
 
@@ -133,28 +134,18 @@ class Pipeline:
         Downstream stages (linking, CC, materialize) always rerun — entity
         linking is global, so any content change can re-cluster names.
         """
-        from raptor_spark.functions import sha256_col
-
         prev = Catalog(self.spark, prev_output)
         prev_triples = prev.read(
             "extracted", snapshot=prev.manifest("extracted")["snapshot_id"]
         )
         key = ["repo", "path", "lang", "sha256"]
-        cur_keys = files.select(
-            "repo", "path", "lang", sha256_col("content").alias("sha256")
-        )
-        kept = prev_triples.join(cur_keys, on=key, how="left_semi")
-        changed = (
-            files.withColumn("sha256", sha256_col("content"))
-            .join(prev_triples.select(*key).distinct(), on=key, how="left_anti")
-            .drop("sha256")
-        )
+        keyed = files.withColumn("sha256", sha256_col("content"))
+        kept = prev_triples.join(keyed.select(*key), on=key, how="left_semi")
+        changed = keyed.join(prev_triples.select(*key).distinct(), on=key, how="left_anti")
         self.incremental_stats = {
             "files_total": files.count(),
             "files_extracted": changed.count(),
         }
-        from raptor_spark.schemas import TRIPLES_SCHEMA
-
         # normalize to schema column order: the semi-join reorders columns,
         # and the committed table layout must not depend on the code path
         cols = TRIPLES_SCHEMA.fieldNames()
@@ -166,12 +157,14 @@ class Pipeline:
         resume: bool = False,
         incremental_from: str | None = None,
     ) -> dict[str, DataFrame]:
-        files = files.persist()
-        intermediates = [files]
+        # ``files`` is the caller's, and so is its cache: the roll-up and
+        # extract each scan it once. The run unpersists only what it cached
+        intermediates = []
         wall_ms: dict[str, int | None] = {}  # stage → commit ms, None if reused
         try:
-            # one content pass, collected (≤ N_REPO_BUCKETS rows), feeds the
-            # fingerprint AND every stage's lineage
+            # one scan of files, collected (≤ N_REPO_BUCKETS rows), feeds the
+            # fingerprint AND every stage's lineage; it hashes each file with
+            # sha256_col, as extract does
             rollup = input_rollup(files).collect()
             fingerprint = _corpus_fingerprint(rollup)
 
@@ -262,13 +255,14 @@ def main() -> None:
         from raptor_spark.synth import generate_corpus
 
         files = spark.createDataFrame(generate_corpus(args.synth), schema=FILES_SCHEMA)
-        files = files.repartition(max(32, args.synth // 512))
+        # a synthesized corpus is persisted: the roll-up and extract each read it
+        files = files.repartition(max(32, args.synth // 512)).persist()
     elif args.synth:
         from raptor_spark.synth import generate_corpus_df
 
         files = generate_corpus_df(
             spark, args.synth, partitions=max(32, args.synth // 512)
-        )
+        ).persist()
     else:
         files = spark.read.parquet(args.input)
     out = Pipeline(spark, args.output).run(

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+from collections import Counter
 from typing import Iterator
 
 # ---------------------------------------------------------------------------
@@ -83,7 +84,8 @@ _RE_GO_FUNC = re.compile(r"^\s*func\s+(?:\([^)]*\)\s+)?(\w+)\s*\(")
 
 
 def sha256_hex(content: str) -> str:
-    """Per-row invariant column: sha256 of the utf-8 content bytes.
+    """sha256 of the utf-8 content bytes: the Python reference that
+    tests pin ``functions.sha256_col``, the build's hash, against.
 
     Analog of the reference's checksum change-detection
     (raptor/asset_management/asset_management/database.py:583-592) and
@@ -139,8 +141,6 @@ def _py_def_spans(lines: list[str]) -> list[tuple[str, int, int]]:
         end = len(lines)
         for j in range(start, len(lines)):  # j is 0-based index of line j+1
             line = lines[j]
-            if j + 1 <= start:
-                continue
             if line[:1] not in ("", " ", "\t", ")", "#") and line.strip():
                 end = j  # line j+1 is top-level → span ends at previous line
                 break
@@ -232,9 +232,7 @@ def _concept_tags(content: str) -> Iterator[tuple[str, str, int, float]]:
     n = len(words)
     if n == 0:
         return
-    counts: dict[str, int] = {}
-    for w in words:
-        counts[w] = counts.get(w, 0) + 1
+    counts = Counter(words)
     for concept, terms in CONCEPT_LEXICON.items():
         hits = sum(counts.get(t, 0) for t in terms)
         if hits == 0:

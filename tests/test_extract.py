@@ -76,13 +76,11 @@ def test_incremental_change_detection(spark, files_df, triples_df, tmp_path):
 
 def test_extraction_plan_is_shuffle_free(spark, files_df, tmp_path):
     # over a plain file scan, extraction is a single narrow map stage —
-    # no Exchange anywhere in the plan (scales linearly with input splits)
+    # no Exchange anywhere in the plan (scales linearly with input splits);
+    # the UDF's sha256 comes from a JVM projection
     path = str(tmp_path / "files.parquet")
     files_df.write.mode("overwrite").parquet(path)
-    plan = (
-        extract_triples(spark.read.parquet(path))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    qe = extract_triples(spark.read.parquet(path))._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
     assert "Exchange" not in plan, plan
+    assert "sha2(" in qe.optimizedPlan().toString()

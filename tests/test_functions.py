@@ -76,11 +76,12 @@ def test_name_table_columns_match_python_on_unicode(spark):
 
 
 def test_sha256_col_matches_python(spark):
-    vals = ["", "hello", "ü¶é", "a\nb\tc", "x" * 10000]
-    df = spark.createDataFrame([(s,) for s in vals], ["s"])
+    """sha256_col is the build's content hash; a null hashes as ""."""
+    vals = ["", "hello", "ü¶é", "a\nb\tc", "x" * 10000, "\U00010437\U0001F600 x", None]
+    df = spark.createDataFrame([(s,) for s in vals], "s string")
     got = {r.s: r.h for r in df.select("s", sha256_col("s").alias("h")).collect()}
     for s in vals:
-        assert got[s] == sha256_hex(s)
+        assert got[s] == sha256_hex(s if s is not None else "")
 
 
 @given(st.text(alphabet=st.characters(whitelist_categories=("Ll", "Lu", "Nd")), min_size=1, max_size=30))

@@ -214,6 +214,21 @@ def test_driver_linking_matches_distributed(spark, parity_feats, monkeypatch):
     assert capped < uncapped
 
 
+def test_driver_gates_do_not_need_the_arrow_conf(spark, parity_feats):
+    """Below the caps, link_edges and connected_components give the same
+    rows in a session without the Arrow conf: the gates' collects arrive as
+    the same pandas frame, array columns included."""
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    expected = _pairs(connected_components(link_edges(parity_feats)))
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        got = _pairs(connected_components(link_edges(parity_feats)))
+    finally:
+        spark.conf.set(conf, old)
+    assert got == expected
+
+
 def test_driver_linking_runs_few_jobs(spark, parity_feats, spark_jobs):
     """Below the cap, the linking chain over materialized name features
     runs a handful of Spark jobs: one capped collect each of the signatures

@@ -234,14 +234,20 @@ def test_nodes_edges_shapes(spark, run_dir, first_run):
 
 def test_run_leaves_only_extracted_cached(spark, corpus_rows, tmp_path_factory):
     """A run unpersists every intermediate it cached; the only plan it
-    leaves in the session's cache is the returned ``extracted`` frame."""
+    leaves in the session's cache is the returned ``extracted`` frame. An
+    input the caller persisted is the caller's, and stays cached."""
     cache = spark._jsparkSession.sharedState().cacheManager()
-    files = spark.createDataFrame(corpus_rows[:60], schema=FILES_SCHEMA)
-    before = cache.cachedData().size()
-    out = Pipeline(spark, str(tmp_path_factory.mktemp("kg_cache"))).run(files)
-    assert cache.cachedData().size() == before + 1
-    assert out["extracted"].is_cached
-    out["extracted"].unpersist()
+    for persisted in (False, True):
+        files = spark.createDataFrame(corpus_rows[:60], schema=FILES_SCHEMA)
+        if persisted:
+            files = files.persist()
+        before = cache.cachedData().size()
+        out = Pipeline(spark, str(tmp_path_factory.mktemp("kg_cache"))).run(files)
+        assert cache.cachedData().size() == before + 1
+        assert out["extracted"].is_cached
+        assert cache.lookupCachedData(files._jdf).isDefined() == persisted
+        out["extracted"].unpersist()
+        files.unpersist()
 
 
 def test_graph_writes_use_every_core_one_file_per_dir(
